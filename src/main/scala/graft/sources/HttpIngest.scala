@@ -18,14 +18,35 @@ import graft.streaming.TweetPipeline
   *     → micro-batch thread runs TweetPipeline.enrich — the SAME plan
   *       as the batch path (boundary #2: driver → executors).
   *
+  * Reply contract of `/tweets`:
+  *   - an accepted POST gets 200 with `Content-Length: 0` and no body;
+  *   - a body over [[HttpIngest.MaxBodyBytes]] gets 413 and is not added;
+  *   - any other method gets 405; a failed `addData` gets 500. These
+  *     three carry a JSON `{"error": ...}` body.
+  *
+  * The 200 reply has no body so that it leaves in ONE packet. The JDK
+  * server writes headers and body separately and does not set
+  * `TCP_NODELAY`, so Nagle's algorithm holds a body back until the
+  * client acknowledges the headers, and the client delays that ACK by
+  * ~40 ms: a keep-alive client then waits ~44 ms per POST, about 22
+  * tweets/s on one connection. (The JVM-wide `sun.net.httpserver.nodelay`
+  * property is no fix: it is read once, when the server class loads.)
+  *
+  * The stream has ONE input partition per micro-batch. `MemoryStream`
+  * otherwise turns every `addData` call into its own partition, so each
+  * POSTed tweet cost a task and a sink file of its own. Enrichment is a
+  * per-row projection with no shuffle, so at HTTP rates a single task
+  * per batch loses no useful parallelism.
+  *
   * At scale the front door would be Kafka (`format("kafka")` drop-in,
   * SURVEY.md S5); everything from `enriched` down is unchanged — that
   * is the point of putting the source behind a DataFrame.
   */
 final class HttpIngest(spark: SparkSession, port: Int = 0) {
   import spark.implicits._
+  import HttpIngest.MaxBodyBytes
 
-  private val stream = MemoryStream[String](spark)
+  private val stream = MemoryStream[String](spark, 1)
 
   /** The enriched streaming frame — start a writeStream on it. */
   val enriched: DataFrame = TweetPipeline.parseJson(stream.toDF().toDF("json"), "json")
@@ -34,17 +55,26 @@ final class HttpIngest(spark: SparkSession, port: Int = 0) {
     val s = HttpServer.create(new InetSocketAddress(port), 0)
     s.createContext("/tweets", new HttpHandler {
       override def handle(x: HttpExchange): Unit = {
-        val resp = try {
-          if (x.getRequestMethod == "POST") {
-            val body = new String(x.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
-            stream.addData(body)
-            (200, """{"status":"accepted"}""")
-          } else (405, """{"error":"POST only"}""")
-        } catch { case e: Exception => (500, s"""{"error":"${jsonEscape(e.getMessage)}"}""") }
-        val bytes = resp._2.getBytes(StandardCharsets.UTF_8)
-        x.getResponseHeaders.set("Content-Type", "application/json")
-        x.sendResponseHeaders(resp._1, bytes.length)
-        x.getResponseBody.write(bytes)
+        // (status, error message); None = accepted, no reply body
+        val (status, error) = try {
+          if (x.getRequestMethod != "POST") (405, Some("POST only"))
+          else {
+            val body = x.getRequestBody.readNBytes(MaxBodyBytes + 1)
+            if (body.length > MaxBodyBytes) (413, Some(s"body over $MaxBodyBytes bytes"))
+            else {
+              stream.addData(new String(body, StandardCharsets.UTF_8))
+              (200, None)
+            }
+          }
+        } catch { case e: Exception => (500, Some(e.getMessage)) }
+        error match {
+          case None => x.sendResponseHeaders(status, -1)
+          case Some(msg) =>
+            val bytes = s"""{"error":"${jsonEscape(msg)}"}""".getBytes(StandardCharsets.UTF_8)
+            x.getResponseHeaders.set("Content-Type", "application/json")
+            x.sendResponseHeaders(status, bytes.length)
+            x.getResponseBody.write(bytes)
+        }
         x.close()
       }
     })
@@ -72,4 +102,11 @@ final class HttpIngest(spark: SparkSession, port: Int = 0) {
   def ingest(json: String): Unit = stream.addData(json)
 
   def stop(): Unit = server.stop(0)
+}
+
+object HttpIngest {
+  /** Largest accepted request body, in bytes; a tweet is a few hundred.
+    * The handler reads at most one byte more, so an oversized body never
+    * reaches memory whole. */
+  val MaxBodyBytes: Int = 64 * 1024
 }

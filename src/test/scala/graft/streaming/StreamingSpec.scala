@@ -860,7 +860,95 @@ class StreamingSpec extends SparkSpecBase {
       assert(c.getResponseCode === 200)
       c.disconnect()
     }
+    /** One keep-alive HTTP/1.1 client for every `send` of this server. */
+    private lazy val client = java.net.http.HttpClient.newBuilder()
+      .version(java.net.http.HttpClient.Version.HTTP_1_1).build()
+    def send(method: String, body: String = ""): java.net.http.HttpResponse[String] = {
+      val req = java.net.http.HttpRequest.newBuilder(
+          java.net.URI.create(s"http://localhost:${ingester.boundPort}/tweets"))
+        .method(method, java.net.http.HttpRequest.BodyPublishers.ofString(body)).build()
+      client.send(req, java.net.http.HttpResponse.BodyHandlers.ofString())
+    }
     def close(): Unit = ingester.stop()
+  }
+
+  private def tweetJson(i: Int, text: String): String =
+    f"""{"created_at":"2024-01-01T07:$i%02d:00Z","text":"$text","user":{"id":$i,"name":"u$i"}}"""
+
+  test("E1 batching: 12 tweets POSTed one by one drain as ONE micro-batch " +
+    "in ONE input partition, at most one parquet file per sentiment, and " +
+    "the rows equal the batch path over the same payloads") {
+    val s = spark
+    val texts = Seq("fast merge", "slow scan", "plain words")
+    val payloads = (0 until 12).map(i => tweetJson(i, s"${texts(i % 3)} #t$i"))
+    val http = new HttpIngestForTest(s)
+    try {
+      payloads.foreach(http.post)
+      val out = tmp("e1b_out"); val ck = tmp("e1b_ck")
+      val partitions = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+      val q = http.ingester.enriched.writeStream
+        .option("checkpointLocation", ck)
+        .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
+          partitions.add(df.rdd.getNumPartitions)
+          df.write.mode("append").partitionBy("sentiment").parquet(out)
+        }
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+      q.awaitTermination()
+      val batches = q.recentProgress.filter(_.numInputRows > 0)
+      assert(batches.map(_.numInputRows).toSeq === Seq(12L))
+      assert(partitions.toArray.toSeq === Seq(1))
+      val sentimentDirs = new java.io.File(out).listFiles().filter(_.isDirectory)
+      assert(sentimentDirs.length === 3)
+      sentimentDirs.foreach { d =>
+        val files = d.listFiles().count(_.getName.endsWith(".parquet"))
+        assert(files === 1, s"$d holds $files parquet files")
+      }
+      val in = tmp("e1b_in")
+      Files.write(java.nio.file.Paths.get(in, "t.json"),
+        payloads.mkString("\n").getBytes("UTF-8"))
+      val e2 = TweetPipeline.batchIngest(s, in)
+      val e1 = s.read.parquet(out).select(e2.columns.map(col).toSeq: _*)
+      assert(e1.orderBy("created_at").collect().toSeq ===
+        e2.orderBy("created_at").collect().toSeq)
+    } finally http.close()
+  }
+
+  test("E1 reply contract: an accepted POST gets 200 with Content-Length 0, " +
+    "a GET gets 405 with a JSON error, and 40 keep-alive POSTs take < 1 s " +
+    "(no Nagle / delayed-ACK stall per reply)") {
+    val http = new HttpIngestForTest(spark)
+    try {
+      val ok = http.send("POST", tweetJson(0, "fast"))
+      assert(ok.statusCode === 200)
+      assert(ok.headers.firstValue("content-length").orElse("") === "0")
+      assert(ok.body === "")
+      val get = http.send("GET")
+      assert(get.statusCode === 405)
+      assert(get.body === """{"error":"POST only"}""")
+      val t0 = System.nanoTime()
+      (1 to 40).foreach(i => assert(http.send("POST", tweetJson(i, "fast")).statusCode === 200))
+      val seconds = (System.nanoTime() - t0) / 1e9
+      assert(seconds < 1.0, f"40 sequential POSTs took $seconds%.2f s")
+    } finally http.close()
+  }
+
+  test("E1 body bound: a POST over HttpIngest.MaxBodyBytes gets 413 and adds no row") {
+    val s = spark
+    val http = new HttpIngestForTest(s)
+    try {
+      val huge = tweetJson(0, "x" * graft.sources.HttpIngest.MaxBodyBytes)
+      val rejected = http.send("POST", huge)
+      assert(rejected.statusCode === 413)
+      assert(rejected.body.startsWith("""{"error":"""))
+      assert(http.send("POST", tweetJson(1, "fast")).statusCode === 200)
+      val out = tmp("e1413_out"); val ck = tmp("e1413_ck")
+      http.ingester.enriched.writeStream.format("parquet").option("path", out)
+        .option("checkpointLocation", ck)
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+        .awaitTermination()
+      assert(s.read.parquet(out).select("text").collect().map(_.getString(0)).toSeq ===
+        Seq("fast"))
+    } finally http.close()
   }
 
   test("T14: streaming near-dup discovers CROSS-BATCH pairs — a doc " +
