@@ -455,7 +455,15 @@ object RealCodecs {
     * IEND, each chunk CRC32-sealed; 8-bit truecolor (color type 2), no
     * interlace, every scanline filter 0, zlib via `java.util.Deflater`.
     * Pixel plane = seed bytes repeated row-major across the image, the
-    * same arithmetic the q189 DuckDB twin recomputes. */
+    * same arithmetic the q189 DuckDB twin recomputes.
+    *
+    * Threading: the `ThreadLocal` `Deflater`/`Inflater` below are
+    * task-thread-only. Every caller in the program runs inside a task
+    * closure (`mapPartitions` in q189, q217, q242 and q244), never on
+    * `Par`'s driver threads, and each instance is used only within the
+    * one `synthesizeComps`/`parse` call that fetched it (reset first).
+    * No reference escapes that call, so no instance leaves its task or
+    * is shared between threads. */
   object PngCodec {
     // zlib state is NATIVE memory: a fresh Deflater/Inflater per tiny
     // image (q244: 4500 images/run) pays native init+teardown and GC

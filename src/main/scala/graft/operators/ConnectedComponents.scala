@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Encoders}
 import org.apache.spark.sql.functions._
 import graft.core.Barriers._
 
@@ -109,6 +109,39 @@ object ConnectedComponents {
     * minimum reachable label (the paper's Lemmas 1-2); the fixed point
     * is a forest of stars rooted at each component's minimum id.
     *
+    * Local contraction first (Łącki et al., "Connected Components at
+    * Scale via Local Contractions", 2018): before any shuffle, one
+    * `mapPartitions` over the raw `(src, dst)` longs runs a union-find
+    * with min-id roots over the edges that share a partition and emits
+    * `(x, root(x))` for every non-root node — canonical (u > v) star
+    * edges with the same connectivity as the partition's edges. Rows
+    * with a null endpoint are dropped and self-loops vanish. Inputs
+    * whose components already sit whole in one partition (q96's
+    * chains come out of a window partitioned by customer) leave the
+    * pass as a star forest and need no star round at all. The union-
+    * find's node map is a primitive open-addressing long table; when
+    * it reaches [[ContractCap]] nodes (~20 MB per task at the cap) the
+    * pass flushes its stars and starts over. Any subset of the edges
+    * contracts to stars of the same connectivity, so a flush only
+    * leaves more work for the rounds, never a wrong answer.
+    *
+    * Star-forest test instead of an initial signature: round 1's
+    * large-star window (partitioned by node over the symmetrized
+    * contracted edges) also marks each node with two different parents
+    * or with both roles; with canonical edges (u > v), a node's smallest
+    * neighbor is below it iff it has a parent. That window is persisted
+    * and one count of marked rows decides. Zero means every edge joins a
+    * leaf to a root that is nobody's child — a forest of stars, each
+    * root its component's minimum because edges are canonical — exactly
+    * the loop's fixed point, so the loop is skipped and the final
+    * labeling below is correct unchanged. The test tolerates duplicate
+    * edges (two parents show as min ≠ max), so the contracted edges need
+    * no `distinct` exchange, and when the test fails round 1 starts from
+    * the persisted window: the test costs one count over it, not a
+    * shuffle of its own. The loop then runs as before, with no previous
+    * signature to compare against: its first round cannot stop, which
+    * costs at most one round and never a wrong answer.
+    *
     * Implementation notes (Spark-first, no collect_list): each star
     * step is a window-min over the neighbor partition — the
     * neighborhood is never materialized as an array, so a viral node
@@ -118,16 +151,19 @@ object ConnectedComponents {
     * round — one driver-side pair compare per round against the
     * materializing count; a false stop needs a 64-bit checksum
     * collision at equal cardinality (~2⁻⁶⁴ — negligible, and both
-    * star steps are deterministic so a stop is reproducible).
+    * star steps are deterministic so a stop is reproducible). The
+    * loop keeps this signature rather than the star test: the test
+    * reads the window over a round's INPUT, so it could confirm a
+    * fixed point no earlier than the signature compare does.
     *
     * Lineage is truncated with localCheckpoint every round by default
     * (`checkpointInterval = 1`), a stricter default than [[label]]'s:
-    * each star round references the previous edge frame FOUR times
-    * (two symmetrization arms × two window stages), so the un-truncated
-    * logical plan grows ~4× per round and driver-side ANALYSIS — which
-    * runs on every Dataset construction, cached data or not — becomes
-    * the bottleneck within a handful of rounds (measured 60 s → 14 s on
-    * a 135k-edge graph just by truncating every round).
+    * un-truncated, each round's plan nests every earlier round's windows
+    * and exchanges, and driver-side ANALYSIS — which runs on every
+    * Dataset construction, cached data or not — becomes the bottleneck
+    * within a handful of rounds (measured 60 s → 14 s on a 135k-edge
+    * graph just by truncating every round, when each round still read
+    * the previous edge frame four times).
     *
     * Use [[label]] for near-dup clusters (tiny diameter — fewer
     * shuffles per round wins); use this for social-graph-shaped
@@ -151,21 +187,42 @@ object ConnectedComponents {
       (r.getLong(0), String.valueOf(r.get(1)))
     }
 
-    // canonical (u = bigger, v = smaller), self-loops and dups dropped
-    var e = edges.select(
-        greatest(col(srcCol), col(dstCol)).cast("long").as("u"),
-        least(col(srcCol), col(dstCol)).cast("long").as("v"))
-      .filter(col("u") =!= col("v")).distinct().persist()
-    var eSig = sig(e)
-    var converged = false
+    // large-star's window over the symmetrized edges: m = min(Γ(u) ∪ {u}),
+    // and `bad` on every row of a node u with two parents or with both
+    // roles. lo = u's smallest neighbor: u has a parent iff lo < u, and
+    // lo is then its smallest parent. No dedup here: duplicate edges
+    // don't change the window mins, and the round's distinct drops them.
+    // Both directions come from ONE scan (explode, not a self-union), so
+    // an unpersisted input — round 1's contraction — is computed once.
+    def starWindow(e: DataFrame): DataFrame = {
+      val w = Window.partitionBy("u")
+      val lo = min(col("v")).over(w)
+      e.select(explode(array(struct(col("u"), col("v")),
+          struct(col("v").as("u"), col("u").as("v")))).as("p"))
+        .select(col("p.u").as("u"), col("p.v").as("v"))
+        .select(col("u"), col("v"), least(lo, col("u")).as("m"),
+          (lo < col("u") && (max(col("v")).over(w) > col("u") ||
+            lo < max(when(col("v") < col("u"), col("v"))).over(w))).as("bad"))
+    }
+
+    // canonical (u = bigger, v = smaller) star edges of each partition's
+    // edges; duplicates across partitions (and flushes) are left in
+    val pair = Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong)
+    val contracted = edges
+      .select(col(srcCol).cast("long").as("a"), col(dstCol).cast("long").as("b"))
+      .filter(col("a").isNotNull && col("b").isNotNull && col("a") =!= col("b"))
+      .as(pair)
+      .mapPartitions(contract(_, ContractCap))(pair)
+      .toDF("u", "v")
+    // the star test and round 1's large-star share one window; first()
+    // materializes it (first, not head: head() is the rounds' call site)
+    var win = starWindow(contracted).persist()
+    var converged = win.agg(count(when(col("bad"), 1))).first().getLong(0) == 0
+    var e = win.filter(col("v") < col("u")).select(col("u"), col("v"))
+    var eSig: Option[(Long, String)] = None
     var round = 0
     while (!converged && round < maxRounds) {
-      // large-star over the symmetrized neighborhoods. No dedup here:
-      // duplicate (v, m) edges don't change the small-star window min,
-      // and the end-of-round distinct removes them — one less shuffle.
-      val sym = e.unionByName(e.select(col("v").as("u"), col("u").as("v")))
-      val large = sym
-        .withColumn("m", least(min(col("v")).over(Window.partitionBy("u")), col("u")))
+      val large = win
         .filter(col("v") > col("u"))
         .select(col("v").as("u"), col("m").as("v"))
       // small-star over the (already canonical) large-star output.
@@ -190,10 +247,12 @@ object ConnectedComponents {
         if ((round + 1) % checkpointInterval == 0) small.barrier(eager = false)
         else small.persist()
       val nextSig = sig(next)
+      win.unpersist()
       e.unpersist()
-      converged = nextSig == eSig
+      converged = eSig.contains(nextSig)
       e = next
-      eSig = nextSig
+      win = starWindow(e)
+      eSig = Some(nextSig)
       round += 1
     }
     require(converged,
@@ -206,5 +265,94 @@ object ConnectedComponents {
         Seq("node"), "left")
       .select(col("node").as(idCol),
         coalesce(col("root"), col("node")).as("component"))
+  }
+
+  /** Node cap of one [[contract]] flush: 2²⁰ nodes hold ~20 MB per task
+    * (a 2²¹-slot int table, 2²⁰ longs of ids and 2²⁰ ints of parents). */
+  private[operators] val ContractCap = 1 << 20
+
+  /** [[labelStar]]'s partition-local contraction: a union-find with
+    * min-id roots over `rows`, emitting `(x, root(x))` for every
+    * non-root node, so `x > root(x)`. Once the union-find holds `cap`
+    * nodes it emits its stars and starts over. Self-loops add nothing. */
+  private[operators] def contract(rows: Iterator[(Long, Long)], cap: Int): Iterator[(Long, Long)] =
+    new Iterator[(Long, Long)] {
+      private val uf = new LongUnionFind
+      private var out: Iterator[(Long, Long)] = Iterator.empty
+      def hasNext: Boolean = {
+        while (!out.hasNext && rows.hasNext) {
+          uf.clear()
+          while (rows.hasNext && uf.size <= cap - 2) {
+            val (a, b) = rows.next()
+            if (a != b) uf.union(a, b)
+          }
+          out = uf.stars
+        }
+        out.hasNext
+      }
+      def next(): (Long, Long) =
+        if (hasNext) out.next() else throw new NoSuchElementException("contract")
+    }
+
+  /** Union-find over long node ids with min-id roots. Node ids map to
+    * dense indexes through an open-addressing int table (linear
+    * probing, load ≤ 1/2); all three arrays start small and double. */
+  private final class LongUnionFind {
+    private var slots = Array.fill(64)(-1) // hash slot → dense index, -1 empty
+    private var ids = new Array[Long](32)  // dense index → node id
+    private var parent = new Array[Int](32)
+    private var n = 0
+
+    def size: Int = n
+
+    def clear(): Unit = { java.util.Arrays.fill(slots, -1); n = 0 }
+
+    def union(a: Long, b: Long): Unit = {
+      val ra = find(index(a))
+      val rb = find(index(b))
+      if (ra != rb) { if (ids(ra) < ids(rb)) parent(rb) = ra else parent(ra) = rb }
+    }
+
+    /** `(id, root id)` of every non-root node; valid until the next union/clear. */
+    def stars: Iterator[(Long, Long)] =
+      Iterator.range(0, n).flatMap { i =>
+        val r = find(i)
+        if (r == i) Iterator.empty else Iterator.single((ids(i), ids(r)))
+      }
+
+    private def find(i0: Int): Int = {
+      var i = i0
+      while (parent(i) != i) { parent(i) = parent(parent(i)); i = parent(i) } // path halving
+      i
+    }
+
+    private def slotOf(x: Long): Int = {
+      val mask = slots.length - 1
+      val h = x * 0x9E3779B97F4A7C15L
+      var s = (h ^ (h >>> 32)).toInt & mask
+      while (slots(s) >= 0 && ids(slots(s)) != x) s = (s + 1) & mask
+      s
+    }
+
+    private def index(x: Long): Int = {
+      val s = slotOf(x)
+      if (slots(s) >= 0) slots(s)
+      else if (2 * (n + 1) > slots.length) { grow(); index(x) }
+      else {
+        if (n == ids.length) {
+          ids = java.util.Arrays.copyOf(ids, 2 * n)
+          parent = java.util.Arrays.copyOf(parent, 2 * n)
+        }
+        ids(n) = x; parent(n) = n; slots(s) = n
+        n += 1
+        n - 1
+      }
+    }
+
+    private def grow(): Unit = {
+      slots = Array.fill(2 * slots.length)(-1)
+      var i = 0
+      while (i < n) { slots(slotOf(ids(i))) = i; i += 1 }
+    }
   }
 }

@@ -152,7 +152,7 @@ object EdJoin {
 
     // Early-out: on a short-free corpus the fallback subplan still
     // costs real wall-clock — its group/expand joins re-scan the
-    // corpus even though every frame is empty (r12 A/B, EdJoinAb:
+    // corpus even though every frame is empty (r12 A/B, BASELINE.md:
     // q208 min-of-3 5.92 s with the empty fallback vs 3.25 s without
     // — ~45% of the query on the operator's HOME regime, since
     // identifier/fingerprint corpora rarely have strings under

@@ -221,29 +221,30 @@ object WordPieceVocab {
     * after ≤ len iterations the (pos, n_wp) pair is identical to the
     * round formulation's fixpoint row for row, and the stall→raise
     * contract ([[finishedOrRaise]]) is preserved verbatim. The walk
-    * reads lm only through the aggregate's accumulator-captured `ms`
-    * array — the assignPR lesson: per-word lists keep the interpreted
-    * HOF over O(len) elements, never over a re-inlined subtree. */
+    * reads lm only through the per-word `pos → L` map `lms`, built once
+    * by the grouping aggregate (`map_from_entries`) — the assignPR
+    * lesson: per-word lists keep the interpreted HOF over O(len)
+    * elements, never over a re-inlined subtree. Each step is one
+    * `element_at` lookup (a key scan that stops at the match) instead
+    * of two `filter` passes that each copied the whole list, which made
+    * the walk O(len²) in allocation. A missing position and a word with
+    * no lm rows at all (null map) both read NULL, the stall case. */
   private def walkExpr: org.apache.spark.sql.Column = expr("""
     aggregate(
       sequence(1, len),
       named_struct('pos', 1, 'n_wp', CAST(0 AS BIGINT)),
-      (st, i) -> IF(st.pos > len
-           OR size(filter(ms, m -> m.pos = st.pos)) = 0,
+      (st, i) -> IF(st.pos > len OR element_at(lms, st.pos) IS NULL,
          st,
          named_struct(
-           'pos', st.pos + element_at(filter(ms, m -> m.pos = st.pos), 1).L,
+           'pos', st.pos + element_at(lms, st.pos),
            'n_wp', st.n_wp + CAST(1 AS BIGINT))))""")
 
   /** Per-distinct-word MaxMatch counts from a longest-match table
     * `(w, pos, L)`: one aggregate per word, then the stall check. */
   private def walkCounts(dw: DataFrame, lm: DataFrame): DataFrame = {
     val perWord = lm.groupBy(col("w"))
-      .agg(sort_array(collect_list(struct(col("pos"), col("L")))).as("ms"))
+      .agg(map_from_entries(collect_list(struct(col("pos"), col("L")))).as("lms"))
     dw.join(perWord, Seq("w"), "left_outer")
-      .select(col("w"), col("len"),
-        coalesce(col("ms"),
-          array().cast("array<struct<pos:int,L:int>>")).as("ms"))
       .select(col("w"), col("len"), walkExpr.as("seg"))
       .select(col("w"), col("len"),
         col("seg.pos").as("pos"), col("seg.n_wp").as("n_wp"))

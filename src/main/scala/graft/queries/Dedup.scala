@@ -313,9 +313,15 @@ object Dedup {
     * operator) needs one round per hop and would blow its round cap
     * here, while [[ConnectedComponents.labelStar]] (Kiveris et al.
     * '14) converges in O(log² n) rounds by rewiring edges toward the
-    * component minimum. The oracle derives the expected labels
-    * INDEPENDENTLY — a chain spans exactly one customer's orders, so
-    * component = min orderkey per customer, no recursion needed. */
+    * component minimum. The edges come out of a window partitioned by
+    * `o_custkey`, so each chain sits whole in one partition: labelStar's
+    * partition-local contraction turns every chain into a star before
+    * any shuffle, its star-forest test passes, and q96 runs zero star
+    * rounds. The rounds themselves are exercised by
+    * `ConnectedComponentsSpec`'s scattered-path spec. The oracle derives
+    * the expected labels INDEPENDENTLY — a chain spans exactly one
+    * customer's orders, so component = min orderkey per customer, no
+    * recursion needed. */
   val q96 = Q(
     "q96_chain_components_star",
     (s, dir) => {
