@@ -40,10 +40,9 @@ object ConnectedComponents {
     *   arms), driver-side ANALYSIS re-walks it on every Dataset
     *   construction, and a lost partition at round k recomputes all k
     *   rounds; checkpointing materializes the RDD and truncates lineage.
-    *   Default 1 (measured equal-or-faster than 5 even at 3-4 rounds;
-    *   see [[labelStar]]'s scaladoc for the 4×-growth variant where the
-    *   difference is 8×). Use checkpoint-with-dir on a real cluster for
-    *   executor-loss tolerance; localCheckpoint is the single-JVM form.
+    *   Default 1 (measured equal-or-faster than 5 even at 3-4 rounds).
+    *   Use checkpoint-with-dir on a real cluster for executor-loss
+    *   tolerance; localCheckpoint is the single-JVM form.
     * @return (idCol, "component") — component = min node id reachable */
   def label(nodes: DataFrame, idCol: String,
             edges: DataFrame, srcCol: String, dstCol: String,
@@ -129,15 +128,16 @@ object ConnectedComponents {
     * large-star window (partitioned by node over the symmetrized
     * contracted edges) also marks each node with two different parents
     * or with both roles; with canonical edges (u > v), a node's smallest
-    * neighbor is below it iff it has a parent. That window is persisted
-    * and one count of marked rows decides. Zero means every edge joins a
-    * leaf to a root that is nobody's child — a forest of stars, each
-    * root its component's minimum because edges are canonical — exactly
+    * neighbor is below it iff it has a parent. That window is lazily
+    * localCheckpointed and one count of marked rows both materializes
+    * it and decides. Zero means every edge joins a leaf to a root that
+    * is nobody's child — a forest of stars, each root its component's
+    * minimum because edges are canonical — exactly
     * the loop's fixed point, so the loop is skipped and the final
     * labeling below is correct unchanged. The test tolerates duplicate
     * edges (two parents show as min ≠ max), so the contracted edges need
     * no `distinct` exchange, and when the test fails round 1 starts from
-    * the persisted window: the test costs one count over it, not a
+    * the checkpointed window: the test costs one count over it, not a
     * shuffle of its own. The loop then runs as before, with no previous
     * signature to compare against: its first round cannot stop, which
     * costs at most one round and never a wrong answer.
@@ -157,13 +157,11 @@ object ConnectedComponents {
     * fixed point no earlier than the signature compare does.
     *
     * Lineage is truncated with localCheckpoint every round by default
-    * (`checkpointInterval = 1`), a stricter default than [[label]]'s:
-    * un-truncated, each round's plan nests every earlier round's windows
-    * and exchanges, and driver-side ANALYSIS — which runs on every
-    * Dataset construction, cached data or not — becomes the bottleneck
-    * within a handful of rounds (measured 60 s → 14 s on a 135k-edge
-    * graph just by truncating every round, when each round still read
-    * the previous edge frame four times).
+    * (`checkpointInterval = 1`): un-truncated, each round's plan nests
+    * every earlier round's windows and exchanges, and driver-side
+    * ANALYSIS — which runs on every Dataset construction, cached data or
+    * not — becomes the bottleneck within a handful of rounds (measured
+    * 60 s → 14 s on a 135k-edge graph by truncating every round).
     *
     * Use [[label]] for near-dup clusters (tiny diameter — fewer
     * shuffles per round wins); use this for social-graph-shaped
@@ -215,8 +213,10 @@ object ConnectedComponents {
       .mapPartitions(contract(_, ContractCap))(pair)
       .toDF("u", "v")
     // the star test and round 1's large-star share one window; first()
-    // materializes it (first, not head: head() is the rounds' call site)
-    var win = starWindow(contracted).persist()
+    // materializes its lazy checkpoint (first, not head: head() is the
+    // rounds' call site). A checkpoint, not persist(): the zero-round
+    // result reads it, and it must leave no CacheManager entry behind.
+    var win = starWindow(contracted).barrier(eager = false)
     var converged = win.agg(count(when(col("bad"), 1))).first().getLong(0) == 0
     var e = win.filter(col("v") < col("u")).select(col("u"), col("v"))
     var eSig: Option[(Long, String)] = None
@@ -247,7 +247,6 @@ object ConnectedComponents {
         if ((round + 1) % checkpointInterval == 0) small.barrier(eager = false)
         else small.persist()
       val nextSig = sig(next)
-      win.unpersist()
       e.unpersist()
       converged = eSig.contains(nextSig)
       e = next

@@ -103,10 +103,13 @@ class ConnectedComponentsSpec extends AnyFunSuite with SparkSpecBase {
     "locally and finish with zero star rounds") {
     val (nodes, edges) = chains(3000, 11)
     val expected = (0L until 3000L).map(i => i -> i % 11).toMap
+    spark.catalog.clearCache()
     val (out, rounds) = withStarRounds(labels(
       ConnectedComponents.labelStar(nodes, "id", edges, "a", "b")))
     assert(out === expected)
     assert(rounds == 0)
+    // the zero-round result reads a checkpoint, not a cached plan
+    assert(spark.sharedState.cacheManager.isEmpty)
   }
 
   test("contract: flushing every 4 nodes gives the same components as the " +
