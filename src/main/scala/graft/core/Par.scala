@@ -3,6 +3,7 @@ package graft.core
 import java.util.concurrent.Executors
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
+import scala.util.{Failure, Success, Try}
 
 /** Driver-side overlap of INDEPENDENT eager build stages (guide §2.6
   * "Overlap independent jobs"; r18 verdict item 1).
@@ -34,9 +35,12 @@ import scala.concurrent.duration.Duration
   * 2–3 legs in flight is the intended scale: enough to fill stage
   * tails, not so many that they fight for executors.
   *
-  * Failure: the calling leg runs to completion first; a pool leg's
-  * exception rethrows from the join (the original cause, not a
-  * wrapper), so a failed build surfaces exactly as it did serially. */
+  * Failure: a join returns or throws only after EVERY leg has
+  * finished, so no leg is left running its Spark jobs behind a caller
+  * that has moved on. It rethrows the first failure in leg order (a,
+  * then b, then c) as the original exception, not a wrapper, with the
+  * other legs' failures attached via `addSuppressed` — a failed build
+  * surfaces as it would serially, and no failure is lost. */
 object Par {
 
   private lazy val pool = ExecutionContext.fromExecutorService(
@@ -51,8 +55,10 @@ object Par {
     * frames the other mutates/unpersists). */
   def join2[A, B](a: => A, b: => B): (A, B) = {
     val fb = Future(b)(pool)
-    val ra = a
-    (ra, Await.result(fb, Duration.Inf))
+    val ra = settle(a)
+    val rb = settle(Await.result(fb, Duration.Inf))
+    rethrowFirst(ra, rb)
+    (ra.get, rb.get)
   }
 
   /** Three-way [[join2]]: `b` and `c` on the pool, `a` on the calling
@@ -60,7 +66,22 @@ object Par {
   def join3[A, B, C](a: => A, b: => B, c: => C): (A, B, C) = {
     val fb = Future(b)(pool)
     val fc = Future(c)(pool)
-    val ra = a
-    (ra, Await.result(fb, Duration.Inf), Await.result(fc, Duration.Inf))
+    val ra = settle(a)
+    val rb = settle(Await.result(fb, Duration.Inf))
+    val rc = settle(Await.result(fc, Duration.Inf))
+    rethrowFirst(ra, rb, rc)
+    (ra.get, rb.get, rc.get)
+  }
+
+  /** A leg's outcome, fatal errors included. */
+  private def settle[T](leg: => T): Try[T] =
+    try Success(leg) catch { case e: Throwable => Failure(e) }
+
+  private def rethrowFirst(legs: Try[_]*): Unit = {
+    val errs = legs.collect { case Failure(e) => e }
+    for (first <- errs.headOption) {
+      errs.tail.filterNot(_ eq first).foreach(first.addSuppressed)
+      throw first
+    }
   }
 }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -75,6 +75,18 @@ object VectorOps {
       when(amax === 0.0, lit(0))
         .otherwise(round(x.cast(DoubleType) / amax * 127, 0))
         .cast(ByteType))
+
+  /** q286's SQ8 code rows: (vec_id, embedding) → (vec_id, am, qv), with
+    * `am` the per-vector scale in exact millis (rint(amax·10³), the
+    * oracle's DECIMAL(18,3) cast) and `qv` the [[quantize8]] codes.
+    * The scale is per vector, so encoding is stateless per row. `amax`
+    * is materialized in its own projection (see [[quantize8]]). */
+  def sq8Codes(emb: DataFrame): DataFrame =
+    emb.select(col("vec_id"), col("embedding"),
+        absMax(col("embedding")).as("amax"))
+      .select(col("vec_id"),
+        rint(col("amax") * lit(1e3)).cast(LongType).as("am"),
+        quantize8(col("embedding"), col("amax")).as("qv"))
 
   /** Inverse of [[quantize8]]: x̂_i = q_i · amax / 127. Reconstruction
     * error is bounded by amax/254 + rounding dust per element. */

@@ -2,88 +2,52 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StringType}
 
-/** Replicated ANN code store + failover serving (SURVEY.md §2.11a
-  * X122, q303): the r16 verdict's "missing #1" — the TEXT serving tier
-  * survives a node loss with answers unchanged (q294/q299,
-  * [[ReplicatedIndex]]), but every vector store stayed single-copy:
-  * q296's SQ8 shards, the IVF-PQ index, the q280 graph. A node loss
-  * there loses that shard's codes — which no production vector tier
-  * accepts (Milvus/Qdrant replica sets, ES dense-vector shards carry
-  * `number_of_replicas` like any index). This operator applies q294's
-  * preference-list device VERBATIM to the q286 SQ8 code rows, and it
-  * is strictly EASIER than text: the code-space distance is a pure
-  * function of the (query, vector) pair — no corpus statistics at all,
-  * so there is no df step to keep exact; ANY selection of rows that
-  * contains each vector exactly once serves the identical ranking
-  * (q283's containment law with nothing left to prove about stats).
+/** Replicated SQ8 code store with failover serving (q303/q313/q316):
+  * [[ReplicatedRows]] over q286's `(vec_id, am, qv)` code rows, plus
+  * the code-space serve. Placement, failover and every maintenance verb
+  * are [[ReplicatedRows]]'; what is specific to codes is
   *
-  *   - PLACEMENT: the Dynamo preference list on the md5 ring
-  *     ([[ReplicatedIndex.assignPR]], the SAME walk — 16 vnodes/shard,
-  *     doubled ring), positions from md5("vec" ‖ vec_id) so the vector
-  *     tier's ring is independent of the text tier's.
-  *   - WRITE PATH: both copies of every (vec_id, am, qv) code row —
-  *     the primary store keyed (shard, …), the replica store keyed
-  *     (node, origin, …) where origin is the vec's primary shard, so
-  *     "serve shard p from replicas" is a pure key-space selection
-  *     (origin = p) on nodes ≠ p by construction.
-  *   - FAILOVER of node x serves primaries of every node ≠ x UNION
-  *     replica rows with origin = x — a corpus PARTITION, so stage-1
-  *     scatter-gather returns the exact same candidate set and the
-  *     ranking is unchanged for EVERY choice of failed node
-  *     (ReplicatedCodesSpec pins all S).
+  *   - one row per vector: [[build]] and [[update]] drop duplicate
+  *     vec_ids where code rows come in, so a serve counts each vector
+  *     once and [[ReplicatedC.assignments]] is re-derived from the
+  *     primary store's ids;
+  *   - the ring size rides in the store, so [[update]]'s upsert half
+  *     cannot place novel ids on a different ring than the existing
+  *     rows, and [[grow]]/[[recoverLost]] fail loudly on a mismatched
+  *     claim;
+  *   - the serve: code distance is a pure function of the (query,
+  *     vector) pair — no corpus statistics — so ANY row selection that
+  *     holds each vector once (primary, replica, or a failover routing)
+  *     serves the identical candidate set (ReplicatedCodesSpec pins
+  *     every choice of failed node).
   *
-  * Row law (the byte law's row-store analogue): both copies carry
-  * IDENTICAL (vec_id, am, qv) payloads — the replica store re-keyed to
-  * (primary shard) equals the primary store as a set, which the spec
-  * pins and which makes [[recoverLost]]'s set-equality law possible.
-  *
-  * Scale: placement is one broadcast join against the 2·S·16-row
-  * doubled ring over the vec-ID list; ingest pays the 2× copy cost
-  * replication always costs (codes are already 4× smaller than raw
-  * vectors — the SQ8 point); every serve streams only the routed
-  * selection's codes (corpus/S per surviving node, embarrassingly
-  * parallel) against the broadcast query set, with the per-node
-  * reduction a bounded map-side [[graft.functions.TopKLong]] (≤ k rows
-  * per node per query on the wire) and a k·S-row gather — q296's wire
-  * posture, unchanged by replication. */
+  * Scale: every serve streams only the routed selection's codes
+  * (corpus/S per serving node) against the broadcast query set, with a
+  * bounded map-side [[graft.functions.TopKLong]] per node (≤ k rows per
+  * node per query on the wire) and a k·S-row gather. */
 object ReplicatedCodes {
 
-  /** `nShards` is the ring the assignments were built at — carried in
-    * the store (ADVICE r17) so [[update]]'s upsert half can never
-    * place novel ids on a DIFFERENT ring than the existing rows, and
-    * [[grow]]/[[recoverLost]] fail loudly on a mismatched claim. */
   final case class ReplicatedC(
-      assignments: DataFrame,  // (vec_id, primary, replica), primary != replica
       primaryStore: DataFrame, // (shard, vec_id, am, qv)
       replicaStore: DataFrame, // (node, origin, vec_id, am, qv)
-      nShards: Int)            // the ring size the placement used
+      nShards: Int) {          // the ring size the placement used
+    /** (vec_id, primary, replica), primary ≠ replica — placement is a
+      * pure function of vec_id, so it is recomputed, never stored. */
+    def assignments: DataFrame =
+      ReplicatedRows.place(primaryStore.select(col("vec_id")), "vec_id",
+        nShards)
+  }
 
-  /** The vec's ring position: q162's hash with the "vec" prefix, so
-    * the vector ring is independent of the text ring's "doc" one. */
-  private[graft] def position(vecId: org.apache.spark.sql.Column) =
-    conv(substring(md5(concat(lit("vec"), vecId.cast(StringType))),
-      1, 15), 16, 10).cast(LongType)
+  /** One (vec_id, am, qv) row per vector — the boundary guard of every
+    * verb that takes code rows in. */
+  private def rowsOf(codes: DataFrame): DataFrame =
+    codes.select(col("vec_id"), col("am"), col("qv")).dropDuplicates("vec_id")
 
-  /** Ingest: place every code row (primary + replica) and emit BOTH
-    * copies. Input: (vec_id, am, qv) — q286's SQ8 store columns.
-    * Duplicate vec_ids drop defensively (ReplicatedIndex.build's
-    * boundary guard). */
+  /** Ingest: both copies of every (vec_id, am, qv) code row. */
   def build(codes: DataFrame, nShards: Int): ReplicatedC = {
-    val s = codes.sparkSession
-    import s.implicits._
-    val positioned = codes.dropDuplicates("vec_id")
-      .select($"vec_id".as("doc_id"), $"am", $"qv",
-        position($"vec_id").as("p"))
-    val a = ReplicatedIndex.assignPR(positioned, nShards)
-      .select($"doc_id".as("vec_id"), $"am", $"qv", $"primary", $"replica")
-    val assignments = a.select($"vec_id", $"primary", $"replica")
-    val primaryStore = a.select($"primary".as("shard"), $"vec_id",
-      $"am", $"qv")
-    val replicaStore = a.select($"replica".as("node"),
-      $"primary".as("origin"), $"vec_id", $"am", $"qv")
-    ReplicatedC(assignments, primaryStore, replicaStore, nShards)
+    val (p, r) = ReplicatedRows.build(rowsOf(codes), "vec_id", nShards)
+    ReplicatedC(p, r, nShards)
   }
 
   /** Stage-1 scatter-gather over ANY row selection that partitions the
@@ -91,8 +55,7 @@ object ReplicatedCodes {
     * node. `queries` is the broadcastable (q_id, q_am, q_qv) set. Each
     * node ranks ITS codes by the all-BIGINT scaled-code distance
     * (q286's device), per-(node, query) bounded top-k, exact k·S-row
-    * gather merge (code distance is per-pair — containment needs no
-    * stats step). Returns (q_id, vec_id, adist, node). */
+    * gather merge. Returns (q_id, vec_id, adist, node). */
   private[graft] def serveCandidates(sel: DataFrame, queries: DataFrame,
       k: Int): DataFrame = {
     val s = sel.sparkSession
@@ -119,203 +82,56 @@ object ReplicatedCodes {
 
   /** Normal serve: every shard answers from its PRIMARY copy. */
   def servePrimary(r: ReplicatedC, queries: DataFrame, k: Int): DataFrame =
-    serveCandidates(
-      r.primaryStore.select(col("shard").as("node"), col("vec_id"),
-        col("am"), col("qv")),
+    serveCandidates(r.primaryStore.withColumnRenamed("shard", "node"),
       queries, k)
 
-  /** Replica-routed serve (read shed): every vec answers from its
-    * REPLICA copy — must equal [[servePrimary]]'s candidates exactly
-    * (the replica store partitions the same corpus). */
+  /** Replica-routed serve (read shedding): every vec answers from its
+    * REPLICA copy — the same candidates as [[servePrimary]]. */
   def serveReplica(r: ReplicatedC, queries: DataFrame, k: Int): DataFrame =
+    serveCandidates(r.replicaStore.drop("origin"), queries, k)
+
+  /** Node `failed` is down: its vecs answer from their replicas, every
+    * other vec from its primary — the same candidates as
+    * [[servePrimary]] for every choice of failed node. */
+  def serveFailover(r: ReplicatedC, failed: Long, queries: DataFrame,
+      k: Int): DataFrame =
     serveCandidates(
-      r.replicaStore.select(col("node"), col("vec_id"), col("am"),
-        col("qv")),
+      ReplicatedRows.failoverServing(r.primaryStore, r.replicaStore, failed),
       queries, k)
 
-  /** Node `failed` is down: its primaries serve from their replicas
-    * (origin = failed, all on nodes ≠ failed by the placement law),
-    * everyone else serves primary. Candidate-set-invariant vs
-    * [[servePrimary]] for EVERY choice of failed node. */
-  def serveFailover(r: ReplicatedC, failed: Long, queries: DataFrame,
-      k: Int): DataFrame = {
-    val prim = r.primaryStore.filter(col("shard") =!= failed)
-      .select(col("shard").as("node"), col("vec_id"), col("am"),
-        col("qv"))
-    val repl = r.replicaStore.filter(col("origin") === failed)
-      .select(col("node"), col("vec_id"), col("am"), col("qv"))
-    serveCandidates(prim.unionByName(repl), queries, k)
-  }
-
-  /** PERMANENT loss of the highest node (q299's re-replication, row
-    * store): rebuild a fully-replicated S−1 topology from SURVIVING
-    * COPIES ONLY — the lost node's rows never read, raw vectors never
-    * re-quantized:
-    *
-    *   - PROMOTION: replica rows with origin = lost re-key to primary
-    *     rows of their node wholesale (a vec's S−1-ring owner IS its
-    *     old replica when the primary's vnodes vanish — the Dynamo
-    *     walk argument, identical to [[ReplicatedIndex.recoverLost]]);
-    *   - RE-REPLICATION: the lost node's hosted vecs (either copy) get
-    *     fresh S−1-ring replicas — promoted vecs from their promoted
-    *     rows, replica-lost vecs from their intact primary rows;
-    *   - every other row passes through key-UNTOUCHED (placement
-    *     provably unchanged — a lost vnode ahead of a surviving
-    *     placement would have BEEN that placement).
-    *
-    * Rows are atomic (no block layout), so recovered ≡ a from-scratch
-    * [[build]] at S−1 as a SET — ReplicatedCodesSpec pins that
-    * equality for both stores plus the promotion law.
-    *
-    * A planned node DRAIN (shrink S → S−1) is the SAME operation: the
-    * drained node's rows are exactly what a loss would lose, and the
-    * end state is identical — so this one member covers both the
-    * unplanned (loss) and planned (decommission) halves of the
-    * lifecycle for the row store. */
+  /** Permanent loss (or drain) of node S−1: [[ReplicatedRows.recoverLost]];
+    * raw vectors are never re-quantized. */
   def recoverLost(rep: ReplicatedC, oldShards: Int): ReplicatedC = {
     require(oldShards == rep.nShards,
       s"recoverLost at $oldShards on a ${rep.nShards}-ring store")
-    require(oldShards >= 3,
-      s"recovery needs >= 3 shards (>= 2 survive), got $oldShards")
-    val lost = (oldShards - 1).toLong
-    val s = rep.primaryStore.sparkSession
-    import s.implicits._
-    val ids = rep.assignments.select($"vec_id".as("doc_id"))
-      .withColumn("p", position($"doc_id"))
-    val a2 = ReplicatedIndex.assignPR(ids, oldShards - 1)
-      .select($"doc_id".as("vec_id"), $"primary", $"replica")
-    // ---- surviving, placement-unchanged rows (never re-keyed)
-    val keepPrim = rep.primaryStore.filter($"shard" =!= lost)
-    val keepRepl = rep.replicaStore
-      .filter($"node" =!= lost && $"origin" =!= lost)
-    // ---- promotion: (node r, origin = lost) rows become shard-r
-    // primaries
-    val promoted = rep.replicaStore.filter($"origin" === lost)
-      .select($"node".as("shard"), $"vec_id", $"am", $"qv")
-    val newPrimary = keepPrim.unionByName(promoted)
-    // ---- re-replication: fresh S−1 replicas for every vec the lost
-    // node hosted (either copy), payload from a SURVIVING copy
-    val hostedData = promoted.select($"vec_id", $"am", $"qv")
-      .unionByName(
-        rep.primaryStore
-          .join(rep.assignments
-            .filter($"replica" === lost && $"primary" =!= lost)
-            .select($"vec_id"), Seq("vec_id"))
-          .select($"vec_id", $"am", $"qv"))
-    val reRepl = hostedData.join(a2, "vec_id")
-      .select($"replica".as("node"), $"primary".as("origin"), $"vec_id",
-        $"am", $"qv")
-    val newReplica = keepRepl.unionByName(reRepl)
-    ReplicatedC(a2, newPrimary, newReplica, oldShards - 1)
+    val (p, r) = ReplicatedRows.recoverLost(rep.primaryStore,
+      rep.replicaStore, "vec_id", oldShards)
+    ReplicatedC(p, r, oldShards - 1)
   }
 
-  /** TAKEDOWN on the replicated code store (X122c, q316): the
-    * right-to-be-forgotten event against both copies — rows are
-    * atomic, so the surgery is one anti-join per frame (q304's
-    * two-copy law without the block decode). Unknown ids are no-ops;
-    * maintained ≡ a from-scratch [[build]] over the survivors as a
-    * SET. */
+  /** Right-to-be-forgotten takedown on both copies:
+    * [[ReplicatedRows.takedown]]. */
   def takedown(rep: ReplicatedC, deadIds: DataFrame): ReplicatedC = {
-    val s = rep.primaryStore.sparkSession
-    import s.implicits._
-    val dead = deadIds
-      .select(col(deadIds.columns.head).cast("long").as("vec_id"))
-      .distinct()
-    // anti-joins move the key column to the front — re-pin the
-    // canonical store order for positional readers
-    ReplicatedC(
-      rep.assignments.join(dead, Seq("vec_id"), "left_anti")
-        .select($"vec_id", $"primary", $"replica"),
-      rep.primaryStore.join(dead, Seq("vec_id"), "left_anti")
-        .select($"shard", $"vec_id", $"am", $"qv"),
-      rep.replicaStore.join(dead, Seq("vec_id"), "left_anti")
-        .select($"node", $"origin", $"vec_id", $"am", $"qv"),
-      rep.nShards)
+    val (p, r) = ReplicatedRows.takedown(rep.primaryStore,
+      rep.replicaStore, "vec_id", deadIds)
+    ReplicatedC(p, r, rep.nShards)
   }
 
-  /** UPDATE / re-embed on the replicated code store (X122c, q316): a
-    * document's embedding changes (the model re-encoded it) and both
-    * copies must serve the NEW codes. Placement is a pure function of
-    * vec_id (the ring hash), so a re-embed NEVER moves a vector — for
-    * existing ids the verb is a payload swap on both stores, keys and
-    * assignments untouched; ids not yet in the store insert cleanly
-    * via [[build]]'s placement at the store's OWN carried ring (the
-    * upsert half — the ring size rides in [[ReplicatedC]], so a caller
-    * cannot place novel ids on a mismatched ring; ADVICE r17).
-    * Maintained ≡ a from-scratch [[build]] over the post-update corpus
-    * as a SET. Input: (vec_id, am, qv) — the new code rows. */
+  /** Re-embed / upsert of (vec_id, am, qv) code rows at the store's own
+    * ring: [[ReplicatedRows.update]] — a re-embed never moves a vector. */
   def update(rep: ReplicatedC, newCodes: DataFrame): ReplicatedC = {
-    val s = rep.primaryStore.sparkSession
-    import s.implicits._
-    val up = newCodes.dropDuplicates("vec_id")
-    val ids = up.select($"vec_id")
-    val existing = up.join(rep.assignments, "vec_id")
-    val swappedP = rep.primaryStore
-      .join(ids, Seq("vec_id"), "left_anti")
-      .select($"shard", $"vec_id", $"am", $"qv")
-      .unionByName(existing
-        .select($"primary".as("shard"), $"vec_id", $"am", $"qv"))
-    val swappedR = rep.replicaStore
-      .join(ids, Seq("vec_id"), "left_anti")
-      .select($"node", $"origin", $"vec_id", $"am", $"qv")
-      .unionByName(existing
-        .select($"replica".as("node"), $"primary".as("origin"),
-          $"vec_id", $"am", $"qv"))
-    // the upsert half: never-seen ids place fresh, on the SAME ring
-    val novel = up.join(rep.assignments, Seq("vec_id"), "left_anti")
-    val fresh = build(novel, rep.nShards)
-    ReplicatedC(
-      rep.assignments.unionByName(fresh.assignments),
-      swappedP.unionByName(fresh.primaryStore),
-      swappedR.unionByName(fresh.replicaStore),
-      rep.nShards)
+    val (p, r) = ReplicatedRows.update(rep.primaryStore, rep.replicaStore,
+      rowsOf(newCodes), "vec_id", rep.nShards)
+    ReplicatedC(p, r, rep.nShards)
   }
 
-  /** GROW the replicated code store S → S+1, INDEX-ONLY (q302's
-    * classes, row store): a moved PRIMARY always lands on the new
-    * shard with the vec's OLD PRIMARY becoming its replica; a moved
-    * REPLICA always lands on the new shard; everything else passes
-    * key-untouched (the q288 argument per copy). Mover payloads come
-    * from their primary rows — raw vectors never re-quantized. Rows
-    * are atomic ⇒ grown ≡ a from-scratch [[build]] at S+1 as a SET
-    * (ReplicatedCodesSpec pins it plus the class laws and the
-    * grow∘recoverLost round-trip). Every replica-row KEY of a mover
-    * changes (origin = primary rides in it), so all movers' replica
-    * rows re-key; only primary-moved vecs touch the primary store. */
+  /** A node joins, S → S+1, index-only: [[ReplicatedRows.grow]]; raw
+    * vectors are never re-quantized. */
   def grow(rep: ReplicatedC, oldShards: Int): ReplicatedC = {
     require(oldShards == rep.nShards,
       s"grow at $oldShards on a ${rep.nShards}-ring store")
-    require(oldShards >= 2, s"grow needs >= 2 shards, got $oldShards")
-    val s = rep.primaryStore.sparkSession
-    import s.implicits._
-    val ids = rep.assignments.select($"vec_id".as("doc_id"))
-      .withColumn("p", position($"doc_id"))
-    val a2 = ReplicatedIndex.assignPR(ids, oldShards + 1)
-      .select($"doc_id".as("vec_id"), $"primary", $"replica")
-    val movers = rep.assignments
-      .select($"vec_id", $"primary".as("op"), $"replica".as("or"))
-      .join(a2, "vec_id")
-      .filter($"primary" =!= $"op" || $"replica" =!= $"or")
-    val pMoved = movers.filter($"primary" =!= $"op")
-    val keepP = rep.primaryStore
-      .join(pMoved.select($"vec_id"), Seq("vec_id"), "left_anti")
-    val addP = rep.primaryStore.select($"vec_id", $"am", $"qv")
-      .join(pMoved.select($"vec_id", $"primary"), "vec_id")
-      .select($"primary".as("shard"), $"vec_id", $"am", $"qv")
-    val keepR = rep.replicaStore
-      .join(movers.select($"vec_id"), Seq("vec_id"), "left_anti")
-    val addR = rep.primaryStore.select($"vec_id", $"am", $"qv")
-      .join(movers.select($"vec_id", $"primary", $"replica"), "vec_id")
-      .select($"replica".as("node"), $"primary".as("origin"), $"vec_id",
-        $"am", $"qv")
-    // joins moved the vec_id key to the front of keepP/keepR — pin the
-    // canonical column ORDER so callers' positional reads line up with
-    // [[build]]'s stores
-    ReplicatedC(a2,
-      keepP.unionByName(addP)
-        .select($"shard", $"vec_id", $"am", $"qv"),
-      keepR.unionByName(addR)
-        .select($"node", $"origin", $"vec_id", $"am", $"qv"),
-      oldShards + 1)
+    val (p, r) = ReplicatedRows.grow(rep.primaryStore, rep.replicaStore,
+      "vec_id", oldShards)
+    ReplicatedC(p, r, oldShards + 1)
   }
 }

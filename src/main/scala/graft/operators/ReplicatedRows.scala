@@ -1,77 +1,92 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType}
 
-/** Generic two-copy placement for ATOMIC-ROW serving stores (SURVEY.md
-  * §2.11a X122d, q318): [[ReplicatedCodes]] replicates the SQ8 rows
-  * and [[ReplicatedIndex]] the compressed blocks; the remaining named
-  * vector store — the q280 NAVIGABLE-GRAPH tier — is rows too (a
-  * vertex's quantized vector + its adjacency list entries), and a real
-  * deployment CO-PLACES a vector's adjacency with its codes on the
-  * same nodes (a traversal that lands on a vertex needs both). This
-  * operator is that placement, factored once:
+/** Two-copy placement for ATOMIC-ROW serving stores — every vector
+  * row store (the SQ8 codes of [[ReplicatedCodes]], the graph tier's
+  * quantized vectors and adjacency lists, the IVF-PQ (cell, codes)
+  * rows) places through this one operator, so each verb has one
+  * implementation:
   *
-  *   - every row keys by an id column; the id's preference list is
-  *     [[ReplicatedCodes.position]]'s vec ring (the SAME ring as the
-  *     codes — co-placement falls out of sharing the hash);
+  *   - every row keys by an id column; the id's Dynamo preference list
+  *     (primary, replica) is [[ReplicatedIndex.assignPR]]'s walk over
+  *     the md5 ring at [[position]]. Placement is a pure function of
+  *     (id, ring size), so stores that share an id co-place (a vertex's
+  *     codes and adjacency land on the same nodes — a traversal that
+  *     reaches a vertex needs both);
   *   - the primary copy carries a `shard` column, the replica copy
-  *     (node, origin) — q294's key shapes on bare rows;
-  *   - [[failover]] of node x returns the ORIGINAL row set: primaries
-  *     of nodes ≠ x ∪ replica rows with origin = x, a row-set
-  *     PARTITION — so any computation that is a pure function of the
-  *     row SET (a beam search over edges, an ADC scan over codes) is
-  *     answer-invariant under every failover, which is exactly the
-  *     property q318 gates for the graph traversal (iterative, so a
-  *     single lost row would change paths — the invariance is a real
-  *     claim, not a tautology about one scan).
+  *     (node, origin), where origin is the id's primary — so "serve
+  *     node x's rows from replicas" is a key selection (origin = x);
+  *   - both copies carry the SAME per-id payload multiset: [[build]]
+  *     derives both from one placed frame and every verb keeps that.
+  *     This is what makes [[failover]] of node x return the ORIGINAL
+  *     row multiset (primaries of nodes ≠ x ∪ replica rows with
+  *     origin = x), so any computation that is a pure function of the
+  *     row set — a beam search over edges, an ADC scan over codes — is
+  *     answer-invariant under every single-node failover.
   *
-  * Scale: one broadcast doubled-ring join over the DISTINCT id list
-  * per store; the copies are row unions (the 2× write amplification);
-  * failover is a filter + union, never a shuffle of the payload. */
+  * Every verb's result equals a from-scratch [[build]] over the
+  * resulting row set at the resulting ring size, as a multiset
+  * (ReplicatedRowsSpec pins each verb and the copy agreement).
+  *
+  * Scale: placement is one broadcast non-equi join of every row
+  * against the 2·S·16-row ring interval table — row-preserving, no
+  * exchange; the copies are projections of it (the 2× write cost of
+  * replication); failover is a filter + union, never a payload
+  * shuffle. */
 object ReplicatedRows {
 
-  /** Both copies of `rows`, placed by `idCol` on the vec ring.
-    * Returns (primary with `shard`, replica with `node`/`origin`). */
-  /** Placement/key column names the payload frame must not use — the
-    * build join and the copies' keys would become ambiguous or
-    * silently wrong (ADVICE r17). */
-  private val Reserved = Set("primary", "replica", "shard", "node", "origin")
+  /** Placement and key column names the payload frame must not use:
+    * the placement join and the copies' keys would become ambiguous or
+    * silently wrong (`p` carries the ring position during [[place]]). */
+  private val Reserved = Set("primary", "replica", "shard", "node", "origin", "p")
 
+  /** An id's ring position: the first 15 hex digits of md5("vec" ‖ id)
+    * as a Long. The "vec" prefix keeps the vector ring independent of
+    * the text tier's "doc" ring. */
+  private[graft] def position(id: Column): Column =
+    conv(substring(md5(concat(lit("vec"), id.cast(StringType))), 1, 15),
+      16, 10).cast(LongType)
+
+  /** `rows` plus the (primary, replica) of each row's id on the
+    * `n`-shard ring — one output row per input row. */
+  private[operators] def place(rows: DataFrame, idCol: String,
+      n: Int): DataFrame =
+    ReplicatedIndex.assignPR(rows.withColumn("p", position(col(idCol))), n)
+      .drop("p")
+
+  /** The two copies of a [[place]]d frame: (shard, payload…) and
+    * (node, origin, payload…). */
+  private def copies(placed: DataFrame,
+      payload: Seq[String]): (DataFrame, DataFrame) = {
+    val cols = payload.map(col)
+    (placed.select(col("primary").as("shard") +: cols: _*),
+     placed.select(col("replica").as("node") +: col("primary").as("origin")
+       +: cols: _*))
+  }
+
+  /** Both copies of `rows`, placed by `idCol` on the `nShards` ring.
+    * Returns (primary with `shard`, replica with `node`/`origin`). */
   def build(rows: DataFrame, idCol: String,
       nShards: Int): (DataFrame, DataFrame) = {
     val clash = rows.columns.filter(Reserved.contains)
     require(clash.isEmpty,
       s"ReplicatedRows.build: payload columns ${clash.mkString(", ")} " +
-        "collide with placement keys (primary/replica/shard/node/origin)")
-    val s = rows.sparkSession
-    import s.implicits._
-    val ids = rows.select(col(idCol).as("doc_id")).distinct()
-      .withColumn("p", ReplicatedCodes.position($"doc_id"))
-    val a = ReplicatedIndex.assignPR(ids, nShards)
-      .select($"doc_id".as(idCol), $"primary", $"replica")
-    val joined = rows.join(a, idCol)
-    val payload = rows.columns.map(col)
-    val primary = joined.select(($"primary".as("shard") +: payload): _*)
-    val replica = joined.select(($"replica".as("node") +:
-      $"primary".as("origin") +: payload): _*)
-    (primary, replica)
+        s"collide with placement keys (${Reserved.mkString("/")})")
+    copies(place(rows, idCol, nShards), rows.columns.toSeq)
   }
 
   /** The original row set with node `failed` down — a partition of the
     * rows, every one served from a surviving copy. */
   def failover(primary: DataFrame, replica: DataFrame,
-      failed: Long): DataFrame = {
-    val payload = primary.columns.filterNot(_ == "shard").map(col)
-    primary.filter(col("shard") =!= failed).select(payload: _*)
-      .unionByName(replica.filter(col("origin") === failed)
-        .select(payload: _*))
-  }
+      failed: Long): DataFrame =
+    failoverServing(primary, replica, failed).drop("node")
 
-  /** The routed selection with the SERVING node retained — (node,
-    * payload…) rows, node ≠ failed everywhere (q322's shape: a
-    * per-node bounded reduction needs to know WHO serves each row;
-    * [[failover]] is the key-free variant for pure row-set reads). */
+  /** [[failover]] with the SERVING node retained — (node, payload…)
+    * rows, node ≠ failed everywhere. A per-node bounded reduction needs
+    * to know who serves each row. */
   def failoverServing(primary: DataFrame, replica: DataFrame,
       failed: Long): DataFrame = {
     val payload = primary.columns.filterNot(_ == "shard").map(col)
@@ -81,25 +96,19 @@ object ReplicatedRows {
         .select(col("node") +: payload: _*))
   }
 
-  /** APPEND rows to an existing placement (X123b, q321): new rows
-    * place by [[build]]'s ring at the CURRENT `nShards` and union in.
-    * Placement is a pure function of the id, so appended rows of an
-    * EXISTING id land on its established homes (an edge appended to a
-    * known vertex co-locates with it — the graph-append case, q240
-    * composed onto the placement) and genuinely novel ids place fresh;
-    * either way appended ≡ from-scratch build over the grown row set
-    * as a SET. Scale: [[build]] over the |delta| rows only. */
+  /** APPEND rows at the `nShards` ring. Placement is a pure function of
+    * the id, so rows of an existing id land on its established homes
+    * (an edge appended to a known vertex co-locates with it) and novel
+    * ids place fresh. Scale: [[build]] over the delta only. */
   def append(primary: DataFrame, replica: DataFrame, newRows: DataFrame,
       idCol: String, nShards: Int): (DataFrame, DataFrame) = {
     val (p2, r2) = build(newRows, idCol, nShards)
     (primary.unionByName(p2), replica.unionByName(r2))
   }
 
-  /** TAKEDOWN on the replicated row placement (X123b, q321): rows are
-    * atomic, so the right-to-be-forgotten surgery is one anti-join per
-    * copy (ReplicatedCodes.takedown without the struct — the SAME law
-    * on the generic frames). Unknown ids are no-ops; maintained ≡ a
-    * from-scratch [[build]] over the survivors as a SET. */
+  /** TAKEDOWN: every row of the ids named by `deadIds`' first column
+    * leaves both copies (one anti-join per copy). Unknown ids are
+    * no-ops. */
   def takedown(primary: DataFrame, replica: DataFrame, idCol: String,
       deadIds: DataFrame): (DataFrame, DataFrame) = {
     val dead = deadIds
@@ -112,16 +121,10 @@ object ReplicatedRows {
        .select(replica.columns.map(col): _*))
   }
 
-  /** UPDATE / re-key-free re-index on the replicated row placement
-    * (X123c, q332): replace EVERY row of the named ids with `newRows`'
-    * rows — the generic form of ReplicatedCodes.update's payload swap
-    * (a re-embedded vector, a re-built adjacency list). Placement is a
-    * pure function of the id, so the verb composes [[takedown]] ∘
-    * [[append]] and the new rows land on the ids' ESTABLISHED homes —
-    * an update never moves an id; ids not yet placed insert cleanly
-    * (the upsert half). Rows are atomic ⇒ updated ≡ a from-scratch
-    * [[build]] over the post-update row set as a SET. Scale: one
-    * anti-join per copy + [[build]] over the |delta| rows. */
+  /** UPDATE: every row of the ids in `newRows` is replaced by
+    * `newRows`' rows ([[takedown]] then [[append]]). Placement is a
+    * pure function of the id, so an update never moves an id, and ids
+    * not yet placed insert (the upsert half). */
   def update(primary: DataFrame, replica: DataFrame, newRows: DataFrame,
       idCol: String, nShards: Int): (DataFrame, DataFrame) = {
     val (p, r) = takedown(primary, replica, idCol,
@@ -129,99 +132,53 @@ object ReplicatedRows {
     append(p, r, newRows, idCol, nShards)
   }
 
-  /** PERMANENT loss of the highest node (X123a, q320):
-    * [[ReplicatedCodes.recoverLost]]'s promotion/re-replication laws
-    * carried VERBATIM to the generic row placement — same ring, same
-    * walk, so the argument transfers wholesale:
+  /** PERMANENT loss of the highest node S−1 (also a planned drain
+    * S → S−1), rebuilt from SURVIVING copies only:
     *
-    *   - PROMOTION: replica rows with origin = lost re-key to primary
-    *     rows of their node (an id's S−1-ring owner IS its old replica
-    *     when the primary's vnodes vanish — the Dynamo argument);
+    *   - PROMOTION: replica rows with origin = lost become primary rows
+    *     of their node (when the lost node's vnodes vanish, an id's
+    *     next owner on the walk is its old replica);
     *   - RE-REPLICATION: every id the lost node hosted (either copy)
-    *     gets a fresh S−1-ring replica, payload from a surviving copy;
-    *   - everything else passes key-UNTOUCHED (a lost vnode ahead of a
-    *     surviving placement would have BEEN that placement).
+    *     gets a fresh replica at the S−1 ring, its payload read from a
+    *     surviving copy;
+    *   - every other row keeps its key (a lost vnode ahead of a
+    *     surviving placement would have been that placement).
     *
-    * Rows are atomic ⇒ recovered ≡ a from-scratch [[build]] at S−1 as
-    * a SET (ReplicatedRowsSpec pins both stores + the promotion law),
-    * and — the q320 point — the recovered topology survives a SECOND
-    * node loss with the traversal answer unchanged, which the q280
-    * oracle gates end to end. A planned node DRAIN (S → S−1) is the
-    * same operation (the q299/X122 argument).
-    *
-    * Scale: one broadcast ring join over the lost node's hosted id
-    * list (never the corpus); promotion and pass-through are filters;
-    * the re-replication union is |hosted rows|-sized. */
+    * Scale: promotion and pass-through are filters; only the lost
+    * node's hosted rows are re-placed. */
   def recoverLost(primary: DataFrame, replica: DataFrame, idCol: String,
       oldShards: Int): (DataFrame, DataFrame) = {
     require(oldShards >= 3,
       s"recovery needs >= 3 shards (>= 2 survive), got $oldShards")
     val lost = (oldShards - 1).toLong
-    val payload = primary.columns.filterNot(_ == "shard")
-    // ---- surviving, placement-unchanged rows (never re-keyed)
+    val payload = primary.columns.filterNot(_ == "shard").toSeq
     val keepPrim = primary.filter(col("shard") =!= lost)
     val keepRepl = replica.filter(col("node") =!= lost &&
       col("origin") =!= lost)
-    // ---- promotion: (node r, origin = lost) rows become shard-r rows
     val promoted = replica.filter(col("origin") === lost)
       .select(col("node").as("shard") +: payload.map(col): _*)
-    val newPrimary = keepPrim.unionByName(promoted)
-    // ---- re-replication: fresh S−1 replicas for every id the lost
-    // node hosted (either copy), payload from a SURVIVING copy
     val replicaLostIds = replica.filter(col("node") === lost &&
         col("origin") =!= lost)
       .select(col(idCol)).distinct()
-    val hostedData = promoted.select(payload.map(col): _*)
+    val hosted = promoted.select(payload.map(col): _*)
       .unionByName(primary.join(replicaLostIds, Seq(idCol))
         .select(payload.map(col): _*))
-    val ids = hostedData.select(col(idCol).as("doc_id")).distinct()
-      .withColumn("p", ReplicatedCodes.position(col("doc_id")))
-    val a2 = ReplicatedIndex.assignPR(ids, oldShards - 1)
-      .select(col("doc_id").as(idCol), col("primary"), col("replica"))
-    val reRepl = hostedData.join(a2, Seq(idCol))
-      .select(col("replica").as("node") +:
-        col("primary").as("origin") +: payload.map(col): _*)
-    (newPrimary, keepRepl.unionByName(reRepl))
+    val (_, reRepl) = copies(place(hosted, idCol, oldShards - 1), payload)
+    (keepPrim.unionByName(promoted), keepRepl.unionByName(reRepl))
   }
 
-  /** GROW the placement S → S+1, INDEX-ONLY (X123b, q321):
-    * [[ReplicatedCodes.grow]]'s move classes on the generic frames — a
-    * moved PRIMARY always lands on the new shard with the id's old
-    * primary becoming its replica, a moved REPLICA always lands on the
-    * new shard, everything else passes key-untouched; mover payloads
-    * come from their primary rows (both copies carry the same per-id
-    * payload multiset — [[build]] creates them from one joined frame
-    * and every verb preserves that, which is also why [[failover]]'s
-    * partition law holds).
-    *
-    * Implementation (r19, guide §2.4): because placement is a pure
-    * ring function of the id and non-movers' new slots EQUAL their old
-    * ones, the grown pair is one S+1 ring join over the primary
-    * payload — exactly [[build]]'s shape. The r18 move-class form
-    * (old-assignment distincts + movers join + one anti-join and one
-    * re-key join PER COPY + unions) produced the same row sets through
-    * ~3 payload-carrying exchanges; this is one, and the q321 chain's
-    * AQE stage count drops with it. The move classes are now theorems
-    * about the ring (spec-pinned in ReplicatedRowsSpec), not code
-    * paths. Rows are atomic ⇒ grown ≡ a from-scratch [[build]] at S+1
-    * as a SET — unchanged, and the oracle still gates it. Scale: the
-    * ring join runs over the DISTINCT id list; the single payload
-    * shuffle replaces the old pass-through anti-join + mover re-key
-    * (each of which already moved the full payload once). */
+  /** GROW S → S+1, index-only: both copies re-place from the primary
+    * payload at the S+1 ring. Because placement is a pure function of
+    * the id, this is [[build]] at S+1 — a moved primary lands on the
+    * new shard with its old primary as replica, a moved replica lands
+    * on the new shard, and every other row keeps its key (theorems of
+    * the ring walk, pinned in ReplicatedRowsSpec). Scale: one
+    * placement pass and no exchange. */
   def grow(primary: DataFrame, replica: DataFrame, idCol: String,
       oldShards: Int): (DataFrame, DataFrame) = {
     require(oldShards >= 2, s"grow needs >= 2 shards, got $oldShards")
-    val payload = primary.columns.filterNot(_ == "shard")
-    val ids = primary.select(col(idCol).as("doc_id")).distinct()
-      .withColumn("p", ReplicatedCodes.position(col("doc_id")))
-    val a2 = ReplicatedIndex.assignPR(ids, oldShards + 1)
-      .select(col("doc_id").as(idCol), col("primary"), col("replica"))
-    val joined = primary.select(payload.map(col): _*).join(a2, Seq(idCol))
-    // re-pin the canonical column ORDER (the r17 using-join trap)
-    (joined.select(col("primary").as("shard") +: payload.map(col): _*)
-       .select(primary.columns.map(col): _*),
-     joined.select(col("replica").as("node") +:
-         col("primary").as("origin") +: payload.map(col): _*)
-       .select(replica.columns.map(col): _*))
+    val payload = primary.columns.filterNot(_ == "shard").toSeq
+    copies(place(primary.select(payload.map(col): _*), idCol,
+      oldShards + 1), payload)
   }
 }

@@ -1624,11 +1624,7 @@ object Vectors {
       import s.implicits._
       val emb = Tables(s, dir, "embeddings")
       // ---- ingest: the SQ8 store — codes + exact-millis scale ONLY
-      val codes = emb
-        .select($"vec_id", $"embedding", VectorOps.absMax($"embedding").as("amax"))
-        .select($"vec_id",
-          rint($"amax" * lit(1e3)).cast(LongType).as("am"),
-          VectorOps.quantize8($"embedding", $"amax").as("qv"))
+      val codes = VectorOps.sq8Codes(emb)
       val queries = codes.filter($"vec_id" < 4)
         .select($"vec_id".as("q_id"), $"am".as("q_am"), $"qv".as("q_qv"))
       // ---- stage 1: all-integer code-space distance over the corpus
@@ -1828,13 +1824,8 @@ object Vectors {
       val nShards = 4
       val emb = Tables(s, dir, "embeddings")
       // ---- ingest: the q286 SQ8 store, doc-sharded
-      val codes = emb
-        .select($"vec_id", $"embedding",
-          VectorOps.absMax($"embedding").as("amax"))
-        .select(pmod($"vec_id", lit(nShards.toLong)).as("shard"),
-          $"vec_id",
-          rint($"amax" * lit(1e3)).cast(LongType).as("am"),
-          VectorOps.quantize8($"embedding", $"amax").as("qv"))
+      val codes = VectorOps.sq8Codes(emb)
+        .select(pmod($"vec_id", lit(nShards.toLong)).as("shard"), $"*")
       val queries = codes.filter($"vec_id" < 4)
         .select($"vec_id".as("q_id"), $"am".as("q_am"), $"qv".as("q_qv"))
       // ---- stage 1 scatter: per-shard all-integer code distance,
@@ -1886,8 +1877,8 @@ object Vectors {
     * single-copy; a node loss loses that shard's codes, which no
     * production vector tier accepts (Milvus/Qdrant replica sets, ES
     * dense-vector `number_of_replicas`).
-    * [[graft.operators.ReplicatedCodes]] applies q294's preference-
-    * list device VERBATIM to the q286 code rows — per-vec Dynamo
+    * [[graft.operators.ReplicatedCodes]] places the q286 code rows
+    * with [[graft.operators.ReplicatedRows]] — per-vec Dynamo
     * placement on an independent md5 ring (positions from
     * md5("vec" ‖ vec_id)), both copies emitted at ingest (primary
     * keyed (shard, …), replica keyed (node, origin, …)) — and this
@@ -1909,8 +1900,8 @@ object Vectors {
     * recoverLost ≡ a from-scratch S−1 build (set equality, both
     * stores).
     *
-    * Scale: placement is one broadcast join against the doubled
-    * 2·S·16-row ring over the vec-ID list; ingest pays replication's
+    * Scale: placement is one broadcast join of the code rows against
+    * the doubled 2·S·16-row ring interval table; ingest pays replication's
     * 2× copy cost on 4×-compressed codes; the failover probe streams
     * only the routed selection (corpus/S per surviving node,
     * embarrassingly parallel) against the broadcast query set,
@@ -1924,12 +1915,7 @@ object Vectors {
       val failed = 1L
       val emb = Tables(s, dir, "embeddings")
       // ---- ingest: the q286 SQ8 store, replicated on the vec ring
-      val codes = emb
-        .select($"vec_id", $"embedding",
-          VectorOps.absMax($"embedding").as("amax"))
-        .select($"vec_id",
-          rint($"amax" * lit(1e3)).cast(LongType).as("am"),
-          VectorOps.quantize8($"embedding", $"amax").as("qv"))
+      val codes = VectorOps.sq8Codes(emb)
       val queries = codes.filter($"vec_id" < 4)
         .select($"vec_id".as("q_id"), $"am".as("q_am"), $"qv".as("q_qv"))
       val rep = graft.operators.ReplicatedCodes.build(codes, nShards = 4)
@@ -1949,10 +1935,10 @@ object Vectors {
              CAST(0 AS BIGINT), (acc, v) -> acc + v)"""))
         .withColumn("rn", row_number().over(w).cast(LongType))
         .filter($"rn" <= 10)
-        .join(rep.assignments, "vec_id")
+        .join(rep.primaryStore.select($"vec_id", $"shard"), "vec_id")
         .select($"q_id", $"rn", $"vec_id", $"adist", $"edist",
           $"node".as("served_from"),
-          when($"primary" === failed, lit("r")).otherwise(lit("p"))
+          when($"shard" === failed, lit("r")).otherwise(lit("p"))
             .as("role"))
         .orderBy($"q_id", $"rn")
     },
@@ -2034,8 +2020,10 @@ object Vectors {
     * joins a replicated ANN tier, both copies' placements move by the
     * q288 walk (moved primary → the new shard, old primary becomes the
     * replica in place; moved replica → the new shard; everything else
-    * untouched), mover payloads come from their surviving primary rows,
-    * and raw vectors are NEVER re-quantized. Rows are atomic, so grown
+    * untouched). [[graft.operators.ReplicatedRows.grow]] re-places the
+    * primary rows at S+1, so those classes are consequences of the
+    * ring, payloads come from the primary copy, and raw vectors are
+    * NEVER re-quantized. Rows are atomic, so grown
     * ≡ a from-scratch [[graft.operators.ReplicatedCodes.build]] at S+1
     * — which this query gates ROW FOR ROW: the evidence frame is both
     * stores' rows (code payload folded to a hash — the driver compare
@@ -2046,21 +2034,15 @@ object Vectors {
     * laws and the grow∘recoverLost round-trip; T43 fires the grow
     * MID-STREAM.
     *
-    * Scale: assignment is the broadcast doubled-ring device over the
-    * vec-ID list; the surgery touches mover rows only (~2/(S+1) of the
-    * store across both copies), payload joins are mover-sized on the
-    * compact vec_id key. */
+    * Scale: one broadcast join of the primary rows against the S+1
+    * ring interval table, projected into both copies — no exchange and
+    * no join on vec_id. */
   val q313 = Q(
     "q313_replicated_codes_grow",
     (s, dir) => {
       import s.implicits._
       val emb = Tables(s, dir, "embeddings")
-      val codes = emb
-        .select($"vec_id", $"embedding",
-          VectorOps.absMax($"embedding").as("amax"))
-        .select($"vec_id",
-          rint($"amax" * lit(1e3)).cast(LongType).as("am"),
-          VectorOps.quantize8($"embedding", $"amax").as("qv"))
+      val codes = VectorOps.sq8Codes(emb)
       val rep = graft.operators.ReplicatedCodes.build(codes, nShards = 3)
       val grown = graft.operators.ReplicatedCodes.grow(rep, 3)
       val p = grown.primaryStore.select(lit("p").as("store"),
@@ -2117,11 +2099,12 @@ object Vectors {
       UNION ALL
       SELECT 'r', repl, prim, vec_id, am, qv_hash FROM h
       ORDER BY store, node, origin, vec_id"""),
-    doc = "X122b: replicated code store GROW 3->4, index-only — q302's " +
-      "move classes on atomic rows (moved primary to the new shard " +
-      "with the old primary re-keyed to replica, moved replica to the " +
-      "new shard, untouched rows pass through), payloads from " +
-      "surviving primary rows, vectors never re-quantized; grown == " +
+    doc = "X122b: replicated code store GROW 3->4, index-only — " +
+      "ReplicatedRows re-places the primary rows on the 4-ring, so " +
+      "q302's move classes (moved primary to the new shard with the " +
+      "old primary as replica, moved replica to the new shard, the " +
+      "rest untouched) follow from the ring; vectors never " +
+      "re-quantized; grown == " +
       "from-scratch 4-ring build row for row (the oracle replays " +
       "quantization + both ring slots in closed form; the surgery " +
       "never enters it)")
@@ -2133,9 +2116,10 @@ object Vectors {
     * anti-join per frame (both copies at once — the compliance law
     * q304 carries, without the block surgery), and the re-embed
     * exploits the placement invariant: a vec's ring position is a pure
-    * function of vec_id, so NEW CODES NEVER MOVE A VECTOR — the verb
-    * is a payload swap on both stores with keys and assignments
-    * untouched. Maintained ≡ a from-scratch build over the
+    * function of vec_id, so NEW CODES NEVER MOVE A VECTOR —
+    * [[graft.operators.ReplicatedRows.update]] takes the old rows out
+    * of both copies and places the new ones on the same homes.
+    * Maintained ≡ a from-scratch build over the
     * post-maintenance corpus (survivors, updated vecs re-encoded from
     * their new embeddings — here the deterministic `reverse`, which
     * any SQL replays) ROW FOR ROW — the oracle replays quantization
@@ -2145,7 +2129,8 @@ object Vectors {
     * unknown-id no-ops, and failover invariance after maintenance.
     *
     * Scale: takedown = anti-joins on the compact vec_id key; update =
-    * |updated|-sized joins; both copies pay the same row count (the
+    * the same anti-joins plus a placement of the |updated| rows; both
+    * copies pay the same row count (the
     * 2× replication always costs); raw vectors re-read only for the
     * RE-EMBEDDED set — the verb's input by definition. */
   val q316 = Q(
@@ -2153,20 +2138,15 @@ object Vectors {
     (s, dir) => {
       import s.implicits._
       val emb = Tables(s, dir, "embeddings")
-      def codesOf(df: org.apache.spark.sql.DataFrame) = df
-        .select($"vec_id", $"embedding",
-          VectorOps.absMax($"embedding").as("amax"))
-        .select($"vec_id",
-          rint($"amax" * lit(1e3)).cast(LongType).as("am"),
-          VectorOps.quantize8($"embedding", $"amax").as("qv"))
-      val rep = graft.operators.ReplicatedCodes.build(codesOf(emb), 4)
+      val rep = graft.operators.ReplicatedCodes.build(
+        VectorOps.sq8Codes(emb), 4)
       val dead = emb.select($"vec_id").filter($"vec_id" % 11 === 4)
       val upd = emb
         .filter($"vec_id" % 13 === 2 && $"vec_id" % 11 =!= 4)
         .select($"vec_id", reverse($"embedding").as("embedding"))
       val maintained = graft.operators.ReplicatedCodes.update(
         graft.operators.ReplicatedCodes.takedown(rep, dead),
-        codesOf(upd))
+        VectorOps.sq8Codes(upd))
       val p = maintained.primaryStore.select(lit("p").as("store"),
         $"shard".as("node"), lit(-1L).as("origin"), $"vec_id", $"am",
         $"qv")
@@ -2340,7 +2320,7 @@ object Vectors {
     * node on a planted graph.
     *
     * Scale: placement is one broadcast doubled-ring join per store
-    * over the distinct id list; ingest pays replication's 2× row cost;
+    * over its rows (no exchange); ingest pays replication's 2× row cost;
     * failover is filter + union (never a payload shuffle); the serve
     * is q280's posture unchanged — per-hop candidate frontiers, exact
     * integer distances, bounded beams. */
@@ -2415,8 +2395,8 @@ object Vectors {
     * q318 gave the graph tier a failover but no way to RE-REPLICATE: a
     * lost node permanently halved those rows' redundancy, one more
     * failure from data loss. [[graft.operators.ReplicatedRows.recoverLost]]
-    * carries ReplicatedCodes' promotion/re-replication laws VERBATIM to
-    * the generic row placement (same vec ring, same walk): replica rows
+    * is the row placement's promotion/re-replication (the same vec
+    * ring and walk every vector store uses): replica rows
     * of the lost node's primaries PROMOTE wholesale, every id the lost
     * node hosted re-replicates at the S−1 ring from a surviving copy,
     * everything else passes key-untouched — run across ALL THREE
@@ -2432,8 +2412,8 @@ object Vectors {
     * partition law.
     *
     * Scale: recovery touches the lost node's hosted rows only (~2/S of
-    * each store: filters + one broadcast ring join over the hosted id
-    * list + |hosted|-sized unions); the serve is q280's posture
+    * each store: filters + one broadcast ring join over the hosted
+    * rows + |hosted|-sized unions); the serve is q280's posture
     * unchanged. */
   val q320 = Q(
     "q320_replicated_graph_recovery",
@@ -2493,8 +2473,8 @@ object Vectors {
     },
     q280.oracle, // the single-copy two-layer replay — neither loss enters
     doc = "X123a: replicated graph ANN loss -> re-replication -> second " +
-      "failover — ReplicatedCodes' promotion/re-replication laws " +
-      "carried to the generic row placement across all three co-placed " +
+      "failover — ReplicatedRows' promotion/re-replication laws " +
+      "across all three co-placed " +
       "stores; the recovered 3-ring tier fails over ANOTHER node and " +
       "the iterative layered beam search still answers identically " +
       "(q280's oracle gates it bit for bit; neither loss enters it)")
@@ -2507,8 +2487,7 @@ object Vectors {
     * the withheld rows (placement is a pure ring function, so appended
     * rows of existing ids land on established homes — the graph-append
     * composition, q240's verb on the placement), [[ReplicatedRows.grow]]
-    * 3 → 4 index-only (ReplicatedCodes' move classes on generic
-    * frames), then [[ReplicatedRows.takedown]] of % 7 = 3 (one
+    * 3 → 4 index-only (ReplicatedRows' move classes), then [[ReplicatedRows.takedown]] of % 7 = 3 (one
     * anti-join per copy). Rows are atomic ⇒ the maintained pair ≡ a
     * from-scratch build at the final ring over the post-maintenance
     * row set — the oracle replays the quantization and BOTH
@@ -2518,8 +2497,8 @@ object Vectors {
     * ReplicatedRowsSpec pins each verb's set law, the move classes,
     * the grow∘recoverLost round trip and append co-location.
     *
-    * Scale: append = build over the |delta| only; grow = broadcast
-    * ring join over the distinct id list + mover-sized re-keys;
+    * Scale: append = build over the |delta| only; grow = one
+    * broadcast ring join of the primary rows, no exchange;
     * takedown = anti-joins on the compact id key; payload arrays ride
     * untouched (never re-quantized). */
   val q321 = Q(
@@ -2584,7 +2563,7 @@ object Vectors {
       ORDER BY store, node, origin, vec_id"""),
     doc = "X123b: ReplicatedRows lifecycle — append (withheld rows " +
       "place at established ring homes), grow 3->4 index-only " +
-      "(ReplicatedCodes' move classes on generic frames), takedown " +
+      "(ReplicatedRows' move classes), takedown " +
       "(one anti-join per copy); maintained == from-scratch 4-ring " +
       "build over the post-maintenance rows, row for row (the oracle " +
       "replays quantization + both ring slots in closed form; none of " +
@@ -2695,7 +2674,7 @@ object Vectors {
     * form; none of the verbs enters it. Hash-matched at all 3 SFs.
     *
     * Scale: training is the q222 cost at ingest; append = |delta|
-    * pointwise encodes + the ring join over the delta id list;
+    * pointwise encodes + the ring join over the delta rows;
     * takedown = anti-joins on the compact vec_id key; the 2× row cost
     * is replication's constant. */
   val q323 = Q(

@@ -1,139 +1,51 @@
 package graft.streaming
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
-import graft.core.Barriers._
+import graft.functions.VectorOps
 import graft.operators.ReplicatedCodes
+import graft.streaming.StreamingReplicatedRows.RrState
 
-/** Streaming REPLICATED ANN code store (SURVEY.md §2.9 T43, r17):
-  * q303's two-copy vector topology maintained under a stream — the
-  * vector-tier sibling of T39. Every production vector ingest writes
-  * its replica set per commit (Milvus/Qdrant ack after both copies),
-  * so a node can die at ANY instant and ANN serving routes around it
-  * with the candidate set unchanged. Per micro-batch of raw
-  * `(vec_id, embedding)` rows:
-  *
-  *   - the T26 exactly-once discipline (dedup + anti-join against the
-  *     accumulated seen-id set);
-  *   - fresh vectors quantize IN-STREAM with q286's deterministic SQ8
-  *     (per-vec exact-millis scale, round-half-up codes — no global
-  *     state, so the stream needs no frozen model);
-  *   - placement via [[ReplicatedCodes.build]]'s preference list; both
-  *     copies' rows APPEND (rows are atomic — no segments, no merge,
-  *     the row-store simplification of T39's shape), re-barriered on a
-  *     compaction cadence so the union plan stays bounded.
-  *
-  * Serving at any instant routes like q303: primary-only, or failover
-  * of ANY node (candidate-invariant — code distance is per-pair, no
-  * stats step). StreamingSpec T43 pins failover of EVERY node ≡ the
-  * primary serve after EVERY wave, replay no-ops, the mid-stream GROW
-  * (q302's classes on rows, ingest continuing at the grown ring), and
-  * the final stores ≡ [[ReplicatedCodes.build]] over every delivered
-  * vector as SETS.
-  *
-  * Scale: per batch O(|delta|·2) quantize+place (the write
-  * amplification replication always costs); the ring join is the
-  * broadcast doubled-ring device over the batch's ids; serving streams
-  * the routed selection once per broadcast query set. */
+/** Streaming replicated SQ8 code store (StreamingSpec T43): q303's
+  * two-copy code store maintained under a stream, so a node can die at
+  * any instant and serving routes around it with the candidate set
+  * unchanged. It is q286's SQ8 encode in front of
+  * [[StreamingReplicatedRows]] over `(vec_id, am, qv)` rows: the
+  * per-vector scale makes encoding stateless, so each micro-batch of raw
+  * `(vec_id, embedding)` rows encodes in-stream with no frozen model,
+  * and the exactly-once discipline, both copies' appends, compaction
+  * and the mid-stream grow are the row placement's. Serving is
+  * [[ReplicatedCodes]]' over the accumulated stores. */
 object StreamingReplicatedCodes {
 
-  val CompactEvery = 4
-
-  final case class RcState(primary: DataFrame, replica: DataFrame,
-      seenIds: DataFrame, nShards: Int, batches: Int = 0)
-
-  def freeze(spark: org.apache.spark.sql.SparkSession,
-      nShards: Int): RcState = {
-    import org.apache.spark.sql.types.{StructType, StructField,
-      ArrayType, ByteType}
-    def empty(schema: StructType) = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    val pSchema = StructType(Seq(
-      StructField("shard", LongType), StructField("vec_id", LongType),
-      StructField("am", LongType),
-      StructField("qv", ArrayType(ByteType))))
-    val rSchema = StructType(Seq(
-      StructField("node", LongType), StructField("origin", LongType),
-      StructField("vec_id", LongType), StructField("am", LongType),
-      StructField("qv", ArrayType(ByteType))))
-    RcState(empty(pSchema), empty(rSchema),
-      empty(StructType(Seq(StructField("vec_id", LongType)))), nShards)
+  def freeze(spark: SparkSession, nShards: Int): RrState = {
+    import spark.implicits._
+    val none = Seq.empty[(Long, Seq[Float])].toDF("vec_id", "embedding")
+    StreamingReplicatedRows.freeze(VectorOps.sq8Codes(none), "vec_id",
+      nShards)
   }
 
   /** Apply one micro-batch of `(vec_id, embedding)` rows. */
-  def applyBatch(state: RcState, delta: DataFrame): RcState = {
-    val s = delta.sparkSession
-    import s.implicits._
-    val fresh = delta
+  def applyBatch(state: RrState, delta: DataFrame): RrState =
+    StreamingReplicatedRows.applyBatch(state, VectorOps.sq8Codes(delta
       .select(col(delta.columns.head).cast("long").as("vec_id"),
         col(delta.columns(1)).as("embedding"))
-      .dropDuplicates("vec_id")
-      .join(state.seenIds, Seq("vec_id"), "left_anti")
-      .barrier()
-    val nBatches = state.batches + 1
-    val (prim, repl) =
-      if (fresh.isEmpty) (state.primary, state.replica)
-      else {
-        // q286's deterministic SQ8 — stateless, so encode mid-stream
-        val codes = fresh
-          .select($"vec_id", $"embedding",
-            graft.functions.VectorOps.absMax($"embedding").as("amax"))
-          .select($"vec_id",
-            rint($"amax" * lit(1e3)).cast(LongType).as("am"),
-            graft.functions.VectorOps.quantize8($"embedding", $"amax")
-              .as("qv"))
-        val rep = ReplicatedCodes.build(codes, state.nShards)
-        (state.primary.unionByName(rep.primaryStore.barrier()),
-          state.replica.unionByName(rep.replicaStore.barrier()))
-      }
-    val seenUnion = state.seenIds.unionByName(fresh.select($"vec_id"))
-    if (nBatches % CompactEvery == 0)
-      RcState(prim.barrier(), repl.barrier(),
-        seenUnion.distinct().barrier(), state.nShards, nBatches)
-    else RcState(prim, repl, seenUnion, state.nShards, nBatches)
-  }
+      .dropDuplicates("vec_id")))
 
-  /** A node joins MID-STREAM: q302's grow classes on the accumulated
-    * rows (the assignment recomputes deterministically from the stored
-    * vec ids — no assignment state is carried across batches); later
-    * batches place at the grown ring. */
-  def grow(state: RcState): RcState = {
-    val s = state.primary.sparkSession
-    import s.implicits._
-    val ids = state.primary.select($"vec_id".as("doc_id"))
-      .withColumn("p", ReplicatedCodes.position($"doc_id"))
-    val aOld = graft.operators.ReplicatedIndex
-      .assignPR(ids, state.nShards)
-      .select($"doc_id".as("vec_id"), $"primary", $"replica")
-    val grown = ReplicatedCodes.grow(
-      ReplicatedCodes.ReplicatedC(aOld, state.primary, state.replica,
-        state.nShards),
-      state.nShards)
-    RcState(grown.primaryStore.barrier(), grown.replicaStore.barrier(),
-      state.seenIds, state.nShards + 1, state.batches)
-  }
+  /** A node joins mid-stream; later batches place at the grown ring. */
+  def grow(state: RrState): RrState = StreamingReplicatedRows.grow(state)
 
-  private def asRep(state: RcState): ReplicatedCodes.ReplicatedC = {
-    val s = state.primary.sparkSession
-    import s.implicits._
-    // assignments derive from the stores (primary shard per vec; the
-    // replica store carries (node, origin) per vec)
-    val a = state.primary.select($"vec_id", $"shard".as("primary"))
-      .join(state.replica.select($"vec_id", $"node".as("replica")),
-        "vec_id")
-    ReplicatedCodes.ReplicatedC(a, state.primary, state.replica,
-      state.nShards)
-  }
+  private def store(state: RrState) =
+    ReplicatedCodes.ReplicatedC(state.primary, state.replica, state.nShards)
 
   /** Stage-1 candidates off the PRIMARY copies. `queries` is the
     * broadcastable (q_id, q_am, q_qv) set. */
-  def servePrimary(state: RcState, queries: DataFrame, k: Int): DataFrame =
-    ReplicatedCodes.servePrimary(asRep(state), queries, k)
+  def servePrimary(state: RrState, queries: DataFrame, k: Int): DataFrame =
+    ReplicatedCodes.servePrimary(store(state), queries, k)
 
-  /** Node `failed` is down RIGHT NOW: q303's routed selection over the
+  /** Node `failed` is down right now: q303's routed selection over the
     * accumulated rows. */
-  def serveFailover(state: RcState, failed: Long, queries: DataFrame,
+  def serveFailover(state: RrState, failed: Long, queries: DataFrame,
       k: Int): DataFrame =
-    ReplicatedCodes.serveFailover(asRep(state), failed, queries, k)
+    ReplicatedCodes.serveFailover(store(state), failed, queries, k)
 }

@@ -9,11 +9,11 @@ import graft.operators.ReplicatedRows
   * generic atomic-row tier — the placement under the graph ANN's three
   * row stores (q318/q320) and the replicated IVF-PQ rows (q322/q323) —
   * maintained under a stream. T39 streams the text topology's BLOCK
-  * stores and T43 the SQ8 code rows with in-stream quantization; this
-  * member is payload-AGNOSTIC: any (id, payload…) rows place on the
-  * vec ring with both copies per micro-batch, so every row store built
-  * on [[ReplicatedRows]] inherits a streaming ingest for free. Per
-  * batch:
+  * stores; this member is payload-AGNOSTIC: any (id, payload…) rows
+  * place on the vec ring with both copies per micro-batch, so every
+  * row store built on [[ReplicatedRows]] inherits a streaming ingest
+  * ([[StreamingReplicatedCodes]], T43, is this with an SQ8 encode in
+  * front). Per batch:
   *
   *   - the T26 exactly-once discipline at the ID grain: a replayed
   *     id's rows ALL drop (ids are the placement key; one id's payload
@@ -41,8 +41,9 @@ import graft.operators.ReplicatedRows
   *
   * Scale: per batch O(|delta| · 2) — the write amplification
   * replication always costs — plus one broadcast ring join over the
-  * delta's distinct ids; compaction keeps the union plans bounded;
-  * grow is index-only (mover-sized re-keys), takedown two anti-joins. */
+  * delta's rows; compaction keeps the union plans bounded; grow is
+  * index-only (one ring join of the primary rows), takedown two
+  * anti-joins. */
 object StreamingReplicatedRows {
 
   /** Compaction cadence — the union-plan bound. */

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
 import graft.core.Barriers._
 
 /** Streaming SQ8 index (SURVEY.md §2.9 T36): q286's quantized serving
@@ -37,15 +36,6 @@ object StreamingSq {
   final case class SqState(codes: DataFrame, seenIds: DataFrame,
                            batches: Int = 0)
 
-  /** q286's ingest: per-vector exact-millis scale + int8 codes. */
-  def encode(emb: DataFrame): DataFrame =
-    emb.select(col("vec_id"), col("embedding"),
-        graft.functions.VectorOps.absMax(col("embedding")).as("amax"))
-      .select(col("vec_id"),
-        rint(col("amax") * lit(1e3)).cast(LongType).as("am"),
-        graft.functions.VectorOps.quantize8(col("embedding"), col("amax"))
-          .as("qv"))
-
   def freeze(spark: org.apache.spark.sql.SparkSession): SqState = {
     import org.apache.spark.sql.types._
     val empty = (s: StructType) => spark.createDataFrame(
@@ -67,7 +57,8 @@ object StreamingSq {
       .join(state.seenIds, Seq("vec_id"), "left_anti")
       .barrier()
     val nBatches = state.batches + 1
-    val codes0 = state.codes.unionByName(encode(fresh))
+    val codes0 = state.codes.unionByName(
+      graft.functions.VectorOps.sq8Codes(fresh))
     val seen0 = state.seenIds.unionByName(fresh.select(col("vec_id")))
     val (codes, seen) =
       if (nBatches % CompactEvery == 0)

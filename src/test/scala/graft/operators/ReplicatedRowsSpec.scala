@@ -14,7 +14,9 @@ import org.apache.spark.sql.functions._
   *  - traversal invariance: a layered beam search over the failover
   *    selection equals the single-copy search for EVERY failed node on
   *    a planted graph (iterative reads — one lost row changes paths,
-  *    so this is not implied by any single-scan argument).
+  *    so this is not implied by any single-scan argument);
+  *  - copy agreement: every verb leaves the replica, re-keyed to its
+  *    origin, equal to the primary as a multiset.
   */
 class ReplicatedRowsSpec extends SparkSpecBase {
   import spark.implicits._
@@ -205,10 +207,37 @@ class ReplicatedRowsSpec extends SparkSpecBase {
 
   test("build fails fast on payload columns colliding with placement " +
     "keys") {
-    val bad = Seq((1L, 2L)).toDF("v", "shard")
-    val e = intercept[IllegalArgumentException] {
-      ReplicatedRows.build(bad, "v", 4)
+    for (key <- Seq("shard", "p")) {
+      val bad = Seq((1L, 2L)).toDF("v", key)
+      val e = intercept[IllegalArgumentException] {
+        ReplicatedRows.build(bad, "v", 4)
+      }
+      assert(e.getMessage.contains("collide"), s"payload column $key")
     }
-    assert(e.getMessage.contains("collide"))
+  }
+
+  test("copy agreement: after every verb the replica re-keyed to its " +
+    "origin equals the primary as a multiset") {
+    val (p, r) = ReplicatedRows.build(edges, "v", 4)
+    // (3, 4) repeats an existing edge, so the check is a multiset one
+    val extra = Seq((3L, 4L), (3L, 30L), (77L, 2L)).toDF("v", "u")
+    val verbs = Seq(
+      "build" -> ((p, r)),
+      "append" -> ReplicatedRows.append(p, r, extra, "v", 4),
+      "update" -> ReplicatedRows.update(p, r,
+        Seq((7L, 50L), (88L, 3L)).toDF("v", "u"), "v", 4),
+      "takedown" -> ReplicatedRows.takedown(p, r, "v",
+        Seq(5L, 17L, 999L).toDF("v")),
+      "grow" -> ReplicatedRows.grow(p, r, "v", 4),
+      "recoverLost" -> ReplicatedRows.recoverLost(p, r, "v", 4))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(x => (x.getLong(0), x.getLong(1), x.getLong(2)))
+        .toSeq.sorted
+    for ((verb, (p2, r2)) <- verbs) {
+      val prim = rows(p2.select($"shard", $"v", $"u"))
+      assert(prim.nonEmpty, s"$verb left an empty primary")
+      assert(rows(r2.select($"origin", $"v", $"u")) === prim,
+        s"after $verb the replica's payloads diverge from the primary's")
+    }
   }
 }

@@ -2518,7 +2518,7 @@ class StreamingSpec extends SparkSpecBase {
       .as[(Long, Array[Float])].collect().toSeq.sortBy(_._1)
     import graft.core.Barriers._
     // frozen probe set: the first 4 vectors' own codes (q286's shape)
-    val queries = StreamingSq.encode(
+    val queries = graft.functions.VectorOps.sq8Codes(
         emb.filter(_._1 < 4).toDF("vec_id", "embedding"))
       .select($"vec_id".as("q_id"), $"am".as("q_am"), $"qv".as("q_qv"))
       .barrier()
@@ -2540,7 +2540,7 @@ class StreamingSpec extends SparkSpecBase {
       delivered = delivered ++ w
       // maintained == rebuilt EXACTLY — per-vector scales are stateless
       val rebuilt = StreamingSq.SqState(
-        StreamingSq.encode(delivered.toDF("vec_id", "embedding")),
+        graft.functions.VectorOps.sq8Codes(delivered.toDF("vec_id", "embedding")),
         st.seenIds, st.batches)
       assert(probe(st) === probe(rebuilt),
         s"maintained code store diverged from rebuilt after wave $i")
@@ -2560,7 +2560,7 @@ class StreamingSpec extends SparkSpecBase {
     val surv = delivered.filterNot(d => deadIds.contains(d._1))
     assert(st.codes.count() === surv.length.toLong)
     val rebuiltSurv = StreamingSq.SqState(
-      StreamingSq.encode(surv.toDF("vec_id", "embedding")),
+      graft.functions.VectorOps.sq8Codes(surv.toDF("vec_id", "embedding")),
       st.seenIds, st.batches)
     assert(probe(st) === probe(rebuiltSurv),
       "post-takedown probe != rebuilt-over-survivors probe")
