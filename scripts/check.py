@@ -50,10 +50,12 @@ def main():
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sfdir}/{t}.parquet')")
     oracle = json.load(open(os.path.join(outdir, "oracle_sql.json")))
-    failed = []
-    for name in sorted(oracle):
-        if only and name not in only:
-            continue
+    unknown = sorted(only - set(oracle))
+    for name in unknown:
+        print(f"FAIL {name}: not in oracle_sql.json")
+    checked = sorted(n for n in oracle if not only or n in only)
+    failed = list(unknown)
+    for name in checked:
         files = glob.glob(os.path.join(outdir, name, "*.parquet"))
         if not files:
             print(f"FAIL {name}: no spark output")
@@ -95,7 +97,8 @@ def main():
             failed.append(name)
         else:
             print(f"PASS {name} ({len(mine)} rows)")
-    print(f"\n{len(oracle) - len(failed)}/{len(oracle)} queries match")
+    total = len(checked) + len(unknown)
+    print(f"\n{total - len(failed)}/{total} queries match")
     sys.exit(1 if failed else 0)
 
 

@@ -7,7 +7,7 @@ import org.apache.spark.sql.DataFrame
   * `localCheckpoint` barriers).
   *
   * Every iterative operator here (ConnectedComponents, Bfs, PageRank,
-  * KCore, KMeansInt, ProductQuantizer, BpeVocab) and every
+  * KCore, BpeVocab) and every
   * multi-consumer pipeline stage (Winnowing, SemDeDup, the dedup and
   * corpus pipelines) needs a point where lineage is CUT — without it,
   * round N's plan nests every prior round's join (analysis cost grows
@@ -38,8 +38,8 @@ import org.apache.spark.sql.DataFrame
   * at test scale the barriered frames are KBs, so the extra
   * write+read is invisible. The structural cost that DOES appear at
   * corpus scale is one durable-FS write + read of each barriered
-  * frame per round; iterative operators barrier only k·dims-long
-  * centroid/label tables (never the corpus), so the per-round tax
+  * frame per round; iterative operators barrier only state-sized
+  * label and rank tables (never the corpus), so the per-round tax
   * stays proportional to the STATE, not the data.
   */
 object Barriers {

@@ -3,9 +3,9 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Incremental IVF-PQ index maintenance (SURVEY.md §2.11a X97 — the
-  * r9→r11 verdict item): append a vector batch to an ALREADY-BUILT
-  * index without retraining or touching one indexed vector.
+/** Incremental IVF-PQ index maintenance (SURVEY.md §2.11a X97):
+  * append a vector batch to an ALREADY-BUILT index without retraining
+  * or touching one indexed vector.
   *
   * The q213/q139 maintenance law, applied to the ANN family: both
   * halves of the index model are FROZEN at append time — the coarse
@@ -34,10 +34,13 @@ import org.apache.spark.sql.functions._
   * mutation — generations swap atomically, q139's posture.
   * IvfPqIndexSpec pins the instrumentation on stationary testdata.
   *
-  * Scale shape: the delta is scanned once; both models broadcast
-  * (k-row and m·k-row tables); per-vector work is one argmin + m
-  * grouped argmins; NOTHING about the frozen corpus is read at all —
-  * the append costs O(|delta|), the property that makes daily shard
+  * Scale shape: the delta is scanned once; both frozen tables are
+  * collected to the driver (they are k-row and m·k-row local
+  * relations) and broadcast; per vector, [[KMeansInt.nearest]] (as
+  * the native [[graft.expressions.NearestCentroid]]) takes the coarse
+  * argmin and the m subspace argmins in place — a pointwise
+  * projection with no join and no exchange. NOTHING about the frozen corpus is read at all — the
+  * append costs O(|delta|), the property that makes daily shard
   * landings on a 100 TB index affordable.
   */
 object IvfPqIndex {
@@ -45,26 +48,18 @@ object IvfPqIndex {
   /** Append `delta` under a frozen model: `(idCol, cell, cell_dist,
     * codes)` — the coarse cell each new vector files under, its exact
     * coarse distortion (the retrain-trigger evidence), and its m-code
-    * PQ row, all computed with [[KMeansInt.assign]] /
-    * [[ProductQuantizer.encode]] against the FROZEN tables.
+    * PQ row, all computed with [[KMeansInt.nearest]] against the
+    * FROZEN tables (the same codes as [[ProductQuantizer.encode]]).
     *
     * @param coarseCents frozen coarse centroids (cluster, cq)
     * @param codebooks   frozen PQ codebooks (sub, cluster, cq)
     */
   def appendToIndex(delta: DataFrame, idCol: String, vecCol: String,
                     coarseCents: DataFrame, codebooks: DataFrame,
-                    m: Int, subDims: Int): DataFrame = {
-    val dq = delta.select(col(idCol), KMeansInt.quantize(col(vecCol)).as("xq"))
-    val cells = KMeansInt.assign(dq, idCol, coarseCents)
-      .select(col(idCol), col("cluster").as("cell"),
-        col("dist").as("cell_dist"))
-    val codes = ProductQuantizer.encode(
-      ProductQuantizer.subVectors(delta, idCol, vecCol, m, subDims),
-      idCol, codebooks)
-    cells.join(codes, idCol)
-  }
+                    m: Int, subDims: Int): DataFrame =
+    append(delta, idCol, vecCol, coarseCents, codebooks, m, subDims, None)
 
-  /** The maintenance law's DELETE member (X102, r13 — takedown /
+  /** The maintenance law's DELETE member (X102 — takedown /
     * right-to-be-forgotten): drop an id set from an already-built
     * index without touching any other row or either frozen model
     * table. Because every index row is POINTWISE in its own vector
@@ -127,17 +122,26 @@ object IvfPqIndex {
     * the same `cell_dist` retrain trigger as the plain index. */
   def appendToResidualIndex(delta: DataFrame, idCol: String, vecCol: String,
                             coarseCents: DataFrame, residualBooks: DataFrame,
-                            m: Int, subDims: Int): DataFrame = {
-    val dq = delta.select(col(idCol), KMeansInt.quantize(col(vecCol)).as("xq"))
-    val cells = KMeansInt.assign(dq, idCol, coarseCents)
-      .select(col(idCol), col("cluster"), col("dist").as("cell_dist"))
-    val rv = ProductQuantizer.residuals(delta, idCol, vecCol,
-      cells.select(col(idCol), col("cluster")), coarseCents)
-    val codes = ProductQuantizer.encode(
-      ProductQuantizer.subVectorsQ(rv.select(col(idCol), col("xq")),
-        idCol, m, subDims),
-      idCol, residualBooks)
-    cells.select(col(idCol), col("cluster").as("cell"), col("cell_dist"))
-      .join(codes, idCol)
+                            m: Int, subDims: Int): DataFrame =
+    append(delta, idCol, vecCol, coarseCents, residualBooks, m, subDims,
+      Some(20000L))
+
+  /** Both appends as one pointwise projection: coarse argmin, then
+    * (for the residual index) `xq − centroid + shift` — the
+    * [[ProductQuantizer.residuals]] arithmetic — then the m codes. */
+  private def append(delta: DataFrame, idCol: String, vecCol: String,
+                     coarseCents: DataFrame, codebooks: DataFrame,
+                     m: Int, subDims: Int, residualShift: Option[Long]): DataFrame = {
+    val sc = delta.sparkSession.sparkContext
+    val coarse = sc.broadcast(Map(0 -> KMeansInt.collectCents(coarseCents)))
+    val books = sc.broadcast(
+      ProductQuantizer.books(ProductQuantizer.collectCodebooks(codebooks)))
+    val xq = col("__xq")
+    val coded = residualShift.fold(xq)(shift =>
+      zip_with(xq, col("__c.cq"), (x, c) => x - c + lit(shift)))
+    delta.select(col(idCol), KMeansInt.quantize(col(vecCol)).as("__xq"))
+      .select(col(idCol), xq, KMeansInt.nearestCol(xq, lit(0), coarse).as("__c"))
+      .select(col(idCol), col("__c.cluster").as("cell"), col("__c.dist").as("cell_dist"),
+        ProductQuantizer.codesCol(coded, books, m, subDims).as("codes"))
   }
 }

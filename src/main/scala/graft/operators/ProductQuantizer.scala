@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.Barriers._
+import graft.operators.KMeansInt.Cents
 
 /** Product Quantization ANN (SURVEY.md §2.11a N35) — Jégou, Douze &
   * Schmid, "Product Quantization for Nearest Neighbor Search" (TPAMI
@@ -32,11 +33,13 @@ import graft.core.Barriers._
   * running the same algebra.
   *
   * Codebook training shape: ONE grouped k-means trains all `m`
-  * codebooks simultaneously — (id, sub, sxq) rows join the broadcast
-  * (sub, cluster, cq) centroid table on `sub`, argmin per (id, sub),
-  * update aggregates (sub, cluster, pos) — shuffle volume m·k·subDims
-  * longs per round, independent of corpus size. A per-subspace loop
-  * would run m sequential Spark jobs for no better plan.
+  * codebooks simultaneously through [[KMeansInt]]'s round, keyed by
+  * subspace — one seeding job, then one job per round: the (sub,
+  * cluster, cq) codebooks ship in a broadcast, each partition folds
+  * its (id, sub, sxq) rows into exact per-(sub, cluster) partial sums,
+  * and a state-sized (m·k·subDims longs) collect brings them back.
+  * Every argmin — training, [[encode]], [[encodeExpr]] and the IVF-PQ
+  * append — is [[KMeansInt.nearest]] over driver-held codebooks.
   */
 object ProductQuantizer {
 
@@ -79,65 +82,49 @@ object ProductQuantizer {
 
   /** Grouped k-means: `k` centroids per subspace, seeded per sub from
     * the `k` smallest ids (cluster id = seed rank 0..k-1 — id VALUES
-    * need not be contiguous), `rounds` assign/update cycles. Returns
-    * the codebook table (sub, cluster, cq). Empty clusters drop
-    * (KMeansInt's documented semantic, per subspace). */
+    * need not be contiguous), `rounds` assign/update cycles, run
+    * eagerly. Returns the codebook table (sub, cluster, cq) as a local
+    * relation. Empty clusters drop (KMeansInt's documented semantic,
+    * per subspace). */
   def trainCodebooks(sub: DataFrame, idCol: String,
                      k: Int, rounds: Int): DataFrame = {
-    // seed rank via an id-only distinct + k-row collect (sanctioned
-    // reduced collect): a per-sub row_number window would shuffle the
-    // ENTIRE m×N sub-frame just to pick m·k seed rows (r8 fix)
-    val seedIds = sub.select(col(idCol)).distinct()
-      .orderBy(col(idCol)).limit(k)
-      .collect().map(_.getLong(0)).sorted
-    val rank = map(seedIds.zipWithIndex.flatMap { case (id, r) =>
-      Seq(lit(id), lit(r)) }: _*)
-    val init = sub.filter(col(idCol).isInCollection(seedIds))
-      .select(col("sub"), element_at(rank, col(idCol)).cast("int").as("cluster"),
-        col("sxq").as("cq"))
-    (1 to rounds).foldLeft(init) { (cents, _) =>
-      // m·k·subDims longs — checkpoint keeps per-round plans flat
-      updateCents(assignCodes(sub, idCol, cents)).barrier()
-    }
+    val data = KMeansInt.vectors(
+      sub.select(col(idCol).cast("long"), col("sub"), col("sxq")))
+    val trained = try {
+      val seeds = KMeansInt.seedRows(data, k)
+      val rank = seeds.map(_._1).distinct.sorted.zipWithIndex.toMap
+      val init = seeds.groupBy(_._2).map { case (s, rows) =>
+        s -> KMeansInt.cents(rows.map { case (id, _, x) => (rank(id), x) }) }
+      KMeansInt.train(data, init, rounds)
+    } finally data.unpersist(blocking = false)
+    KMeansInt.centsFrame(sub.sparkSession, trained, withSub = true)
   }
 
-  /** Nearest-centroid code per (vector, subspace): the argmin is a
-    * map-side-combinable `min(struct(d, cluster, sxq))` — IvfAnn's
-    * device — so the k candidate rows per (id, sub) collapse BEFORE
-    * the exchange; a row_number window here would shuffle the
-    * k-times-expanded candidate set instead (r8 fix, the IvfAnn
-    * scaladoc's argument applied to the grouped form). Lexicographic
-    * struct order = exact-BIGINT distance ranking with ties to the
-    * smallest code; `sxq` trails as payload and can never influence
-    * the order (cluster ids are unique within a group). */
-  private def assignCodes(sub: DataFrame, idCol: String,
-                          cents: DataFrame): DataFrame =
-    sub.join(broadcast(cents), "sub")
-      .withColumn("__d", KMeansInt.sqDist(col("sxq"), col("cq")))
-      .groupBy(col(idCol), col("sub"))
-      .agg(min(struct(col("__d").as("d"), col("cluster").as("c"),
-        col("sxq").as("v"))).as("__m"))
-      .select(col(idCol), col("sub"), col("__m.c").as("cluster"),
-        col("__m.d").as("dist"), col("__m.v").as("sxq"))
+  /** (sub, cluster, cq) codebook rows as one [[KMeansInt.Cents]] per
+    * subspace. */
+  private[operators] def books(rows: Seq[(Int, Int, Array[Long])]): Map[Int, Cents] =
+    rows.groupBy(_._1).map { case (s, rs) =>
+      s -> KMeansInt.cents(rs.map(r => (r._2, r._3))) }
 
-  private def updateCents(assigned: DataFrame): DataFrame =
-    assigned.select(col("sub"), col("cluster"),
-        posexplode(col("sxq")).as(Seq("pos", "v")))
-      .groupBy(col("sub"), col("cluster"), col("pos"))
-      .agg(sum(col("v")).as("s"), count(lit(1)).as("n"))
-      .withColumn("q", expr("s div n"))
-      .groupBy(col("sub"), col("cluster"))
-      .agg(transform(array_sort(collect_list(struct(col("pos"), col("q")))),
-        c => c.getField("q")).as("cq"))
+  /** The m codes of a full vector column: subspace `s` codes the slice
+    * `[s·subDims, (s+1)·subDims)` against `books(s)`. */
+  private[operators] def codesCol(xq: Column, books: Broadcast[Map[Int, Cents]],
+                                  m: Int, subDims: Int): Column =
+    array((0 until m).map(s => KMeansInt.nearestCol(xq, lit(s), books,
+      Some((s * subDims, subDims))).getField("cluster")): _*)
 
   /** Encode the corpus: (idCol, codes array<int>, one code per
     * subspace in sub order). This is the m-byte representation the
-    * 100 TB corpus actually stores. */
-  def encode(sub: DataFrame, idCol: String, cents: DataFrame): DataFrame =
-    assignCodes(sub, idCol, cents)
+    * 100 TB corpus actually stores. Each (id, sub) row codes
+    * pointwise; the one exchange regroups the m codes per id. */
+  def encode(sub: DataFrame, idCol: String, cents: DataFrame): DataFrame = {
+    val bc = sub.sparkSession.sparkContext.broadcast(books(collectCodebooks(cents)))
+    sub.select(col(idCol), col("sub"),
+        KMeansInt.nearestCol(col("sxq"), col("sub"), bc).getField("cluster").as("cluster"))
       .groupBy(col(idCol))
       .agg(transform(array_sort(collect_list(struct(col("sub"), col("cluster")))),
         c => c.getField("cluster")).as("codes"))
+  }
 
   /** Per-query ADC lookup tables: q_id → flat array indexed
     * `sub*k + code` of exact query→centroid BIGINT distances. |Q|·m·k
@@ -183,11 +170,11 @@ object ProductQuantizer {
     adcFromLut(element_at(map(entries: _*), qId), codes, m, k)
   }
 
-  /** The per-query ADC lookup tables as DATA rows, never on the driver
-    * (r8 verdict item 3): (q_id, __lut) where __lut[sub·k + code] is
-    * the exact BIGINT query→centroid distance, Long.MaxValue on
-    * never-assigned (dropped-empty-cluster) codes — byte-identical
-    * content to [[buildLuts]], built by one m·k-row-per-query
+  /** The per-query ADC lookup tables as DATA rows, never on the
+    * driver: (q_id, __lut) where __lut[sub·k + code] is the exact
+    * BIGINT query→centroid distance, Long.MaxValue on never-assigned
+    * (dropped-empty-cluster) codes — byte-identical content to
+    * [[buildLuts]], built by one m·k-row-per-query
     * aggregate and consumed through a broadcast join. This lifts the
     * literal path's |Q| bound: a thousand-query batch is a thousand
     * 32-long broadcast rows instead of |Q|·m·k plan literals (whose
@@ -239,26 +226,16 @@ object ProductQuantizer {
     cents.select(col("sub"), col("cluster"), col("cq")).collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Long](2).toArray)).toSeq
 
-  /** Per-ROW PQ encoding against a FROZEN codebook inlined as
-    * literals: for each subspace, exact BIGINT distances to its k
-    * centroids, argmin by (d, cluster) via lexicographic struct min —
-    * identical codes to [[encode]], but STATELESS and shuffle-free,
-    * so a live vector stream encodes in append mode against the last
-    * trained codebooks (T18 — the retrain-batch / encode-stream
-    * deployment; the same pattern as T17's frozen quality weights). */
+  /** Per-ROW PQ encoding of a full quantized vector against a FROZEN
+    * codebook: identical codes to [[encode]], but STATELESS and
+    * shuffle-free, so a live vector stream encodes in append mode
+    * against the last trained codebooks (T18 — the retrain-batch /
+    * encode-stream deployment; the same pattern as T17's frozen
+    * quality weights). Given no frame, it broadcasts the books through
+    * the active session. */
   def encodeExpr(codebooks: Seq[(Int, Int, Array[Long])],
                  m: Int, subDims: Int, xq: Column): Column =
-    array((0 until m).map { s =>
-      val cands = codebooks.filter(_._1 == s).sortBy(_._2).map {
-        case (_, cid, cq) =>
-          val d = (0 until subDims).map { i =>
-            val diff = element_at(xq, s * subDims + i + 1) - lit(cq(i))
-            diff * diff
-          }.reduce(_ + _)
-          struct(d.as("d"), lit(cid).as("c"))
-      }
-      array_min(array(cands: _*)).getField("c")
-    }: _*)
+    codesCol(xq, SparkSession.active.sparkContext.broadcast(books(codebooks)), m, subDims)
 
   /** ADC top-k: exact per-query lookup tables over the codebooks, then
     * ONE zero-shuffle projection scores every encoded vector against

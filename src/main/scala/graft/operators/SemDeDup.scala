@@ -15,9 +15,9 @@ import graft.core.Barriers._
   *
   * Scale posture (reference behavior: `/root/reference/README.md:89-94`
   * describes the embedding surface this curates):
-  *   - clustering is [[KMeansInt]]: per round one BROADCAST of the
-  *     k-row centroid table against the corpus — vectors never shuffle
-  *     for assignment;
+  *   - clustering is [[KMeansInt]]: one job per round, the k-row
+  *     centroid table broadcast against the corpus and k·dims partial
+  *     sums collected back — vectors never shuffle;
   *   - the pair stage shuffles each vector ONCE on its cluster id and
   *     compares within clusters only. That bounds pair work at
   *     Σ |cluster|² — which is only a bound if cluster sizes are
@@ -59,8 +59,10 @@ object SemDeDup {
     * split across cluster boundaries are never compared) for cheaper
     * pairing; the paper runs ~100k clusters over 5 B examples, i.e.
     * target ≈ 50k on a corpus whose near-dup rate justifies it. maxK
-    * caps the centroid table the assignment step broadcasts (65 536
-    * centroids × 64 dims × 8 B = 32 MB, the broadcast comfort limit).
+    * caps the centroid table each KMeansInt round and the final
+    * assignment ship in a `sparkContext.broadcast` and each round
+    * collects back as per-cluster sums (65 536 centroids × 64 dims ×
+    * 8 B = 32 MB, the broadcast comfort limit).
     */
   def chooseK(n: Long, targetClusterSize: Long = 1024L,
               minK: Int = 8, maxK: Int = 1 << 16): Int = {

@@ -160,7 +160,7 @@ object Curation {
     * running the same algebra in SQL.
     *
     * Oracle seeding: [[KMeansInt.cluster]] seeds from the k SMALLEST
-    * ids (`orderBy(id).limit(k)`), and since r8 the DuckDB twin spells
+    * ids, and since r8 the DuckDB twin spells
     * exactly that (`ORDER BY vec_id LIMIT 8`), so the two engines agree
     * on ANY id set — including the gap-ridden survivor subsets q190
     * clusters (the old `vec_id < 8` shortcut assumed contiguous
@@ -177,7 +177,8 @@ object Curation {
       WITH $kmeansCtes8x2
       SELECT vec_id, cluster, d AS dist FROM a3 ORDER BY vec_id"""),
     doc = "N23: integer-exact k-means — iterative ML made hash-reproducible; " +
-      "broadcast centroids, shuffle volume k*dims longs per round")
+      "one job per round: broadcast centroids, per-partition exact sums, " +
+      "a k*dims-long collect")
 
   /** q119 — bounded multi-source BFS (X40) on the per-nation customer
     * chain graph (consecutive custkeys within a nation — the same

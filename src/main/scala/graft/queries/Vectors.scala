@@ -692,20 +692,16 @@ object Vectors {
       val delta = emb.filter($"vec_id" >= 384)
       val sub = ProductQuantizer
         .subVectors(frozen, "vec_id", "embedding", m = 8, subDims = 8)
-        .persist()
       // independent eager trainings, overlapped (guide §2.6, r19)
       val ((_, coarseCents), books) = Par.join2(
         KMeansInt.clusterWithCents(frozen, "vec_id", "embedding", k = 8, rounds = 2),
         ProductQuantizer.trainCodebooks(sub, "vec_id", k = 4, rounds = 2))
-      val appended = IvfPqIndex
+      IvfPqIndex
         .appendToIndex(delta, "vec_id", "embedding", coarseCents, books,
           m = 8, subDims = 8)
         .select($"vec_id", $"cell", $"cell_dist",
           posexplode($"codes").as(Seq("sub", "code")))
         .orderBy($"vec_id", $"sub")
-        .barrier() // eager, BEFORE unpersist — q193/q196's posture
-      sub.unpersist()
-      appended
     },
     Some(s"""
       WITH ${Curation.kmeansCtes8x2From(
@@ -842,9 +838,8 @@ object Vectors {
       val emb = Tables(s, dir, "embeddings")
       val frozen = emb.filter($"vec_id" < 384)
       val delta = emb.filter($"vec_id" >= 384)
-      val (_, cents0) =
+      val (_, cents) =
         KMeansInt.clusterWithCents(frozen, "vec_id", "embedding", k = 8, rounds = 2)
-      val cents = cents0.barrier()
       def cohort(df: org.apache.spark.sql.DataFrame, name: String,
                  vec: org.apache.spark.sql.Column) =
         KMeansInt.assign(df.select($"vec_id", vec.as("xq")), "vec_id", cents)
@@ -926,18 +921,17 @@ object Vectors {
       val frozen = emb.filter($"vec_id" < 384)
       val sub = ProductQuantizer
         .subVectors(frozen, "vec_id", "embedding", m = 8, subDims = 8)
-        .persist()
       // independent eager trainings, overlapped (guide §2.6, r19)
       val ((_, coarseCents), books) = Par.join2(
         KMeansInt.clusterWithCents(frozen, "vec_id", "embedding", k = 8, rounds = 2),
         ProductQuantizer.trainCodebooks(sub, "vec_id", k = 4, rounds = 2))
       // the full index under the frozen model (appendToIndex over the
-      // whole corpus IS the build — pointwise, q222's law)
+      // whole corpus IS the build — pointwise, q222's law); consumed
+      // twice below
       val index = IvfPqIndex
         .appendToIndex(emb, "vec_id", "embedding", coarseCents, books,
           m = 8, subDims = 8)
-        .barrier() // eager, BEFORE unpersist — q193/q196's posture
-      sub.unpersist()
+        .barrier()
       val deleted = emb.select($"vec_id").filter($"vec_id" % 13 === 5)
       val (live, stats) = IvfPqIndex.removeFromIndex(index, "vec_id", deleted)
       val rowW = live
@@ -1031,7 +1025,6 @@ object Vectors {
       val frozen = emb.filter($"vec_id" < 384)
       val sub = ProductQuantizer
         .subVectors(frozen, "vec_id", "embedding", m = 8, subDims = 8)
-        .persist()
       // independent eager trainings, overlapped (guide §2.6, r19)
       val ((_, coarseCents), books) = Par.join2(
         KMeansInt.clusterWithCents(frozen, "vec_id", "embedding", k = 8, rounds = 2),
@@ -1040,7 +1033,6 @@ object Vectors {
         .appendToIndex(emb, "vec_id", "embedding", coarseCents, books,
           m = 8, subDims = 8)
         .barrier()
-      sub.unpersist()
       val deleted = emb.select($"vec_id").filter($"vec_id" % 3 === 0)
       val (_, stats) = IvfPqIndex.removeFromIndex(index, "vec_id", deleted)
       val ppm = IvfPqIndex.deadFractionPpm(stats)

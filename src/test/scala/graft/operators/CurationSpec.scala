@@ -67,6 +67,36 @@ class CurationSpec extends SparkSpecBase {
     assert(got === 0)
   }
 
+  test("a KMeansInt training round costs exactly one Spark job") {
+    val s = spark
+    import s.implicits._
+    val vecs = (0L until 60L).map { i =>
+      (i, Array.tabulate(4)(d => ((i * 7 + d * 3) % 13).toFloat / 13f))
+    }.toDF("vec_id", "embedding").repartition(3)
+    def jobs(rounds: Int): Int = withJobCount(
+      KMeansInt.clusterWithCents(vecs, "vec_id", "embedding", k = 3, rounds))._2
+    assert(jobs(2) - jobs(1) === 1)
+  }
+
+  test("KMeansInt empty-cluster drop: of two identical seeds the larger " +
+    "id captures nothing, drops out, and is never assigned") {
+    val s = spark
+    import s.implicits._
+    // seeds 0 and 1 coincide, so every tie goes to cluster 0
+    val vecs = Seq(
+      (0L, Array(0.1f, 0.1f)), (1L, Array(0.1f, 0.1f)),
+      (2L, Array(0.9f, 0.9f)), (3L, Array(0.12f, 0.1f)),
+      (4L, Array(0.88f, 0.9f)), (5L, Array(0.5f, 0.5f))
+    ).toDF("vec_id", "embedding")
+    val (assigned, cents) =
+      KMeansInt.clusterWithCents(vecs, "vec_id", "embedding", k = 3, rounds = 2)
+    assert(cents.collect().map(_.getInt(0)).sorted.toSeq === Seq(0, 2))
+    val clusters = assigned.collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+    assert(clusters.size === 6)
+    assert(!clusters.values.exists(_ == 1))
+    assert(clusters(0L) === 0 && clusters(1L) === 0)
+  }
+
   // ---------------------------------------------------------------------- Bfs
 
   test("Bfs measures exact hop distances on a path and respects maxHops") {

@@ -148,4 +148,38 @@ class IvfPqIndexSpec extends SparkSpecBase {
     assert(deltaMean / frozenMean < 1.5,
       s"stationary delta reads as drifted: $deltaMean vs $frozenMean")
   }
+
+  test("a trainCodebooks round costs exactly one Spark job") {
+    val s = spark
+    import s.implicits._
+    val sub = ProductQuantizer.subVectors(
+      graft.core.Tables(s, sf, "embeddings").filter($"vec_id" < 384),
+      "vec_id", "embedding", m = 8, subDims = 8)
+    def jobs(rounds: Int): Int =
+      withJobCount(ProductQuantizer.trainCodebooks(sub, "vec_id", k = 4, rounds))._2
+    assert(jobs(2) - jobs(1) === 1)
+  }
+
+  test("trainCodebooks is invariant under input partitioning") {
+    val s = spark
+    import s.implicits._
+    val emb = graft.core.Tables(s, sf, "embeddings").filter($"vec_id" < 384)
+    def run(df: DataFrame) = ProductQuantizer.trainCodebooks(
+        ProductQuantizer.subVectors(df, "vec_id", "embedding", m = 8, subDims = 8),
+        "vec_id", k = 4, rounds = 2)
+      .collect().map(r => (r.getInt(0), r.getInt(1), r.getSeq[Long](2))).toSet
+    assert(run(emb.repartition(1)) === run(emb.repartition(7)))
+  }
+
+  test("appendToIndex is a pointwise projection: no Exchange in its plan") {
+    val s = spark
+    import s.implicits._
+    val (emb, cents, books) = frozenModel(sf)
+    val plan = IvfPqIndex.appendToIndex(emb.filter($"vec_id" >= 384),
+        "vec_id", "embedding", cents, books, m = 8, subDims = 8)
+      .queryExecution.executedPlan
+    val exchanges = plan.collect {
+      case e: org.apache.spark.sql.execution.exchange.Exchange => e }
+    assert(exchanges.isEmpty, plan.toString)
+  }
 }
