@@ -4,101 +4,25 @@ import org.apache.spark.sql.{DataFrame, Encoders}
 import org.apache.spark.sql.functions._
 import graft.core.Barriers._
 
-/** Connected components by iterative min-label propagation — the
-  * cluster-collapse step of a dedup pipeline (near-dup PAIRS from
-  * MinHash/SimHash become duplicate CLUSTERS; the pipeline keeps one
-  * representative per cluster).
-  *
-  * Algorithm (large-star/small-star simplified): every node starts
-  * labeled with its own id; each round, a node adopts the minimum label
-  * among itself and its neighbors; stop when no label changes. Rounds
-  * needed = graph diameter (near-dup clusters are tiny — a handful of
-  * rounds), each round one join + one aggregate on (node) — all
-  * shuffles on compact long keys. The driver-side loop only checks the
-  * convergence COUNT per round, never the data.
-  *
-  * One JOB per round: each node's previous label rides through the
-  * aggregate (it is the single non-null `prev` among the grouped rows),
-  * and the changed-node count is an `observe()` metric collected by the
-  * SAME action that materializes the round — not a second join+count
-  * job over the labels. At cluster scale that halves the per-round
-  * stage count and removes a full shuffle per round.
+/** Connected components — the cluster-collapse step of a dedup
+  * pipeline (near-dup PAIRS from MinHash/SimHash become duplicate
+  * CLUSTERS; the pipeline keeps one representative per cluster) and the
+  * closure of every representative-level graph in the engine. One
+  * verb, [[ConnectedComponents.labelStar]]: a partition-local union-find
+  * contraction, then large-star/small-star rounds only while the
+  * contracted edges are not yet a star forest. It returns
+  * `(id, component)` with component = the minimum reachable id.
   *
   * Deterministic: min over longs, no ordering sensitivity anywhere.
   */
 object ConnectedComponents {
 
-  /** @param edges undirected edge list with long columns (srcCol, dstCol)
-    * @param nodes one row per node id (isolated nodes keep themselves)
-    * @param maxRounds hard cap on propagation rounds; exceeding it THROWS
-    *   (an unconverged labeling is silently-wrong clusters — at scale
-    *   prefer a loud failure and a bigger cap over corrupt dedup output)
-    * @param checkpointInterval every this-many rounds the label frame is
-    *   `localCheckpoint`ed instead of persisted. persist() keeps the DATA
-    *   hot but the logical plan still chains through every prior round —
-    *   the plan grows ~3× per round (labels is referenced on both union
-    *   arms), driver-side ANALYSIS re-walks it on every Dataset
-    *   construction, and a lost partition at round k recomputes all k
-    *   rounds; checkpointing materializes the RDD and truncates lineage.
-    *   Default 1 (measured equal-or-faster than 5 even at 3-4 rounds).
-    *   Use checkpoint-with-dir on a real cluster for executor-loss
-    *   tolerance; localCheckpoint is the single-JVM form.
-    * @return (idCol, "component") — component = min node id reachable */
-  def label(nodes: DataFrame, idCol: String,
-            edges: DataFrame, srcCol: String, dstCol: String,
-            maxRounds: Int = 20, checkpointInterval: Int = 1): DataFrame = {
-    val sym = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .unionByName(edges.select(col(dstCol).as("src"), col(srcCol).as("dst")))
-      .distinct().persist()
-    var labels = nodes.select(col(idCol).as("node"), col(idCol).as("component"))
-      .persist()
-    var converged = false
-    var round = 0
-    while (!converged && round < maxRounds) {
-      // neighbor's current label, pulled across each edge; `prev` is
-      // null here and non-null exactly once per node (its own row), so
-      // max(prev) reconstructs the previous label group-side for free
-      val viaNeighbors = sym
-        .join(labels.withColumnRenamed("node", "dst2"), col("dst") === col("dst2"))
-        .select(col("src").as("node"), col("component"),
-          lit(null).cast("long").as("prev"))
-      val candidate = labels
-        .select(col("node"), col("component"), col("component").as("prev"))
-        .unionByName(viaNeighbors)
-        .groupBy(col("node"))
-        .agg(min(col("component")).as("component"), max(col("prev")).as("prev"))
-      val obs = new org.apache.spark.sql.Observation(s"cc_round_$round")
-      val observed = candidate
-        .observe(obs, sum(when(col("component") =!= col("prev"), 1L)
-          .otherwise(0L)).as("changed"))
-        .select(col("node"), col("component"))
-      // materializing action (eager checkpoint / persist+count) also
-      // fills the observation — one job per round, no convergence join
-      val next =
-        if ((round + 1) % checkpointInterval == 0) observed.barrier()
-        else { val p = observed.persist(); p.count(); p }
-      // sum over ZERO rows is null (degenerate empty node set)
-      val changed = Option(obs.get("changed")).fold(0L)(_.asInstanceOf[Long])
-      labels.unpersist()
-      labels = next
-      converged = changed == 0
-      round += 1
-    }
-    sym.unpersist()
-    require(converged,
-      s"connected components did not converge within $maxRounds rounds " +
-        "(component diameter exceeds the cap); raise maxRounds — returning " +
-        "partial labels would silently merge/split dedup clusters")
-    labels.select(col("node").as(idCol), col("component"))
-  }
-
   /** Connected components by the ALTERNATING large-star/small-star
     * algorithm (Kiveris et al., "Connected Components in MapReduce and
-    * Beyond", SoCC '14) — the scale upgrade over [[label]] for graphs
-    * whose diameter is not small: rounds are O(log² n) in the worst
-    * case (in practice a handful) instead of O(diameter), because each
-    * round REWIRES edges toward the component minimum rather than
-    * propagating labels one hop.
+    * Beyond", SoCC '14): rounds are O(log² n) in the worst case (in
+    * practice a handful) instead of min-label propagation's
+    * O(diameter), because each round REWIRES edges toward the component
+    * minimum rather than propagating labels one hop.
     *
     *   large-star(u): m = min(Γ(u) ∪ {u}); emit (v, m) for v ∈ Γ(u), v > u
     *   small-star(u): over edges (u, v) canonical u > v:
@@ -156,26 +80,24 @@ object ConnectedComponents {
     * reads the window over a round's INPUT, so it could confirm a
     * fixed point no earlier than the signature compare does.
     *
-    * Lineage is truncated with localCheckpoint every round by default
-    * (`checkpointInterval = 1`): un-truncated, each round's plan nests
-    * every earlier round's windows and exchanges, and driver-side
-    * ANALYSIS — which runs on every Dataset construction, cached data or
-    * not — becomes the bottleneck within a handful of rounds (measured
-    * 60 s → 14 s on a 135k-edge graph by truncating every round).
+    * Every round's edges are lazily localCheckpointed: un-truncated,
+    * each round's plan nests every earlier round's windows and
+    * exchanges, and driver-side ANALYSIS — which runs on every Dataset
+    * construction, cached data or not — becomes the bottleneck within a
+    * handful of rounds (measured 60 s → 14 s on a 135k-edge graph by
+    * truncating every round).
     *
-    * Use [[label]] for near-dup clusters (tiny diameter — fewer
-    * shuffles per round wins); use this for social-graph-shaped
-    * components where diameter ≈ 20+ makes per-hop propagation the
-    * bottleneck.
-    *
+    * @param maxRounds hard cap on star rounds; exceeding it THROWS (an
+    *   unconverged labeling is silently-wrong clusters — prefer a loud
+    *   failure and a bigger cap over corrupt dedup output)
     * @return (idCol, "component") — component = min node id reachable */
   def labelStar(nodes: DataFrame, idCol: String,
                 edges: DataFrame, srcCol: String, dstCol: String,
-                maxRounds: Int = 30, checkpointInterval: Int = 1): DataFrame = {
+                maxRounds: Int = 30): DataFrame = {
     import org.apache.spark.sql.expressions.Window
 
     // (count, checksum) signature of a canonical edge frame; the head()
-    // action is also what materializes the persist/checkpoint. The
+    // action is also what materializes the round's checkpoint. The
     // checksum sums full-range xxhash64 longs as DECIMAL(38,0) — an
     // overflow-safe, order-independent exact sum under ANSI mode.
     def sig(e: DataFrame): (Long, String) = {
@@ -241,13 +163,9 @@ object ConnectedComponents {
         .distinct() // no self-edges possible: m ≤ v < u on every row
       // LAZY checkpoint: sig()'s head() — which touches every partition
       // — is the materializing action, so each round runs ONE job, not
-      // an eager-checkpoint job plus the signature job (r19; the same
-      // one-job-per-round discipline label() gets from observe())
-      val next =
-        if ((round + 1) % checkpointInterval == 0) small.barrier(eager = false)
-        else small.persist()
+      // an eager-checkpoint job plus the signature job
+      val next = small.barrier(eager = false)
       val nextSig = sig(next)
-      e.unpersist()
       converged = eSig.contains(nextSig)
       e = next
       win = starWindow(e)

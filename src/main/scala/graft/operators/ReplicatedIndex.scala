@@ -203,11 +203,7 @@ object ReplicatedIndex {
         $"doc_id", $"text"))
     val dl = positioned.select($"doc_id",
       size(split($"text", " ")).cast(LongType).as("dl"))
-    val stats = dl
-      .agg(count(lit(1)).cast(LongType).as("n_docs"),
-        sum($"dl").as("l_total"))
-      .select($"n_docs", expr("l_total DIV n_docs").as("adl"))
-    Replicated(assignments, primaryStore, replicaStore, dl, stats,
+    Replicated(assignments, primaryStore, replicaStore, dl, stats(dl),
       nShards)
   }
 
@@ -258,11 +254,7 @@ object ReplicatedIndex {
       .map { case (nd, og, t, b, ps) =>
         (nd, og, t, b, ps.size, PostingCodec.encode(ps))
       }.toDF("node", "origin", "term", "bucket", "df", "bytes")
-    val stats = dl
-      .agg(count(lit(1)).cast(LongType).as("n_docs"),
-        sum($"dl").as("l_total"))
-      .select($"n_docs", expr("l_total DIV n_docs").as("adl"))
-    Replicated(a, store, replicaStore, dl, stats, nShards)
+    Replicated(a, store, replicaStore, dl, stats(dl), nShards)
   }
 
   /** LOWER THE REPLICATION FACTOR 2 → 1 (X119f, q329): the inverse of
@@ -279,6 +271,13 @@ object ReplicatedIndex {
     * matrix, listed for the completeness of the RF pair. */
   def dropReplicas(rep: Replicated): (DataFrame, DataFrame) =
     (rep.primaryStore, rep.dl)
+
+  /** Global BM25 corpus stats `(n_docs, adl)` of a `(doc_id, dl)`
+    * sidecar; adl is the truncating integer mean. */
+  private[graft] def stats(dl: DataFrame): DataFrame =
+    dl.agg(count(lit(1)).cast(LongType).as("n_docs"),
+        sum(col("dl")).as("l_total"))
+      .select(col("n_docs"), expr("l_total DIV n_docs").as("adl"))
 
   /** Scatter-gather over ANY block selection that partitions the
     * corpus — (node, term, bucket, df, bytes) rows where `node` is the
@@ -374,12 +373,13 @@ object ReplicatedIndex {
     * holding dead ids decode (strict), drop the dead postings and
     * re-encode; blocks whose bucket holds no dead id pass through
     * byte-UNTOUCHED (never decoded); emptied blocks vanish. `deadB` is
-    * the (bucket, dead ids) grouping. */
-  private[graft] def dropFromBlocks(store: DataFrame,
-      deadB: DataFrame): DataFrame = {
+    * the (keys, dead ids) grouping: by bucket alone for a takedown or an
+    * update, by a block's full placement key for [[grow]]'s movers. */
+  private[graft] def dropFromBlocks(store: DataFrame, deadB: DataFrame,
+      keys: Seq[String] = Seq("bucket")): DataFrame = {
     val s = store.sparkSession
     import s.implicits._
-    store.join(deadB, Seq("bucket"), "left")
+    store.join(deadB, keys, "left")
       .select($"k1", $"k2", $"term", $"bucket", $"df", $"bytes", $"dead")
       .as[(Long, Long, String, Long, Int, Array[Byte], Option[Seq[Long]])]
       .flatMap {
@@ -389,7 +389,7 @@ object ReplicatedIndex {
         case (k1, k2, t, b, n, bytes, Some(dd)) =>
           val ps = PostingCodec.decode(bytes, n)
             .getOrElse(throw new IllegalStateException(
-              s"replicated takedown: corrupt block $k1/$k2/'$t'/$b"))
+              s"dropFromBlocks: corrupt block $k1/$k2/'$t'/$b"))
           val gone = dd.toSet
           val kept = ps.filterNot(p => gone.contains(p._1))
           if (kept.isEmpty) Iterator.empty
@@ -437,13 +437,9 @@ object ReplicatedIndex {
       .select($"k1".as("node"), $"k2".as("origin"), $"term", $"bucket",
         $"df", $"bytes")
     val dl = rep.dl.join(dead, Seq("doc_id"), "left_anti")
-    val stats = dl
-      .agg(count(lit(1)).cast(LongType).as("n_docs"),
-        sum($"dl").as("l_total"))
-      .select($"n_docs", expr("l_total DIV n_docs").as("adl"))
     Replicated(
       rep.assignments.join(dead, Seq("doc_id"), "left_anti"),
-      newPrimary, newReplica, dl, stats, rep.nShards)
+      newPrimary, newReplica, dl, stats(dl), rep.nShards)
   }
 
   /** Document UPDATE / re-index on the REPLICATED topology (X109q,
@@ -541,12 +537,8 @@ object ReplicatedIndex {
     val dl = rep.dl.join(ids, Seq("doc_id"), "left_anti")
       .unionByName(up.select($"doc_id",
         size(split($"text", " ")).cast(LongType).as("dl")))
-    val stats = dl
-      .agg(count(lit(1)).cast(LongType).as("n_docs"),
-        sum($"dl").as("l_total"))
-      .select($"n_docs", expr("l_total DIV n_docs").as("adl"))
     Replicated(rep.assignments.unionByName(novelA), newPrimary,
-      newReplica, dl, stats, rep.nShards)
+      newReplica, dl, stats(dl), rep.nShards)
   }
 
   /** PERMANENT loss of the highest node (X119b, q299): [[serveFailover]]
@@ -724,24 +716,14 @@ object ReplicatedIndex {
       }.toDF("term", "bucket", "doc_id", "tf", "first_pos")
       .join(movers, "doc_id")
     // ---- primary store: class-A docs leave their old blocks…
-    val deadP = movers.filter($"primary" === newShard)
-      .groupBy($"op".as("shard"), expr("doc_id DIV 100").as("bucket"))
-      .agg(collect_set($"doc_id").as("dead"))
-    val untouchedP = rep.primaryStore
-      .join(deadP.select($"shard", $"bucket"), Seq("shard", "bucket"),
-        "left_anti")
-    val keptP = rep.primaryStore.join(deadP, Seq("shard", "bucket"))
-      .select($"shard", $"term", $"bucket", $"df", $"bytes", $"dead")
-      .as[(Long, String, Long, Int, Array[Byte], Seq[Long])]
-      .flatMap { case (sh, t, b, n, bytes, dd) =>
-        val ps = PostingCodec.decode(bytes, n)
-          .getOrElse(throw new IllegalStateException(
-            s"replicated grow: corrupt primary block $sh/'$t'/$b"))
-        val gone = dd.toSet
-        val k = ps.filterNot(p => gone.contains(p._1))
-        if (k.isEmpty) Iterator.empty
-        else Iterator.single((sh, t, b, k.size, PostingCodec.encode(k)))
-      }.toDF("shard", "term", "bucket", "df", "bytes")
+    val keptP = dropFromBlocks(
+      rep.primaryStore.select($"shard".as("k1"), lit(-1L).as("k2"),
+        $"term", $"bucket", $"df", $"bytes"),
+      movers.filter($"primary" === newShard)
+        .groupBy($"op".as("k1"), expr("doc_id DIV 100").as("bucket"))
+        .agg(collect_set($"doc_id").as("dead")),
+      Seq("k1", "bucket"))
+      .select($"k1".as("shard"), $"term", $"bucket", $"df", $"bytes")
     // …and regroup on the new shard (keys disjoint from survivors)
     val addP = mPost.filter($"primary" === newShard)
       .groupBy($"term", $"bucket")
@@ -751,30 +733,17 @@ object ReplicatedIndex {
       .map { case (t, b, ps) =>
         (newShard, t, b, ps.size, PostingCodec.encode(ps))
       }.toDF("shard", "term", "bucket", "df", "bytes")
-    val newPrimary = untouchedP
-      .select($"shard", $"term", $"bucket", $"df", $"bytes")
-      .unionByName(keptP).unionByName(addP)
+    val newPrimary = keptP.unionByName(addP)
     // ---- replica store: every mover leaves its old replica block…
-    val deadR = movers
-      .groupBy($"or".as("node"), $"op".as("origin"),
-        expr("doc_id DIV 100").as("bucket"))
-      .agg(collect_set($"doc_id").as("dead"))
-    val untouchedR = rep.replicaStore
-      .join(deadR.select($"node", $"origin", $"bucket"),
-        Seq("node", "origin", "bucket"), "left_anti")
-    val keptR = rep.replicaStore.join(deadR, Seq("node", "origin", "bucket"))
-      .select($"node", $"origin", $"term", $"bucket", $"df", $"bytes",
-        $"dead")
-      .as[(Long, Long, String, Long, Int, Array[Byte], Seq[Long])]
-      .flatMap { case (nd, og, t, b, n, bytes, dd) =>
-        val ps = PostingCodec.decode(bytes, n)
-          .getOrElse(throw new IllegalStateException(
-            s"replicated grow: corrupt replica block $nd/$og/'$t'/$b"))
-        val gone = dd.toSet
-        val k = ps.filterNot(p => gone.contains(p._1))
-        if (k.isEmpty) Iterator.empty
-        else Iterator.single((nd, og, t, b, k.size, PostingCodec.encode(k)))
-      }.toDF("node", "origin", "term", "bucket", "df", "bytes")
+    val keptR = dropFromBlocks(
+      rep.replicaStore.select($"node".as("k1"), $"origin".as("k2"),
+        $"term", $"bucket", $"df", $"bytes"),
+      movers.groupBy($"or".as("k1"), $"op".as("k2"),
+          expr("doc_id DIV 100").as("bucket"))
+        .agg(collect_set($"doc_id").as("dead")),
+      Seq("k1", "k2", "bucket"))
+      .select($"k1".as("node"), $"k2".as("origin"), $"term", $"bucket",
+        $"df", $"bytes")
     // …and regroups at its new placement — class A at (old primary, S),
     // class B at (S, primary): both keys carry S, so no survivor merge
     val addR = mPost
@@ -786,9 +755,7 @@ object ReplicatedIndex {
       .map { case (nd, og, t, b, ps) =>
         (nd, og, t, b, ps.size, PostingCodec.encode(ps))
       }.toDF("node", "origin", "term", "bucket", "df", "bytes")
-    val newReplica = untouchedR
-      .select($"node", $"origin", $"term", $"bucket", $"df", $"bytes")
-      .unionByName(keptR).unionByName(addR)
+    val newReplica = keptR.unionByName(addR)
     Replicated(a2, newPrimary, newReplica, rep.dl, rep.stats,
       oldShards + 1)
   }

@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions._
+import graft.core.Barriers._
 import graft.operators.{ConnectedComponents, MinHashLSH}
 
 /** End-to-end training-corpus preparation (SURVEY.md §2.11a X26): the
@@ -19,7 +20,7 @@ import graft.operators.{ConnectedComponents, MinHashLSH}
   * job that materializes the result — no extra count() actions, no
   * second pass over a 100 TB corpus just to fill a report. (The
   * near-dup stage inherently runs its own jobs: LSH signature
-  * generation and the label-propagation loop are iterative by nature.)
+  * generation and the connected-components star test and rounds.)
   *
   * Keep/drop semantics: docs failing quality are dropped; exact dups
   * keep the MINIMUM doc_id per content hash; near-dup clusters keep
@@ -80,10 +81,14 @@ object CorpusPipeline {
     // q54+q82: near-dup pairs → components → keep the min representative
     val pairs = MinHashLSH.nearDupPairs(exact, idCol, textCol, minJaccard)
       .select(col("a_id"), col("b_id"))
-    val labels = ConnectedComponents.label(
+    // labelStar's labelling aggregates its star edges; the lazy
+    // checkpoint lets the result's first action compute the survivors
+    // once, and the near_dedup count read them back
+    val roots = ConnectedComponents.labelStar(
       exact.select(id), idCol, pairs, "a_id", "b_id")
-    val kept = exact.join(
-      labels.filter(id === col("component")).select(id), Seq(idCol))
+      .filter(id === col("component")).select(id)
+      .barrier(eager = false)
+    val kept = exact.join(roots, Seq(idCol))
 
     // q71's accounting rides out on the result
     val result = kept
@@ -94,8 +99,8 @@ object CorpusPipeline {
       "input" -> obsIn.get("n").asInstanceOf[Long],
       "quality" -> obsQuality.get("n").asInstanceOf[Long],
       "exact_dedup" -> obsExact.get("n").asInstanceOf[Long],
-      // the CC loop materialized labels, so this count is served from
-      // the persisted/checkpointed frames, not a corpus re-scan
+      // served from the persisted `exact` frame and the checkpointed
+      // survivors: no corpus re-scan, no LSH re-run
       "near_dedup" -> kept.count()),
       input = input, quality = quality, exact = exact)
   }

@@ -232,10 +232,11 @@ object Dedup {
 
   /** q82 — near-dup CLUSTER collapse (N16): q54's pairs are only half a
     * dedup pipeline; chained duplicates (A~B, B~C) must collapse into
-    * one cluster with one kept representative. Spark runs iterative
-    * min-label propagation (graft.operators.ConnectedComponents);
-    * DuckDB computes the same components with a recursive CTE over the
-    * identical MinHash pair CTEs. */
+    * one cluster with one kept representative. Spark runs
+    * [[ConnectedComponents.labelStar]] (partition-local contraction,
+    * then large-star/small-star rounds); DuckDB computes the same
+    * components with a recursive CTE over the identical MinHash pair
+    * CTEs. */
   val q82 = Q(
     "q82_dedup_clusters",
     (s, dir) => {
@@ -245,7 +246,7 @@ object Dedup {
         .nearDupPairs(docs, "doc_id", "text", minJaccard = 0.5)
         .select($"a_id", $"b_id")
       ConnectedComponents
-        .label(docs.select($"doc_id"), "doc_id", pairs, "a_id", "b_id")
+        .labelStar(docs.select($"doc_id"), "doc_id", pairs, "a_id", "b_id")
         .select($"doc_id", $"component",
           ($"doc_id" === $"component").as("is_kept"))
         .barrier() // sort sampling must not replay the CC join
@@ -264,7 +265,7 @@ object Dedup {
       SELECT node AS doc_id, MIN(lab) AS component,
              node = MIN(lab) AS is_kept
       FROM reach GROUP BY node ORDER BY doc_id"""),
-    doc = "N16: connected components by min-label propagation; per-cluster " +
+    doc = "N16: connected components by large-star/small-star; per-cluster " +
       "representative = min doc id — the collapse step after pair finding")
 
   /** q93 — cross-table decontamination join (N19): which corpus docs
@@ -309,9 +310,9 @@ object Dedup {
     * (N16b), exercised on the graph shape that MOTIVATES it: chains.
     * Nodes are orders; edges link each customer's consecutive orders,
     * so every component is a PATH with diameter = orders-per-customer
-    * (~100 at sf0.1) — per-hop label propagation ([[label]], q82's
-    * operator) needs one round per hop and would blow its round cap
-    * here, while [[ConnectedComponents.labelStar]] (Kiveris et al.
+    * (~100 at sf0.1) — per-hop min-label propagation would need one
+    * round per hop and a diameter-sized round cap here, while
+    * [[ConnectedComponents.labelStar]] (Kiveris et al.
     * '14) converges in O(log² n) rounds by rewiring edges toward the
     * component minimum. The edges come out of a window partitioned by
     * `o_custkey`, so each chain sits whole in one partition: labelStar's

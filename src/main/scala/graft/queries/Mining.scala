@@ -1008,10 +1008,11 @@ object Mining {
         .agg(count(lit(1)).as("shared"))
         .filter($"shared" >= 10)
         .select($"a_id", $"b_id")
+        .barrier() // the nodes and labelStar's edges both read the self-join
       val nodes = pairs.select($"a_id".as("doc_id"))
         .unionByName(pairs.select($"b_id".as("doc_id"))).distinct()
       val comp = graft.operators.ConnectedComponents
-        .label(nodes, "doc_id", pairs, "a_id", "b_id")
+        .labelStar(nodes, "doc_id", pairs, "a_id", "b_id")
       val members = comp.join(docs, "doc_id")
       val mode = (attr: String) => {
         val w = Window.partitionBy($"component")

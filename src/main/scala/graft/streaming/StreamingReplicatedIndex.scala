@@ -149,7 +149,7 @@ object StreamingReplicatedIndex {
         .select($"doc_id", $"primary", $"replica")
       val grown = ReplicatedIndex.grow(
         ReplicatedIndex.Replicated(aOld, prim, repl, state.dl,
-          stats(state.dl), state.nShards),
+          ReplicatedIndex.stats(state.dl), state.nShards),
         state.nShards)
       state.copy(primSegs = List(grown.primaryStore.barrier()),
         replSegs = List(grown.replicaStore.barrier()),
@@ -277,14 +277,6 @@ object StreamingReplicatedIndex {
         .barrier())
   }
 
-  private def stats(dl: DataFrame): DataFrame = {
-    val s = dl.sparkSession
-    import s.implicits._
-    dl.agg(count(lit(1)).cast("long").as("n_docs"),
-        sum($"dl").as("l_total"))
-      .select($"n_docs", expr("l_total DIV n_docs").as("adl"))
-  }
-
   /** Serve off the PRIMARY copies of the live segment lists. */
   def servePrimary(state: RiState, qTerms: Seq[String], k: Int): DataFrame = {
     require(state.primSegs.nonEmpty, "nothing indexed yet")
@@ -292,7 +284,8 @@ object StreamingReplicatedIndex {
       .map(_.select(col("shard").as("node"), col("term"), col("bucket"),
         col("df"), col("bytes")))
       .reduce(_ unionByName _)
-    ReplicatedIndex.serveBlocks(sel, state.dl, stats(state.dl), qTerms, k)
+    ReplicatedIndex.serveBlocks(sel, state.dl,
+      ReplicatedIndex.stats(state.dl), qTerms, k)
   }
 
   /** Node `failed` is down RIGHT NOW: q294's failover selection taken
@@ -311,6 +304,7 @@ object StreamingReplicatedIndex {
           col("bytes")))
       .reduceOption(_ unionByName _)
     val sel = repl.map(prim.unionByName(_)).getOrElse(prim)
-    ReplicatedIndex.serveBlocks(sel, state.dl, stats(state.dl), qTerms, k)
+    ReplicatedIndex.serveBlocks(sel, state.dl,
+      ReplicatedIndex.stats(state.dl), qTerms, k)
   }
 }

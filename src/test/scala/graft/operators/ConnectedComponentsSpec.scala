@@ -16,6 +16,7 @@ import graft.queries.Dedup
   * never depend on how the edges are partitioned or scheduled. */
 class ConnectedComponentsSpec extends AnyFunSuite with SparkSpecBase {
   import spark.implicits._
+  import ConnectedComponentsSpec.components
 
   /** Runs `body` and counts labelStar's star rounds in it: the SQL
     * executions started by the convergence `head()`, whose call site
@@ -53,21 +54,6 @@ class ConnectedComponentsSpec extends AnyFunSuite with SparkSpecBase {
 
   private def labels(df: DataFrame): Map[Long, Long] =
     df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-
-  /** Components of an edge list as node → min node id, by a plain
-    * driver-side union-find (independent of the operator). */
-  private def components(edges: Seq[(Long, Long)]): Map[Long, Long] = {
-    val parent = scala.collection.mutable.Map[Long, Long]()
-    def find(x: Long): Long = {
-      val p = parent.getOrElseUpdate(x, x)
-      if (p == x) x else { val r = find(p); parent(x) = r; r }
-    }
-    edges.foreach { case (a, b) =>
-      val (ra, rb) = (find(a), find(b))
-      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-    }
-    parent.keys.toSeq.map(x => x -> find(x)).toMap
-  }
 
   private def randomEdges(seed: Int, n: Int, m: Int): Seq[(Long, Long)] = {
     val rnd = new scala.util.Random(seed)
@@ -131,8 +117,8 @@ class ConnectedComponentsSpec extends AnyFunSuite with SparkSpecBase {
     assert(star === (0L until 400L).map(i => i -> truth.getOrElse(i, i)).toMap)
   }
 
-  test("labelStar equals label() with null endpoints, self-loops, duplicate " +
-    "and reversed edges") {
+  test("labelStar equals a driver-side union-find with null endpoints, " +
+    "self-loops, duplicate and reversed edges") {
     val base = randomEdges(11, 80, 60)
     val noisy = base.map { case (a, b) => (Option(a), Option(b)) } ++
       base.take(8).map { case (a, b) => (Option(a), Option(b)) } ++
@@ -141,8 +127,9 @@ class ConnectedComponentsSpec extends AnyFunSuite with SparkSpecBase {
         (None, None), (Some(81L), Some(81L)))
     val nodes = (0L until 82L).toDF("id")
     val edges = noisy.toDF("a", "b")
-    val exact = labels(ConnectedComponents.label(nodes, "id",
-      edges.na.drop(), "a", "b", maxRounds = 80))
+    // the reference drops null endpoints; isolated nodes label themselves
+    val truth = components(noisy.collect { case (Some(a), Some(b)) => (a, b) })
+    val exact = (0L until 82L).map(i => i -> truth.getOrElse(i, i)).toMap
     val star = labels(ConnectedComponents.labelStar(nodes, "id", edges, "a", "b"))
     assert(star === exact)
     assert(star(81L) == 81L)
@@ -177,5 +164,23 @@ class ConnectedComponentsSpec extends AnyFunSuite with SparkSpecBase {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None) => spark.conf.unset(k)
     }
+  }
+}
+
+object ConnectedComponentsSpec {
+
+  /** Components of an edge list as node → min node id, by a plain
+    * driver-side union-find (independent of the operator). */
+  def components(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map[Long, Long]()
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    parent.keys.toSeq.map(x => x -> find(x)).toMap
   }
 }

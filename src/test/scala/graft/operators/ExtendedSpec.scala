@@ -96,32 +96,28 @@ class ExtendedSpec extends AnyFunSuite with SparkSpecBase {
     val nodes = Seq(1L, 2L, 3L, 4L, 5L, 9L).toDF("id")
     // chain 1-2-3 (via pairs (2,1),(2,3)), pair 4-5, isolated 9
     val edges = Seq((2L, 1L), (2L, 3L), (5L, 4L)).toDF("a", "b")
-    val out = ConnectedComponents.label(nodes, "id", edges, "a", "b")
+    val out = ConnectedComponents.labelStar(nodes, "id", edges, "a", "b")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(out === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L, 5L -> 4L, 9L -> 9L))
-  }
-
-  test("ConnectedComponents: a 50-node path (diameter 49) converges through " +
-    "the localCheckpoint lineage truncation, label = path minimum") {
-    val n = 50
-    val nodes = (0L until n.toLong).toDF("id")
-    val edges = (0L until (n - 1).toLong).map(i => (i, i + 1)).toDF("a", "b")
-    // min-label walks one hop per round -> needs 49 rounds, exercising
-    // the per-round localCheckpoint truncation path ~49 times
-    val out = ConnectedComponents.label(nodes, "id", edges, "a", "b",
-        maxRounds = 60)
-      .collect().map(r => r.getLong(0) -> r.getLong(1))
-    assert(out.length == n && out.forall(_._2 == 0L))
   }
 
   test("ConnectedComponents: exceeding maxRounds fails loudly instead of " +
     "returning unconverged labels") {
     val nodes = (0L until 12L).toDF("id")
-    val edges = (0L until 11L).map(i => (i, i + 1)).toDF("a", "b")
+    // a 12-node path scattered round-robin over 4 partitions: no two
+    // edges of a partition share a node, so the partition-local
+    // contraction leaves the path to the star rounds
+    val edges = spark.sparkContext.parallelize(0 until 4, 4)
+      .flatMap(p => (p.toLong until 11L by 4).map(i => (i, i + 1)))
+      .toDF("a", "b")
     val ex = intercept[IllegalArgumentException] {
-      ConnectedComponents.label(nodes, "id", edges, "a", "b", maxRounds = 3)
+      ConnectedComponents.labelStar(nodes, "id", edges, "a", "b", maxRounds = 2)
     }
     assert(ex.getMessage.contains("did not converge"))
+    // the cap, not the input, is what failed
+    val out = ConnectedComponents.labelStar(nodes, "id", edges, "a", "b")
+      .collect().map(r => r.getLong(1))
+    assert(out.length == 12 && out.forall(_ == 0L))
   }
 
   test("labelStar: a 200-node path (diameter 199) converges in <= 12 rounds " +
@@ -137,8 +133,8 @@ class ExtendedSpec extends AnyFunSuite with SparkSpecBase {
     assert(out.length == n && out.forall(_._2 == 0L))
   }
 
-  test("labelStar equals label() on a seeded random graph, and handles " +
-    "self-loops, duplicate and reversed edges") {
+  test("labelStar equals a driver-side union-find on a seeded random graph, " +
+    "and handles self-loops, duplicate and reversed edges") {
     val rnd = new scala.util.Random(42)
     val n = 120L
     val nodes = (0L until n).toDF("id")
@@ -146,8 +142,8 @@ class ExtendedSpec extends AnyFunSuite with SparkSpecBase {
     // add noise: self-loops, duplicates, reversed copies
     val noisy = base ++ base.take(10) ++ base.take(10).map(_.swap) ++ Seq((7L, 7L))
     val edges = noisy.toDF("a", "b")
-    val exact = ConnectedComponents.label(nodes, "id", edges, "a", "b", maxRounds = 60)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val truth = ConnectedComponentsSpec.components(noisy)
+    val exact = (0L until n).map(i => i -> truth.getOrElse(i, i)).toMap
     val star = ConnectedComponents.labelStar(nodes, "id", edges, "a", "b")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(star === exact)
