@@ -101,6 +101,22 @@ class ExtendedSpec extends AnyFunSuite with SparkSpecBase {
     assert(out === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L, 5L -> 4L, 9L -> 9L))
   }
 
+  test("ConnectedComponents: a 50-node path (diameter 49) converges through " +
+    "the localCheckpoint lineage truncation, label = path minimum") {
+    val n = 50
+    val nodes = (0L until n.toLong).toDF("id")
+    // the path visits the ids in a seeded shuffled order, not id order,
+    // and each edge has a partition to itself: the
+    // partition-local contraction merges nothing, and every star round
+    // runs over a lazily localCheckpointed edge set
+    val order = new scala.util.Random(7).shuffle((0L until n.toLong).toVector)
+    val path = order.zip(order.tail)
+    val edges = spark.sparkContext.parallelize(path, path.length).toDF("a", "b")
+    val out = ConnectedComponents.labelStar(nodes, "id", edges, "a", "b")
+      .collect().map(r => r.getLong(0) -> r.getLong(1))
+    assert(out.length == n && out.forall(_._2 == 0L))
+  }
+
   test("ConnectedComponents: exceeding maxRounds fails loudly instead of " +
     "returning unconverged labels") {
     val nodes = (0L until 12L).toDF("id")
