@@ -35,7 +35,9 @@ import graft.core.Barriers._
   * dedup lesson the r17 verdict asked for): [[probe]] (flat BM25),
   * [[probeFielded]] (BM25F) and [[probeStored]] (q326's
   * persisted-asset serve) all run the same seeds → θ → survivors →
-  * ranked spine, parameterized by the decode and scoring folds.
+  * ranked spine, parameterized by the decode and scoring folds. The
+  * folds themselves — strict decode, contribution, per-doc sum — are
+  * [[Bm25]]'s; this operator owns only the pruning.
   *
   * Scale: the sidecar is one groupBy over already-blocked rows, paid
   * at ingest; θ-seeding costs `seedJ` blocks (constant); phase 2
@@ -47,12 +49,6 @@ import graft.core.Barriers._
   * windows. BlockMaxSpec pins the skip law and pruned ≡ exhaustive.
   */
 object BlockMaxWand {
-
-  /** The q170 exact rational BM25 per-term contribution (k1 = 6/5,
-    * b = 3/4, raw-ratio RSJ idf), over columns tf/dl/df/n_docs/adl. */
-  private val bm25Ppm =
-    """(22 * tf * adl * (2 * n_docs - 2 * df + 1) * 1000000)
-       DIV ((10 * tf * adl + 3 * adl + 9 * dl) * (2 * df + 1))"""
 
   /** Every frame of the pruned probe, exposed so the spec can pin the
     * skip law; `ranked` is the exact top-k. */
@@ -106,59 +102,26 @@ object BlockMaxWand {
     Probe(sidecar, seeds, theta, survivors, ranked)
   }
 
-  /** The flat-BM25 decode of a (term, bucket, df, bytes) selection —
-    * strict q259 read path, (term, doc_id, tf) out. */
-  private def decodeFlat(who: String)(blocks: DataFrame): DataFrame = {
-    val s = blocks.sparkSession
-    import s.implicits._
-    blocks.select($"term", $"bucket", $"df", $"bytes")
-      .as[(String, Long, Int, Array[Byte])]
-      .flatMap { case (t, b, n, bytes) =>
-        PostingCodec.decode(bytes, n)
-          .getOrElse(throw new IllegalStateException(
-            s"$who: corrupt postings block '$t'/$b"))
-          .map { case (doc, tf, _) => (t, doc, tf) }
-      }.toDF("term", "doc_id", "tf")
-  }
-
-  /** The flat-BM25 per-doc scoring fold over a decoded selection. */
-  private def scoreFlat(dl: DataFrame, dfreq: DataFrame,
-      stats: DataFrame)(decoded: DataFrame): DataFrame = {
-    val s = decoded.sparkSession
-    import s.implicits._
-    decoded.join(dl, "doc_id")
-      .join(broadcast(dfreq), "term")
-      .crossJoin(broadcast(stats))
-      .withColumn("contrib_ppm", expr(bm25Ppm))
-      .groupBy($"doc_id").agg(sum($"contrib_ppm").as("score_ppm"))
-  }
-
   def probe(docs: DataFrame, qTerms: Seq[String], k: Int,
       seedJ: Int = 8): Probe = {
     val s = docs.sparkSession
     import s.implicits._
     // ---- serving-side stores (ingest-time cost, probe-time asset)
-    val dl = docs.select($"doc_id",
-      size(split($"text", " ")).cast(LongType).as("dl"))
-    val stats = dl
-      .agg(count(lit(1)).cast(LongType).as("n_docs"), sum($"dl").as("l_total"))
-      .select($"n_docs", expr("l_total DIV n_docs").as("adl"))
+    val dl = docs.select($"doc_id", Bm25.dl)
+    val stats = Bm25.stats(dl)
     val probed = graft.queries.Text.postingStore(docs)
       .filter($"term".isin(qTerms: _*))
       .persist() // the fetched query-term blocks — decoded ≤ 2× below
     val dfreq = probed.groupBy($"term")
       .agg(sum($"df").cast(LongType).as("df"))
-    val decode = decodeFlat("block-max probe") _
-    val score = scoreFlat(dl, dfreq, stats) _
+    val decode = Bm25.decode("block-max probe") _
     // ---- ingest: block-max sidecar (exact per-block max contribution)
-    val sidecar = decode(probed)
-      .join(dl, "doc_id").join(broadcast(dfreq), "term")
-      .crossJoin(broadcast(stats))
-      .select($"term", expr("doc_id DIV 100").as("bucket"),
-        expr(bm25Ppm).as("contrib_ppm"))
+    val sidecar = Bm25.contributions(decode(probed), dl, dfreq, stats)
+      .select($"term", expr("doc_id DIV 100").as("bucket"), $"contrib_ppm")
       .groupBy($"term", $"bucket").agg(max($"contrib_ppm").as("ub_ppm"))
       .groupBy($"bucket").agg(sum($"ub_ppm").as("ub_ppm"))
-    twoPhase(probed, sidecar, decode, score, k, seedJ)
+    twoPhase(probed, sidecar, decode,
+      Bm25.score(_, dl, dfreq, stats), k, seedJ)
   }
 
   /** The per-(term, bucket) block-max rows for a corpus — the INGEST
@@ -169,11 +132,8 @@ object BlockMaxWand {
   def ubSidecar(docs: DataFrame): DataFrame = {
     val s = docs.sparkSession
     import s.implicits._
-    val dl = docs.select($"doc_id",
-      size(split($"text", " ")).cast(LongType).as("dl"))
-    val stats = dl
-      .agg(count(lit(1)).cast(LongType).as("n_docs"), sum($"dl").as("l_total"))
-      .select($"n_docs", expr("l_total DIV n_docs").as("adl"))
+    val dl = docs.select($"doc_id", Bm25.dl)
+    val stats = Bm25.stats(dl)
     val dfreq = docs
       .select($"doc_id", explode(split($"text", " ")).as("term"))
       .groupBy($"term")
@@ -185,7 +145,7 @@ object BlockMaxWand {
       .join(dfreq, "term")
       .crossJoin(broadcast(stats))
       .select($"term", expr("doc_id DIV 100").as("bucket"),
-        expr(bm25Ppm).as("contrib_ppm"))
+        Bm25.contrib.as("contrib_ppm"))
       .groupBy($"term", $"bucket").agg(max($"contrib_ppm").as("ub_ppm"))
   }
 
@@ -209,8 +169,8 @@ object BlockMaxWand {
       .agg(sum($"df").cast(LongType).as("df"))
     val sidecar = ubSel
       .groupBy($"bucket").agg(sum($"ub_ppm").as("ub_ppm"))
-    twoPhase(probed, sidecar, decodeFlat("stored block-max probe") _,
-      scoreFlat(dl, dfreq, stats) _, k, seedJ)
+    twoPhase(probed, sidecar, Bm25.decode("stored block-max probe") _,
+      Bm25.score(_, dl, dfreq, stats), k, seedJ)
   }
 
   /** Every frame of the SHARDED pruned probe (X110j, q330) — the
@@ -247,41 +207,22 @@ object BlockMaxWand {
       nShards: Int = 4, seedJ: Int = 8): ShardedProbe = {
     val s = docs.sparkSession
     import s.implicits._
-    val dl = docs.select($"doc_id",
-      size(split($"text", " ")).cast(LongType).as("dl"))
-    val stats = dl
-      .agg(count(lit(1)).cast(LongType).as("n_docs"), sum($"dl").as("l_total"))
-      .select($"n_docs", expr("l_total DIV n_docs").as("adl"))
-    val probed = ShardedIndex.buildStore(
+    val dl = docs.select($"doc_id", Bm25.dl)
+    val stats = Bm25.stats(dl)
+    val probed = graft.queries.Text.postingStore(
         docs.select(pmod($"doc_id", lit(nShards.toLong)).as("shard"),
-          $"doc_id", $"text"))
+          $"doc_id", $"text"), "shard")
       .filter($"term".isin(qTerms: _*))
       .persist()
     // GLOBAL df: summed across shards from block metadata (q283's
     // dfs_query_then_fetch — per-shard df would skew idf)
     val dfreq = probed.groupBy($"term")
       .agg(sum($"df").cast(LongType).as("df"))
-    def decode(blocks: DataFrame): DataFrame =
-      blocks.select($"shard", $"term", $"bucket", $"df", $"bytes")
-        .as[(Long, String, Long, Int, Array[Byte])]
-        .flatMap { case (sh, t, b, n, bytes) =>
-          PostingCodec.decode(bytes, n)
-            .getOrElse(throw new IllegalStateException(
-              s"sharded block-max probe: corrupt block $sh/'$t'/$b"))
-            .map { case (doc, tf, _) => (sh, t, doc, tf) }
-        }.toDF("shard", "term", "doc_id", "tf")
+    val decode = Bm25.decode("sharded block-max probe", "shard") _
     def score(decoded: DataFrame): DataFrame =
-      decoded.join(dl, "doc_id")
-        .join(broadcast(dfreq), "term")
-        .crossJoin(broadcast(stats))
-        .withColumn("contrib_ppm", expr(bm25Ppm))
-        .groupBy($"shard", $"doc_id")
-        .agg(sum($"contrib_ppm").as("score_ppm"))
-    val sidecar = decode(probed)
-      .join(dl, "doc_id").join(broadcast(dfreq), "term")
-      .crossJoin(broadcast(stats))
-      .select($"shard", expr("doc_id DIV 100").as("bucket"),
-        expr(bm25Ppm).as("contrib_ppm"))
+      Bm25.score(decoded, dl, dfreq, stats, "shard")
+    val sidecar = Bm25.contributions(decode(probed), dl, dfreq, stats)
+      .select($"shard", expr("doc_id DIV 100").as("bucket"), $"contrib_ppm")
       .groupBy($"shard", $"bucket").agg(max($"contrib_ppm").as("ub_ppm"))
       .barrier()
     val topJ = udaf(new graft.functions.TopKScored(seedJ))
@@ -318,16 +259,6 @@ object BlockMaxWand {
     ShardedProbe(sidecar, seeds, theta, survivors, ranked)
   }
 
-  /** q298's exact rational BM25F contribution at the DECLARED weights
-    * (w_title = 2, w_body = 1, title = first 5 tokens): the weighted
-    * tf/dl fold BEFORE the single k1 saturation, over columns
-    * tf_t/tf_b/lt/lb/df/n_docs/awdl. */
-  private val bm25fPpm =
-    """(22 * (2 * tf_t + tf_b) * awdl * (2 * n_docs - 2 * df + 1)
-         * 1000000)
-       DIV ((10 * (2 * tf_t + tf_b) * awdl + 3 * awdl
-             + 9 * (2 * lt + lb)) * (2 * df + 1))"""
-
   /** Block-Max pruning for BM25F (X110e, q307): the r16 verdict's
     * "missing #5" — q298's fielded serve decodes EVERY query-term
     * block, because fielded per-block upper bounds are weight-
@@ -349,57 +280,21 @@ object BlockMaxWand {
       seedJ: Int = 8): Probe = {
     val s = docs.sparkSession
     import s.implicits._
-    val kTitle = 5
     // ---- serving-side stores: the q298 fielded layout
-    val fielded = docs
-      .select($"doc_id", posexplode(split($"text", " ")))
-      .select($"doc_id", ($"pos" + 1).cast(LongType).as("pos"),
-        $"col".as("term"))
-      .groupBy($"term", $"doc_id")
-      .agg(sum(when($"pos" <= kTitle, 1L).otherwise(0L)).as("tf_t"),
-        sum(when($"pos" > kTitle, 1L).otherwise(0L)).as("tf_b"))
-    val store = fielded
-      .groupBy($"term", floor($"doc_id" / 100).as("bucket"))
-      .agg(sort_array(collect_list(
-        struct($"doc_id", $"tf_t", $"tf_b"))).as("ps"))
-      .as[(String, Long, Seq[(Long, Long, Long)])]
-      .map { case (t, b, ps) =>
-        (t, b, ps.size, PostingCodec.encode(ps))
-      }.toDF("term", "bucket", "df", "bytes")
-    val flen = docs.select($"doc_id",
-        size(split($"text", " ")).cast(LongType).as("dl"))
-      .select($"doc_id", least($"dl", lit(kTitle.toLong)).as("lt"),
-        ($"dl" - least($"dl", lit(kTitle.toLong))).as("lb"))
-    val stats = flen
-      .agg(count(lit(1)).cast(LongType).as("n_docs"),
-        sum(lit(2L) * $"lt" + $"lb").as("wl_total"))
-      .select($"n_docs", expr("wl_total DIV n_docs").as("awdl"))
-    val probed = store.filter($"term".isin(qTerms: _*)).persist()
+    val flen = Bm25.Fielded.lengths(docs)
+    val stats = Bm25.Fielded.stats(flen)
+    val probed = Bm25.Fielded.store(docs)
+      .filter($"term".isin(qTerms: _*)).persist()
     val dfreq = probed.groupBy($"term")
       .agg(sum($"df").cast(LongType).as("df"))
-    def decodeBlocks(blocks: DataFrame): DataFrame =
-      blocks.select($"term", $"bucket", $"df", $"bytes")
-        .as[(String, Long, Int, Array[Byte])]
-        .flatMap { case (t, b, n, bytes) =>
-          PostingCodec.decode(bytes, n)
-            .getOrElse(throw new IllegalStateException(
-              s"fielded block-max probe: corrupt block '$t'/$b"))
-            .map { case (doc, tfT, tfB) => (t, doc, tfT, tfB) }
-        }.toDF("term", "doc_id", "tf_t", "tf_b")
-    def scored(decoded: DataFrame): DataFrame =
-      decoded.join(flen, "doc_id")
-        .join(broadcast(dfreq), "term")
-        .crossJoin(broadcast(stats))
-        .withColumn("contrib_ppm", expr(bm25fPpm))
-        .groupBy($"doc_id").agg(sum($"contrib_ppm").as("score_ppm"))
+    val decode = Bm25.Fielded.decode("fielded block-max probe") _
     // ---- ingest: fielded block-max sidecar AT THE DECLARED WEIGHTS
-    val sidecar = decodeBlocks(probed)
-      .join(flen, "doc_id").join(broadcast(dfreq), "term")
-      .crossJoin(broadcast(stats))
-      .select($"term", expr("doc_id DIV 100").as("bucket"),
-        expr(bm25fPpm).as("contrib_ppm"))
+    val sidecar = Bm25.Fielded.contributions(decode(probed), flen, dfreq,
+        stats)
+      .select($"term", expr("doc_id DIV 100").as("bucket"), $"contrib_ppm")
       .groupBy($"term", $"bucket").agg(max($"contrib_ppm").as("ub_ppm"))
       .groupBy($"bucket").agg(sum($"ub_ppm").as("ub_ppm"))
-    twoPhase(probed, sidecar, decodeBlocks, scored, k, seedJ)
+    twoPhase(probed, sidecar, decode,
+      Bm25.Fielded.score(_, flen, dfreq, stats), k, seedJ)
   }
 }

@@ -170,8 +170,8 @@ object IndexReshard {
     val positioned = docs.select($"doc_id", $"text",
       position($"doc_id").as("p"))
     val a0 = assign(positioned, oldShards, "shard_old")
-    val oldStore = ShardedIndex.buildStore(
-      a0.select($"shard_old".as("shard"), $"doc_id", $"text"))
+    val oldStore = graft.queries.Text.postingStore(
+      a0.select($"shard_old".as("shard"), $"doc_id", $"text"), "shard")
     val (a, newStore) = grow(oldStore, docs.select($"doc_id"), oldShards)
     Reshard(a, oldStore, newStore)
   }
@@ -283,8 +283,8 @@ object IndexReshard {
     val positioned = docs.select($"doc_id", $"text",
       position($"doc_id").as("p"))
     val a0 = assign(positioned, oldShards, "shard_old")
-    val oldStore = ShardedIndex.buildStore(
-      a0.select($"shard_old".as("shard"), $"doc_id", $"text"))
+    val oldStore = graft.queries.Text.postingStore(
+      a0.select($"shard_old".as("shard"), $"doc_id", $"text"), "shard")
     val (a, newStore) = shrink(oldStore, docs.select($"doc_id"), oldShards)
     Reshard(a, oldStore, newStore)
   }

@@ -158,31 +158,6 @@ object ReplicatedIndex {
       }
     }
 
-  /** The replica copy's store: [[ShardedIndex.buildStore]]'s layout
-    * with the (node, origin) compound key — blocks partition each
-    * origin shard's docs by their replica node. Input: (node, origin,
-    * doc_id, text). */
-  private[graft] def buildReplicaStore(assigned: DataFrame): DataFrame = {
-    val s = assigned.sparkSession
-    import s.implicits._
-    assigned
-      .select($"node", $"origin", $"doc_id",
-        posexplode(split($"text", " ")))
-      .select($"node", $"origin", $"doc_id", ($"pos" + 1).as("pos"),
-        $"col".as("term"))
-      .groupBy($"node", $"origin", $"term", $"doc_id")
-      .agg(count(lit(1)).as("tf"), min($"pos").as("first_pos"))
-      .groupBy($"node", $"origin", $"term",
-        floor($"doc_id" / 100).as("bucket"))
-      .agg(sort_array(collect_list(
-        struct($"doc_id", $"tf", $"first_pos"))).as("ps"))
-      .as[(Long, Long, String, Long, Seq[(Long, Long, Long)])]
-      .map { case (node, origin, term, bucket, ps) =>
-        (node, origin, term, bucket, ps.size, PostingCodec.encode(ps))
-      }
-      .toDF("node", "origin", "term", "bucket", "df", "bytes")
-  }
-
   /** Ingest: place every doc (primary + replica), build BOTH copies'
     * stores and the serving sidecars. Duplicate doc_ids drop
     * defensively at the boundary (ADVICE r16 — [[assignPR]]'s note);
@@ -196,14 +171,13 @@ object ReplicatedIndex {
         IndexReshard.position($"doc_id").as("p"))
     val a = assignPR(positioned, nShards)
     val assignments = a.select($"doc_id", $"primary", $"replica")
-    val primaryStore = ShardedIndex.buildStore(
-      a.select($"primary".as("shard"), $"doc_id", $"text"))
-    val replicaStore = buildReplicaStore(
+    val primaryStore = graft.queries.Text.postingStore(
+      a.select($"primary".as("shard"), $"doc_id", $"text"), "shard")
+    val replicaStore = graft.queries.Text.postingStore(
       a.select($"replica".as("node"), $"primary".as("origin"),
-        $"doc_id", $"text"))
-    val dl = positioned.select($"doc_id",
-      size(split($"text", " ")).cast(LongType).as("dl"))
-    Replicated(assignments, primaryStore, replicaStore, dl, stats(dl),
+        $"doc_id", $"text"), "node", "origin")
+    val dl = positioned.select($"doc_id", Bm25.dl)
+    Replicated(assignments, primaryStore, replicaStore, dl, Bm25.stats(dl),
       nShards)
   }
 
@@ -254,7 +228,7 @@ object ReplicatedIndex {
       .map { case (nd, og, t, b, ps) =>
         (nd, og, t, b, ps.size, PostingCodec.encode(ps))
       }.toDF("node", "origin", "term", "bucket", "df", "bytes")
-    Replicated(a, store, replicaStore, dl, stats(dl), nShards)
+    Replicated(a, store, replicaStore, dl, Bm25.stats(dl), nShards)
   }
 
   /** LOWER THE REPLICATION FACTOR 2 → 1 (X119f, q329): the inverse of
@@ -272,19 +246,12 @@ object ReplicatedIndex {
   def dropReplicas(rep: Replicated): (DataFrame, DataFrame) =
     (rep.primaryStore, rep.dl)
 
-  /** Global BM25 corpus stats `(n_docs, adl)` of a `(doc_id, dl)`
-    * sidecar; adl is the truncating integer mean. */
-  private[graft] def stats(dl: DataFrame): DataFrame =
-    dl.agg(count(lit(1)).cast(LongType).as("n_docs"),
-        sum(col("dl")).as("l_total"))
-      .select(col("n_docs"), expr("l_total DIV n_docs").as("adl"))
-
   /** Scatter-gather over ANY block selection that partitions the
     * corpus — (node, term, bucket, df, bytes) rows where `node` is the
     * serving node. df sums from the selection's metadata (exact
-    * because the selection partitions docs), per-node local top-k via
-    * the bounded TopKLong, k·|nodes|-row gather. Returns
-    * (doc_id, score_ppm, node). */
+    * because the selection partitions docs), [[Bm25]] scores keyed by
+    * node, per-node local top-k via the bounded TopKLong,
+    * k·|nodes|-row gather. Returns (doc_id, score_ppm, node). */
   private[graft] def serveBlocks(sel: DataFrame, dl: DataFrame,
       stats: DataFrame, qTerms: Seq[String], k: Int): DataFrame = {
     val s = sel.sparkSession
@@ -292,21 +259,8 @@ object ReplicatedIndex {
     val probed = sel.filter($"term".isin(qTerms: _*))
     val dfreq = probed.groupBy($"term")
       .agg(sum($"df").cast(LongType).as("df"))
-    val decoded = probed
-      .select($"node", $"term", $"bucket", $"df", $"bytes")
-      .as[(Long, String, Long, Int, Array[Byte])]
-      .flatMap { case (node, t, b, n, bytes) =>
-        PostingCodec.decode(bytes, n)
-          .getOrElse(throw new IllegalStateException(
-            s"replicated serve: corrupt postings block $node/'$t'/$b"))
-          .map { case (doc, tf, _) => (node, t, doc, tf) }
-      }.toDF("node", "term", "doc_id", "tf")
-    val scored = decoded
-      .join(dl, "doc_id")
-      .join(broadcast(dfreq), "term")
-      .crossJoin(broadcast(stats))
-      .withColumn("contrib_ppm", expr(ShardedIndex.bm25Ppm))
-      .groupBy($"node", $"doc_id").agg(sum($"contrib_ppm").as("score_ppm"))
+    val scored = Bm25.score(Bm25.decode("replicated serve", "node")(probed),
+      dl, dfreq, stats, "node")
     val topK = udaf(new graft.functions.TopKLong(k))
     scored.groupBy($"node")
       .agg(topK($"score_ppm", $"doc_id", lit(0L)).as("tk"))
@@ -439,7 +393,7 @@ object ReplicatedIndex {
     val dl = rep.dl.join(dead, Seq("doc_id"), "left_anti")
     Replicated(
       rep.assignments.join(dead, Seq("doc_id"), "left_anti"),
-      newPrimary, newReplica, dl, stats(dl), rep.nShards)
+      newPrimary, newReplica, dl, Bm25.stats(dl), rep.nShards)
   }
 
   /** Document UPDATE / re-index on the REPLICATED topology (X109q,
@@ -535,10 +489,9 @@ object ReplicatedIndex {
         $"df", $"bytes")
     // ---- sidecars: dl swaps old for new; stats follow the swap
     val dl = rep.dl.join(ids, Seq("doc_id"), "left_anti")
-      .unionByName(up.select($"doc_id",
-        size(split($"text", " ")).cast(LongType).as("dl")))
+      .unionByName(up.select($"doc_id", Bm25.dl))
     Replicated(rep.assignments.unionByName(novelA), newPrimary,
-      newReplica, dl, stats(dl), rep.nShards)
+      newReplica, dl, Bm25.stats(dl), rep.nShards)
   }
 
   /** PERMANENT loss of the highest node (X119b, q299): [[serveFailover]]

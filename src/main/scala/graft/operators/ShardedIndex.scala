@@ -33,10 +33,11 @@ import org.apache.spark.sql.types.LongType
   *     df-skewed corpus.
   *
   * Each shard's sub-index is the q258 layout (gap-coded LEB128 posting
-  * blocks keyed (shard, term, bucket)) built ONLY from that shard's
-  * docs, so blocks partition docs within a shard and shards partition
-  * the corpus: Σ_{shard,bucket} df = global df stays a metadata-only
-  * aggregate.
+  * blocks keyed (shard, term, bucket) — [[graft.queries.Text.postingStore]]
+  * with the `shard` key) built ONLY from that shard's docs, so blocks
+  * partition docs within a shard and shards partition the corpus:
+  * Σ_{shard,bucket} df = global df stays a metadata-only aggregate.
+  * Scoring is [[Bm25]]'s decode and per-doc fold, keyed by shard.
   *
   * Scale: the probe touches only the query terms' blocks in every
   * shard (Σ df(query terms) decoded rows, embarrassingly parallel
@@ -47,14 +48,6 @@ import org.apache.spark.sql.types.LongType
   */
 object ShardedIndex {
 
-  /** q170's exact rational BM25 per-term contribution (k1 = 6/5,
-    * b = 3/4, raw-ratio RSJ idf) over tf/dl/df/n_docs/adl columns.
-    * Shared with [[ReplicatedIndex]] (r16) so the replicated serve
-    * scores with the identical formula. */
-  private[operators] val bm25Ppm =
-    """(22 * tf * adl * (2 * n_docs - 2 * df + 1) * 1000000)
-       DIV ((10 * tf * adl + 3 * adl + 9 * dl) * (2 * df + 1))"""
-
   /** Every frame of the scatter-gather, exposed for the spec.
     * `merged` is the exact global top-k: (doc_id, score_ppm, shard). */
   final case class Served(
@@ -63,26 +56,6 @@ object ShardedIndex {
       perShard: DataFrame, // (shard, doc_id, score_ppm) local top-k lists
       merged: DataFrame)   // (doc_id, score_ppm, shard) global top-k
 
-  /** One q258-layout sub-index per shard, built as one frame — the
-    * shard key IS the node boundary. Input: (shard, doc_id, text). */
-  private[graft] def buildStore(sharded: DataFrame): DataFrame = {
-    val s = sharded.sparkSession
-    import s.implicits._
-    sharded
-      .select($"shard", $"doc_id", posexplode(split($"text", " ")))
-      .select($"shard", $"doc_id", ($"pos" + 1).as("pos"), $"col".as("term"))
-      .groupBy($"shard", $"term", $"doc_id")
-      .agg(count(lit(1)).as("tf"), min($"pos").as("first_pos"))
-      .groupBy($"shard", $"term", floor($"doc_id" / 100).as("bucket"))
-      .agg(sort_array(collect_list(
-        struct($"doc_id", $"tf", $"first_pos"))).as("ps"))
-      .as[(Long, String, Long, Seq[(Long, Long, Long)])]
-      .map { case (shard, term, bucket, ps) =>
-        (shard, term, bucket, ps.size, PostingCodec.encode(ps))
-      }
-      .toDF("shard", "term", "bucket", "df", "bytes")
-  }
-
   def serve(docs: DataFrame, qTerms: Seq[String], k: Int,
       nShards: Int = 4, globalDf: Boolean = true): Served = {
     val s = docs.sparkSession
@@ -90,43 +63,22 @@ object ShardedIndex {
     val sharded = docs.select(
       pmod(col("doc_id"), lit(nShards.toLong)).as("shard"),
       col("doc_id"), col("text"))
-    // ---- ingest: per-shard sub-indexes
-    val store = buildStore(sharded)
-    // doc-length sidecar, kept per shard (each node owns its docs')
-    val dl = sharded.select($"shard", $"doc_id",
-      size(split($"text", " ")).cast(LongType).as("dl"))
-    // corpus stats are GLOBAL by definition (N, adl)
-    val stats = dl
-      .agg(count(lit(1)).cast(LongType).as("n_docs"), sum($"dl").as("l_total"))
-      .select($"n_docs", expr("l_total DIV n_docs").as("adl"))
+    // ---- ingest: per-shard sub-indexes (the shard key IS the node
+    // boundary) + the doc-length sidecar, kept per shard (each node
+    // owns its docs'); corpus stats are GLOBAL by definition (N, adl)
+    val store = graft.queries.Text.postingStore(sharded, "shard")
+    val dl = sharded.select($"shard", $"doc_id", Bm25.dl)
+    val stats = Bm25.stats(dl)
     // ---- scatter: every shard fetches its own query-term blocks
     val probed = store.filter($"term".isin(qTerms: _*))
     // df: global = metadata summed ACROSS shards (dfs_query_then_fetch);
     // per-shard = the documented footgun, kept only for the spec's
     // divergence pin
-    val dfreq =
-      if (globalDf)
-        probed.groupBy($"term").agg(sum($"df").cast(LongType).as("df"))
-      else
-        probed.groupBy($"shard", $"term")
-          .agg(sum($"df").cast(LongType).as("df"))
-    val decoded = probed
-      .select($"shard", $"term", $"bucket", $"df", $"bytes")
-      .as[(Long, String, Long, Int, Array[Byte])]
-      .flatMap { case (shard, t, b, n, bytes) =>
-        PostingCodec.decode(bytes, n)
-          .getOrElse(throw new IllegalStateException(
-            s"sharded probe: corrupt postings block $shard/'$t'/$b"))
-          .map { case (doc, tf, _) => (shard, t, doc, tf) }
-      }.toDF("shard", "term", "doc_id", "tf")
-    val withDf =
-      if (globalDf) decoded.join(broadcast(dfreq), "term")
-      else decoded.join(broadcast(dfreq), Seq("shard", "term"))
-    val scored = withDf
-      .join(dl, Seq("shard", "doc_id"))
-      .crossJoin(broadcast(stats))
-      .withColumn("contrib_ppm", expr(bm25Ppm))
-      .groupBy($"shard", $"doc_id").agg(sum($"contrib_ppm").as("score_ppm"))
+    val dfKeys = if (globalDf) Seq($"term") else Seq($"shard", $"term")
+    val dfreq = probed.groupBy(dfKeys: _*)
+      .agg(sum($"df").cast(LongType).as("df"))
+    val scored = Bm25.score(Bm25.decode("sharded probe", "shard")(probed),
+      dl, dfreq, stats, "shard")
     // ---- per-shard local top-k: bounded exact-Long aggregate
     val topK = udaf(new graft.functions.TopKLong(k))
     val perShard = scored.groupBy($"shard")

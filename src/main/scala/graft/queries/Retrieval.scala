@@ -4,6 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.core.{Q, Tables}
+import graft.operators.Bm25
 
 /** SURVEY.md §2.11a continued — retrieval scoring and sketch/sampling
   * operators the reference's search-serving side implies (its index sink
@@ -48,15 +49,9 @@ object Retrieval {
        (CAST(sj AS DOUBLE) / CAST(nn AS DOUBLE)) / 1000000.0)
        AS BIGINT)""".replaceAll("\\s+", " ")
 
-  /** q170 — BM25 document ranking (Robertson et al., TREC-3), log-free
-    * rational form: with k1 = 6/5 and b = 3/4, the per-term score
-    *   idf · tf·(k1+1) / (tf + k1·(1−b+b·dl/avgdl))
-    * clears denominators to pure BIGINT arithmetic,
-    *   (22·tf·adl·(2N−2df+1)·10⁶) DIV ((10·tf·adl+3·adl+9·dl)·(2df+1)),
-    * using the raw-ratio RSJ idf (N−df+½)/(df+½) instead of its log —
-    * same ranking direction, no libm (the q122 entropy→Gini lesson) —
-    * and adl = L DIV N (integer-truncated avgdl, a documented spec
-    * choice so both engines share one exact value).
+  /** q170 — BM25 document ranking (Robertson et al., TREC-3) straight
+    * from raw text, in [[Bm25]]'s log-free exact rational form (the
+    * derivation lives there; the oracle replays it as BIGINT SQL).
     *
     * Scale: query terms filter BEFORE any shuffle (the posting-list
     * selectivity an inverted index gives for free — q90's index is the
@@ -68,23 +63,16 @@ object Retrieval {
       import s.implicits._
       val docs = Tables(s, dir, "documents")
       val qTerms = Seq("spark", "window", "merge", "stream")
-      val toks = docs.select($"doc_id",
-        size(split($"text", " ")).cast(LongType).as("dl"),
+      val toks = docs.select($"doc_id", Bm25.dl,
         explode(split($"text", " ")).as("term"))
       val hits = toks.filter($"term".isin(qTerms: _*))
       val tf = hits.groupBy($"doc_id", $"term", $"dl")
         .agg(count(lit(1)).as("tf"))
       val dfreq = hits.select($"doc_id", $"term").distinct()
         .groupBy($"term").agg(count(lit(1)).as("df"))
-      val stats = docs
-        .agg(count(lit(1)).cast(LongType).as("n_docs"),
-          sum(size(split($"text", " "))).cast(LongType).as("l_total"))
-        .select($"n_docs", expr("l_total DIV n_docs").as("adl"))
       tf.join(broadcast(dfreq), "term")
-        .crossJoin(broadcast(stats))
-        .withColumn("contrib_ppm", expr(
-          """(22 * tf * adl * (2 * n_docs - 2 * df + 1) * 1000000)
-             DIV ((10 * tf * adl + 3 * adl + 9 * dl) * (2 * df + 1))"""))
+        .crossJoin(broadcast(Bm25.stats(docs.select(Bm25.dl))))
+        .withColumn("contrib_ppm", Bm25.contrib)
         .groupBy($"doc_id").agg(sum($"contrib_ppm").as("score_ppm"))
         .orderBy($"score_ppm".desc, $"doc_id")
         .limit(20)
@@ -610,31 +598,13 @@ object Retrieval {
       val docs = Tables(s, dir, "documents")
       // serving-side stores (ingest-time cost, probe-time asset)
       val store = graft.queries.Text.postingStore(docs)
-      val dl = docs.select($"doc_id",
-        size(split($"text", " ")).cast(LongType).as("dl"))
-      val stats = dl
-        .agg(count(lit(1)).cast(LongType).as("n_docs"),
-          sum($"dl").as("l_total"))
-        .select($"n_docs", expr("l_total DIV n_docs").as("adl"))
+      val dl = docs.select($"doc_id", Bm25.dl)
       val probed = store.filter($"term".isin(qTerms: _*))
       // df from block metadata alone — blocks partition the docs
       val dfreq = probed.groupBy($"term")
         .agg(sum($"df").cast(LongType).as("df"))
       // tf from the decoded byte streams — the dataloader's read path
-      val decoded = probed.as[(String, Long, Int, Array[Byte])]
-        .flatMap { case (t, _, df, bytes) =>
-          graft.operators.PostingCodec.decode(bytes, df)
-            .getOrElse(throw new IllegalStateException(
-              s"q265: corrupt postings block for term '$t'"))
-            .map { case (doc, tf, _) => (t, doc, tf) }
-        }.toDF("term", "doc_id", "tf")
-      decoded.join(dl, "doc_id")
-        .join(broadcast(dfreq), "term")
-        .crossJoin(broadcast(stats))
-        .withColumn("contrib_ppm", expr(
-          """(22 * tf * adl * (2 * n_docs - 2 * df + 1) * 1000000)
-             DIV ((10 * tf * adl + 3 * adl + 9 * dl) * (2 * df + 1))"""))
-        .groupBy($"doc_id").agg(sum($"contrib_ppm").as("score_ppm"))
+      Bm25.score(Bm25.decode("q265")(probed), dl, dfreq, Bm25.stats(dl))
         .orderBy($"score_ppm".desc, $"doc_id")
         .limit(20)
     },
@@ -1007,35 +977,15 @@ object Retrieval {
       graft.queries.Text.postingStore(docs)
         .write.mode("overwrite").partitionBy("term")
         .parquet(s"$out/postings")
-      docs.select($"doc_id",
-          size(split($"text", " ")).cast(LongType).as("dl"))
+      docs.select($"doc_id", Bm25.dl)
         .write.mode("overwrite").parquet(s"$out/docstats")
       // ---- serve: FILES only from here on
       val store = s.read.parquet(s"$out/postings")
         .filter($"term".isin(qTerms: _*)) // literal partition pruning
       val dl = s.read.parquet(s"$out/docstats")
-      val stats = dl
-        .agg(count(lit(1)).cast(LongType).as("n_docs"),
-          sum($"dl").as("l_total"))
-        .select($"n_docs", expr("l_total DIV n_docs").as("adl"))
       val dfreq = store.groupBy($"term")
         .agg(sum($"df").cast(LongType).as("df"))
-      val decoded = store
-        .select($"term", $"bucket", $"df", $"bytes")
-        .as[(String, Long, Int, Array[Byte])]
-        .flatMap { case (t, b, n, bytes) =>
-          graft.operators.PostingCodec.decode(bytes, n)
-            .getOrElse(throw new IllegalStateException(
-              s"q273: corrupt persisted block '$t'/$b"))
-            .map { case (doc, tf, _) => (t, doc, tf) }
-        }.toDF("term", "doc_id", "tf")
-      decoded.join(dl, "doc_id")
-        .join(broadcast(dfreq), "term")
-        .crossJoin(broadcast(stats))
-        .withColumn("contrib_ppm", expr(
-          """(22 * tf * adl * (2 * n_docs - 2 * df + 1) * 1000000)
-             DIV ((10 * tf * adl + 3 * adl + 9 * dl) * (2 * df + 1))"""))
-        .groupBy($"doc_id").agg(sum($"contrib_ppm").as("score_ppm"))
+      Bm25.score(Bm25.decode("q273")(store), dl, dfreq, Bm25.stats(dl))
         .orderBy($"score_ppm".desc, $"doc_id")
         .limit(20)
     },
@@ -1097,25 +1047,15 @@ object Retrieval {
       import s.implicits._
       val qTerms = Seq("line", "value", "key", "column")
       val docs = Tables(s, dir, "documents")
-      val dl = docs.select($"doc_id",
-        size(split($"text", " ")).cast(LongType).as("dl"))
-      val stats = dl
-        .agg(count(lit(1)).cast(LongType).as("n_docs"),
-          sum($"dl").as("l_total"))
-        .select($"n_docs", expr("l_total DIV n_docs").as("adl"))
+      val dl = docs.select($"doc_id", Bm25.dl)
       val toks = docs.select($"doc_id",
         explode(split($"text", " ")).as("term"))
       val tf = toks.groupBy($"term", $"doc_id")
         .agg(count(lit(1)).as("tf"))
       val dfreq = tf.groupBy($"term").agg(count(lit(1)).as("df"))
       // ---- ingest: freeze the exact integer impact into the index
-      val store = tf.join(dl, "doc_id")
-        .join(broadcast(dfreq), "term")
-        .crossJoin(broadcast(stats))
-        .select($"term", $"doc_id", expr(
-          """(22 * tf * adl * (2 * n_docs - 2 * df + 1) * 1000000)
-             DIV ((10 * tf * adl + 3 * adl + 9 * dl) * (2 * df + 1))""")
-          .as("impact_ppm"))
+      val store = Bm25.contributions(tf, dl, dfreq, Bm25.stats(dl))
+        .select($"term", $"doc_id", $"contrib_ppm".as("impact_ppm"))
         .groupBy($"term", floor($"doc_id" / 100).as("bucket"))
         .agg(sort_array(collect_list(
           struct($"doc_id", $"impact_ppm", lit(0L)))).as("ps"))
@@ -1266,31 +1206,13 @@ object Retrieval {
       // doc-length sidecar + corpus stats
       val store = graft.queries.Text.postingStore(docs)
       val dfAll = store.groupBy($"term").agg(sum($"df").cast(LongType).as("df"))
-      val dl = docs.select($"doc_id",
-        size(split($"text", " ")).cast(LongType).as("dl"))
-      val stats = dl
-        .agg(count(lit(1)).cast(LongType).as("n_docs"), sum($"dl").as("l_total"))
-        .select($"n_docs", expr("l_total DIV n_docs").as("adl"))
-      def decode(blocks: org.apache.spark.sql.DataFrame) = blocks
-        .select($"term", $"bucket", $"df", $"bytes")
-        .as[(String, Long, Int, Array[Byte])]
-        .flatMap { case (t, _, n, bytes) =>
-          graft.operators.PostingCodec.decode(bytes, n)
-            .getOrElse(throw new IllegalStateException(
-              s"q287: corrupt postings block for term '$t'"))
-            .map { case (doc, tf, _) => (t, doc, tf) }
-        }.toDF("term", "doc_id", "tf")
-      def bm25(decoded: org.apache.spark.sql.DataFrame,
-          dfq: org.apache.spark.sql.DataFrame) = decoded
-        .join(dl, "doc_id").join(broadcast(dfq), "term")
-        .crossJoin(broadcast(stats))
-        .withColumn("contrib_ppm", expr(
-          """(22 * tf * adl * (2 * n_docs - 2 * df + 1) * 1000000)
-             DIV ((10 * tf * adl + 3 * adl + 9 * dl) * (2 * df + 1))"""))
+      val dl = docs.select($"doc_id", Bm25.dl)
+      val stats = Bm25.stats(dl)
+      val decode = Bm25.decode("q287") _
       // ---- phase 1: retrieve top-10 for the original terms
       val dfOrig = dfAll.filter($"term".isin(origTerms: _*))
-      val fb = bm25(decode(store.filter($"term".isin(origTerms: _*))), dfOrig)
-        .groupBy($"doc_id").agg(sum($"contrib_ppm").as("score_ppm"))
+      val fb = Bm25.score(decode(store.filter($"term".isin(origTerms: _*))),
+          dl, dfOrig, stats)
         .orderBy($"score_ppm".desc, $"doc_id").limit(10)
         .select($"doc_id")
       // ---- phase 2: fetch the winners, mine expansion terms
@@ -1313,8 +1235,8 @@ object Retrieval {
         .select($"term", $"df", $"w")
       val expList = exps.agg(
         concat_ws(",", sort_array(collect_list($"term"))).as("exp_terms"))
-      bm25(decode(store.join(weights.select($"term"), "term")),
-          dfq.select($"term", $"df"))
+      Bm25.contributions(decode(store.join(weights.select($"term"), "term")),
+          dl, dfq.select($"term", $"df"), stats)
         .join(broadcast(weights), "term")
         .groupBy($"doc_id")
         .agg(sum($"w" * $"contrib_ppm").as("score_ppm"))
@@ -1433,28 +1355,12 @@ object Retrieval {
       val docs = Tables(s, dir, "documents")
       // ---- retrieve: BM25 top-20 off the compressed store
       val store = graft.queries.Text.postingStore(docs)
-      val dl = docs.select($"doc_id",
-        size(split($"text", " ")).cast(LongType).as("dl"))
-      val stats = dl
-        .agg(count(lit(1)).cast(LongType).as("n_docs"), sum($"dl").as("l_total"))
-        .select($"n_docs", expr("l_total DIV n_docs").as("adl"))
+      val dl = docs.select($"doc_id", Bm25.dl)
       val probed = store.filter($"term".isin(qTerms: _*))
       val dfreq = probed.groupBy($"term")
         .agg(sum($"df").cast(LongType).as("df"))
-      val decoded = probed.as[(String, Long, Int, Array[Byte])]
-        .flatMap { case (t, _, df, bytes) =>
-          graft.operators.PostingCodec.decode(bytes, df)
-            .getOrElse(throw new IllegalStateException(
-              s"q291: corrupt postings block for term '$t'"))
-            .map { case (doc, tf, _) => (t, doc, tf) }
-        }.toDF("term", "doc_id", "tf")
-      val top20 = decoded.join(dl, "doc_id")
-        .join(broadcast(dfreq), "term")
-        .crossJoin(broadcast(stats))
-        .withColumn("contrib_ppm", expr(
-          """(22 * tf * adl * (2 * n_docs - 2 * df + 1) * 1000000)
-             DIV ((10 * tf * adl + 3 * adl + 9 * dl) * (2 * df + 1))"""))
-        .groupBy($"doc_id").agg(sum($"contrib_ppm").as("score_ppm"))
+      val top20 = Bm25.score(Bm25.decode("q291")(probed), dl, dfreq,
+          Bm25.stats(dl))
         .orderBy($"score_ppm".desc, $"doc_id").limit(20)
       val ranked = top20.withColumn("rnk", row_number().over(
         org.apache.spark.sql.expressions.Window
@@ -1584,36 +1490,17 @@ object Retrieval {
         .withColumn("shard",
           pmod(conv(substring(md5($"term"), 1, 15), 16, 10).cast(LongType),
             lit(nShards.toLong)))
-      val dl = docs.select($"doc_id",
-        size(split($"text", " ")).cast(LongType).as("dl"))
-      val stats = dl
-        .agg(count(lit(1)).cast(LongType).as("n_docs"), sum($"dl").as("l_total"))
-        .select($"n_docs", expr("l_total DIV n_docs").as("adl"))
+      val dl = docs.select($"doc_id", Bm25.dl)
       // ---- route: only the shards owning a query term are probed
       val probed = store.filter($"term".isin(qTerms: _*))
       // df is SHARD-LOCAL by construction: the owning shard holds the
       // term's entire posting list (no cross-shard df step)
       val dfreq = probed.groupBy($"shard", $"term")
         .agg(sum($"df").cast(LongType).as("df"))
-      val decoded = probed
-        .select($"shard", $"term", $"bucket", $"df", $"bytes")
-        .as[(Long, String, Long, Int, Array[Byte])]
-        .flatMap { case (sh, t, _, n, bytes) =>
-          graft.operators.PostingCodec.decode(bytes, n)
-            .getOrElse(throw new IllegalStateException(
-              s"q293: corrupt postings block $sh/'$t'"))
-            .map { case (doc, tf, _) => (sh, t, doc, tf) }
-        }.toDF("shard", "term", "doc_id", "tf")
       // per-shard PARTIAL scores (complete per term, partial per doc)
-      val partials = decoded
-        .join(dl, "doc_id")
-        .join(broadcast(dfreq), Seq("shard", "term"))
-        .crossJoin(broadcast(stats))
-        .withColumn("contrib_ppm", expr(
-          """(22 * tf * adl * (2 * n_docs - 2 * df + 1) * 1000000)
-             DIV ((10 * tf * adl + 3 * adl + 9 * dl) * (2 * df + 1))"""))
-        .groupBy($"shard", $"doc_id")
-        .agg(sum($"contrib_ppm").as("partial_ppm"))
+      val partials = Bm25.score(Bm25.decode("q293", "shard")(probed), dl,
+          dfreq, Bm25.stats(dl), "shard")
+        .withColumnRenamed("score_ppm", "partial_ppm")
       // ---- gather: sum partials per doc ACROSS shards, then top-k
       partials.groupBy($"doc_id")
         .agg(sum($"partial_ppm").as("score_ppm"),
@@ -1988,9 +1875,9 @@ object Retrieval {
     *   wtf  = 2·tf_title + tf_body,
     *   wdl  = 2·len_title + len_body,
     *   awdl = Σ wdl DIV N,
-    * then q170's exact rational form with (tf, dl, adl) → (wtf, wdl,
-    * awdl) — still all-BIGINT. The index stores PER-FIELD tfs in the
-    * q258 codec (the triple rides as (doc_id, tf_title, tf_body) —
+    * then [[Bm25]]'s exact rational form with (tf, dl, adl) → (wtf,
+    * wdl, awdl) — [[Bm25.Fielded]]. The index stores PER-FIELD tfs in
+    * the q258 codec (the triple rides as (doc_id, tf_title, tf_body) —
     * varints take 0 fine), so field WEIGHTS stay query-time knobs: the
     * probe folds them in after decode, and reweighting never rebuilds
     * the index (the impact-freeze trade q279 documents, taken the
@@ -2011,56 +1898,17 @@ object Retrieval {
       qTerms: Seq[String], k: Int): org.apache.spark.sql.DataFrame = {
     val s = docs.sparkSession
     import s.implicits._
-    val kTitle = 5
-      // ---- ingest: fielded posting store — (doc, tf_title, tf_body)
-      // triples through the q258 codec; weights NOT baked in
-      val toks = docs
-        .select(col("doc_id"), posexplode(split(col("text"), " ")))
-        .select($"doc_id", ($"pos" + 1).cast(LongType).as("pos"),
-          $"col".as("term"))
-      val fielded = toks
-        .groupBy($"term", $"doc_id")
-        .agg(sum(when($"pos" <= kTitle, 1L).otherwise(0L)).as("tf_t"),
-          sum(when($"pos" > kTitle, 1L).otherwise(0L)).as("tf_b"))
-      val store = fielded
-        .groupBy($"term", floor($"doc_id" / 100).as("bucket"))
-        .agg(sort_array(collect_list(
-          struct($"doc_id", $"tf_t", $"tf_b"))).as("ps"))
-        .as[(String, Long, Seq[(Long, Long, Long)])]
-        .map { case (t, b, ps) =>
-          (t, b, ps.size, graft.operators.PostingCodec.encode(ps))
-        }.toDF("term", "bucket", "df", "bytes")
-      // field-length sidecar + weighted corpus stats
-      val flen = docs.select($"doc_id",
-          size(split($"text", " ")).cast(LongType).as("dl"))
-        .select($"doc_id", least($"dl", lit(kTitle.toLong)).as("lt"),
-          ($"dl" - least($"dl", lit(kTitle.toLong))).as("lb"))
-      val stats = flen
-        .agg(count(lit(1)).cast(LongType).as("n_docs"),
-          sum(lit(2L) * $"lt" + $"lb").as("wl_total"))
-        .select($"n_docs", expr("wl_total DIV n_docs").as("awdl"))
-      // ---- probe: decode, fold the query-time field weights, rank
-      val probed = store.filter($"term".isin(qTerms: _*))
-      val dfreq = probed.groupBy($"term")
-        .agg(sum($"df").cast(LongType).as("df"))
-      val decoded = probed.as[(String, Long, Int, Array[Byte])]
-        .flatMap { case (t, _, n, bytes) =>
-          graft.operators.PostingCodec.decode(bytes, n)
-            .getOrElse(throw new IllegalStateException(
-              s"q298: corrupt fielded postings block for term '$t'"))
-            .map { case (doc, tfT, tfB) => (t, doc, tfT, tfB) }
-        }.toDF("term", "doc_id", "tf_t", "tf_b")
-      decoded.join(flen, "doc_id")
-        .join(broadcast(dfreq), "term")
-        .crossJoin(broadcast(stats))
-        .withColumn("contrib_ppm", expr(
-          """(22 * (2 * tf_t + tf_b) * awdl * (2 * n_docs - 2 * df + 1)
-               * 1000000)
-             DIV ((10 * (2 * tf_t + tf_b) * awdl + 3 * awdl
-                   + 9 * (2 * lt + lb)) * (2 * df + 1))"""))
-        .groupBy($"doc_id").agg(sum($"contrib_ppm").as("score_ppm"))
-        .orderBy($"score_ppm".desc, $"doc_id")
-        .limit(k)
+    // ---- ingest: fielded posting store + field-length sidecar
+    val store = Bm25.Fielded.store(docs)
+    val flen = Bm25.Fielded.lengths(docs)
+    // ---- probe: decode, fold the query-time field weights, rank
+    val probed = store.filter($"term".isin(qTerms: _*))
+    val dfreq = probed.groupBy($"term")
+      .agg(sum($"df").cast(LongType).as("df"))
+    Bm25.Fielded.score(Bm25.Fielded.decode("q298")(probed), flen, dfreq,
+        Bm25.Fielded.stats(flen))
+      .orderBy($"score_ppm".desc, $"doc_id")
+      .limit(k)
   }
 
   val q298 = Q(
@@ -2275,29 +2123,12 @@ object Retrieval {
       val qTerms = Seq("spark", "key", "dup")
       val docs = Tables(s, dir, "documents")
       val store = graft.queries.Text.postingStore(docs)
-      val dl = docs.select($"doc_id",
-        size(split($"text", " ")).cast(LongType).as("dl"))
-      val stats = dl
-        .agg(count(lit(1)).cast(LongType).as("n_docs"),
-          sum($"dl").as("l_total"))
-        .select($"n_docs", expr("l_total DIV n_docs").as("adl"))
+      val dl = docs.select($"doc_id", Bm25.dl)
       val probed = store.filter($"term".isin(qTerms: _*))
       val dfreq = probed.groupBy($"term")
         .agg(sum($"df").cast(LongType).as("df"))
-      val scored = probed.as[(String, Long, Int, Array[Byte])]
-        .flatMap { case (t, _, n, bytes) =>
-          graft.operators.PostingCodec.decode(bytes, n)
-            .getOrElse(throw new IllegalStateException(
-              s"q301: corrupt postings block for term '$t'"))
-            .map { case (doc, tf, _) => (t, doc, tf) }
-        }.toDF("term", "doc_id", "tf")
-        .join(dl, "doc_id")
-        .join(broadcast(dfreq), "term")
-        .crossJoin(broadcast(stats))
-        .withColumn("contrib_ppm", expr(
-          """(22 * tf * adl * (2 * n_docs - 2 * df + 1) * 1000000)
-             DIV ((10 * tf * adl + 3 * adl + 9 * dl) * (2 * df + 1))"""))
-        .groupBy($"doc_id").agg(sum($"contrib_ppm").as("score_ppm"))
+      val scored = Bm25.score(Bm25.decode("q301")(probed), dl, dfreq,
+        Bm25.stats(dl))
       searchAfterPages(scored, pageSize = 10)
     },
     Some("""
@@ -2463,22 +2294,8 @@ object Retrieval {
       // selection partitions the corpus (q294's law)
       val dfreq = probed.groupBy($"term")
         .agg(sum($"df").cast(LongType).as("df"))
-      val scored = probed
-        .select($"node", $"term", $"bucket", $"df", $"bytes")
-        .as[(Long, String, Long, Int, Array[Byte])]
-        .flatMap { case (n, t, b, df, bytes) =>
-          graft.operators.PostingCodec.decode(bytes, df)
-            .getOrElse(throw new IllegalStateException(
-              s"q310: corrupt routed block $n/'$t'/$b"))
-            .map { case (doc, tf, _) => (t, doc, tf) }
-        }.toDF("term", "doc_id", "tf")
-        .join(rep.dl, "doc_id")
-        .join(broadcast(dfreq), "term")
-        .crossJoin(broadcast(rep.stats))
-        .withColumn("contrib_ppm", expr(
-          """(22 * tf * adl * (2 * n_docs - 2 * df + 1) * 1000000)
-             DIV ((10 * tf * adl + 3 * adl + 9 * dl) * (2 * df + 1))"""))
-        .groupBy($"doc_id").agg(sum($"contrib_ppm").as("score_ppm"))
+      val scored = Bm25.score(Bm25.decode("q310", "node")(probed), rep.dl,
+        dfreq, rep.stats)
       searchAfterPages(scored, pageSize = 10)
     },
     q301.oracle, // the single-index from-raw replay — topology never enters
@@ -2650,57 +2467,20 @@ object Retrieval {
       import s.implicits._
       val qTerms = Seq("table", "sort", "dup", "key")
       val nShards = 4
-      val kTitle = 5
       val docs = Tables(s, dir, "documents")
       // ---- ingest: fielded sub-stores per shard
-      val fielded = docs
-        .select(pmod($"doc_id", lit(nShards.toLong)).as("shard"),
-          col("doc_id"), posexplode(split(col("text"), " ")))
-        .select($"shard", $"doc_id",
-          ($"pos" + 1).cast(LongType).as("pos"), $"col".as("term"))
-        .groupBy($"shard", $"term", $"doc_id")
-        .agg(sum(when($"pos" <= kTitle, 1L).otherwise(0L)).as("tf_t"),
-          sum(when($"pos" > kTitle, 1L).otherwise(0L)).as("tf_b"))
-      val store = fielded
-        .groupBy($"shard", $"term", floor($"doc_id" / 100).as("bucket"))
-        .agg(sort_array(collect_list(
-          struct($"doc_id", $"tf_t", $"tf_b"))).as("ps"))
-        .as[(Long, String, Long, Seq[(Long, Long, Long)])]
-        .map { case (sh, t, b, ps) =>
-          (sh, t, b, ps.size, graft.operators.PostingCodec.encode(ps))
-        }.toDF("shard", "term", "bucket", "df", "bytes")
-      val flen = docs.select($"doc_id",
-          size(split($"text", " ")).cast(LongType).as("dl"))
-        .select($"doc_id", least($"dl", lit(kTitle.toLong)).as("lt"),
-          ($"dl" - least($"dl", lit(kTitle.toLong))).as("lb"))
-      val stats = flen
-        .agg(count(lit(1)).cast(LongType).as("n_docs"),
-          sum(lit(2L) * $"lt" + $"lb").as("wl_total"))
-        .select($"n_docs", expr("wl_total DIV n_docs").as("awdl"))
+      val store = Bm25.Fielded.store(
+        docs.select(pmod($"doc_id", lit(nShards.toLong)).as("shard"),
+          $"doc_id", $"text"), "shard")
+      val flen = Bm25.Fielded.lengths(docs)
       // ---- scatter: per-shard probe; df = field-blind metadata sum
       // ACROSS shards (the dfs_query_then_fetch step)
       val probed = store.filter($"term".isin(qTerms: _*))
       val dfreq = probed.groupBy($"term")
         .agg(sum($"df").cast(LongType).as("df"))
-      val decoded = probed
-        .select($"shard", $"term", $"bucket", $"df", $"bytes")
-        .as[(Long, String, Long, Int, Array[Byte])]
-        .flatMap { case (sh, t, b, n, bytes) =>
-          graft.operators.PostingCodec.decode(bytes, n)
-            .getOrElse(throw new IllegalStateException(
-              s"q312: corrupt fielded block $sh/'$t'/$b"))
-            .map { case (doc, tfT, tfB) => (sh, t, doc, tfT, tfB) }
-        }.toDF("shard", "term", "doc_id", "tf_t", "tf_b")
-      val scored = decoded.join(flen, "doc_id")
-        .join(broadcast(dfreq), "term")
-        .crossJoin(broadcast(stats))
-        .withColumn("contrib_ppm", expr(
-          """(22 * (2 * tf_t + tf_b) * awdl * (2 * n_docs - 2 * df + 1)
-               * 1000000)
-             DIV ((10 * (2 * tf_t + tf_b) * awdl + 3 * awdl
-                   + 9 * (2 * lt + lb)) * (2 * df + 1))"""))
-        .groupBy($"shard", $"doc_id")
-        .agg(sum($"contrib_ppm").as("score_ppm"))
+      val scored = Bm25.Fielded.score(
+        Bm25.Fielded.decode("q312", "shard")(probed), flen, dfreq,
+        Bm25.Fielded.stats(flen), "shard")
       // ---- per-shard local top-k, then the k·S gather
       val topK = udaf(new graft.functions.TopKLong(20))
       scored.groupBy($"shard")
@@ -2778,10 +2558,9 @@ object Retrieval {
         graft.operators.IndexReshard.position($"doc_id").as("p"))
       val a0 = graft.operators.IndexReshard
         .assign(positioned, 4, "shard")
-      val single = graft.operators.ShardedIndex.buildStore(
-        a0.select($"shard", $"doc_id", $"text"))
-      val dl = docs.select($"doc_id",
-        size(split($"text", " ")).cast(LongType).as("dl"))
+      val single = graft.queries.Text.postingStore(
+        a0.select($"shard", $"doc_id", $"text"), "shard")
+      val dl = docs.select($"doc_id", Bm25.dl)
       replicatedEvidence(
         graft.operators.ReplicatedIndex.addReplicas(single, dl, 4))
     },
@@ -3025,8 +2804,7 @@ object Retrieval {
       graft.operators.BlockMaxWand.ubSidecar(docs)
         .write.mode("overwrite").partitionBy("term")
         .parquet(s"$out/ub")
-      docs.select($"doc_id",
-          size(split($"text", " ")).cast(LongType).as("dl"))
+      docs.select($"doc_id", Bm25.dl)
         .write.mode("overwrite").parquet(s"$out/docstats")
       // ---- serve: FILES only from here on
       val storeSel = s.read.parquet(s"$out/postings")
@@ -3034,12 +2812,8 @@ object Retrieval {
       val ubSel = s.read.parquet(s"$out/ub")
         .filter($"term".isin(qTerms: _*))
       val dl = s.read.parquet(s"$out/docstats")
-      val stats = dl
-        .agg(count(lit(1)).cast(LongType).as("n_docs"),
-          sum($"dl").as("l_total"))
-        .select($"n_docs", expr("l_total DIV n_docs").as("adl"))
       val pr = graft.operators.BlockMaxWand
-        .probeStored(storeSel, ubSel, dl, stats, k = 20)
+        .probeStored(storeSel, ubSel, dl, Bm25.stats(dl), k = 20)
       // ---- the decode ledger, off metadata + the probe's own frames
       val nMeta = ubSel.agg(count(lit(1)).as("n_blocks_meta"))
       val probedBuckets = pr.seeds.unionByName(pr.survivors)
@@ -3140,9 +2914,9 @@ object Retrieval {
       import s.implicits._
       val qTerms = Seq("merge", "dup", "vector")
       val docs = Tables(s, dir, "documents")
-      val store = graft.operators.ShardedIndex.buildStore(
+      val store = graft.queries.Text.postingStore(
         docs.select(pmod($"doc_id", lit(4L)).as("shard"), $"doc_id",
-          $"text"))
+          $"text"), "shard")
       // per-shard match: decode only that shard's query-term blocks
       val matches = store.filter($"term".isin(qTerms: _*))
         .select($"shard", $"term", $"bucket", $"df", $"bytes")
@@ -3333,10 +3107,6 @@ object Retrieval {
       rep.assignments.write.mode("overwrite").parquet(s"$out/routing")
       // ---- serve: FILES only from here on
       val dl = s.read.parquet(s"$out/docstats")
-      val stats = dl
-        .agg(count(lit(1)).cast(LongType).as("n_docs"),
-          sum($"dl").as("l_total"))
-        .select($"n_docs", expr("l_total DIV n_docs").as("adl"))
       val assignments = s.read.parquet(s"$out/routing")
       val mounted = graft.operators.ReplicatedIndex.Replicated(
         assignments,
@@ -3344,7 +3114,7 @@ object Retrieval {
           .filter($"term".isin(qTerms: _*)), // partition pruning
         s.read.parquet(s"$out/replica")
           .filter($"term".isin(qTerms: _*)),
-        dl, stats, 4)
+        dl, Bm25.stats(dl), 4)
       graft.operators.ReplicatedIndex
         .serveFailover(mounted, failed, qTerms, k = 20)
         .join(assignments, "doc_id")

@@ -1867,28 +1867,45 @@ object Text {
     * the final aggregate is keyed by doc_id over Σ df(probed terms)
     * rows — never corpus-sized. The encode pass is the index build
     * itself (q258's cost, paid once, amortized over every probe). */
-  /** The compressed posting STORE (term, bucket, df, bytes) of a
-    * documents frame — q258's encode pass factored out, shared by
-    * q259 (serve), q263's positional sibling and q264 (segment
-    * merge). Blocks survive only as LEB128 byte streams. */
+  /** The compressed posting STORE (keys…, term, bucket, df, bytes) of
+    * a (keys…, doc_id, text) frame — q258's encode pass factored out,
+    * shared by every serve, merge and maintenance verb. Blocks survive
+    * only as LEB128 byte streams. `keys` are the leading Long
+    * placement columns: none for one index, `shard` for a doc-sharded
+    * sub-index per shard (q283), `node, origin` for the replica copy
+    * (q294). */
   private[graft] def postingStore(
-      docs: org.apache.spark.sql.DataFrame)
+      docs: org.apache.spark.sql.DataFrame, keys: String*)
       : org.apache.spark.sql.DataFrame = {
     val s = docs.sparkSession
     import s.implicits._
-    docs
-      .select(col("doc_id"), posexplode(split(col("text"), " ")))
-      .select($"doc_id", ($"pos" + 1).as("pos"), $"col".as("term"))
-      .groupBy($"term", $"doc_id")
+    import graft.operators.PostingCodec.encode
+    val blocks = docs
+      .select(keys.map(col) :+ col("doc_id") :+
+        posexplode(split(col("text"), " ")): _*)
+      .select(keys.map(col) :+ $"doc_id" :+ ($"pos" + 1).as("pos") :+
+        $"col".as("term"): _*)
+      .groupBy(keys.map(col) :+ $"term" :+ $"doc_id": _*)
       .agg(count(lit(1)).as("tf"), min($"pos").as("first_pos"))
-      .groupBy($"term", floor($"doc_id" / 100).as("bucket"))
+      .groupBy(keys.map(col) :+ $"term" :+
+        floor($"doc_id" / 100).as("bucket"): _*)
       .agg(sort_array(collect_list(
         struct($"doc_id", $"tf", $"first_pos"))).as("ps"))
-      .as[(String, Long, Seq[(Long, Long, Long)])]
-      .map { case (term, bucket, ps) =>
-        (term, bucket, ps.size, graft.operators.PostingCodec.encode(ps))
-      }
-      .toDF("term", "bucket", "df", "bytes")
+    keys match {
+      case Seq() =>
+        blocks.as[(String, Long, Seq[(Long, Long, Long)])]
+          .map { case (t, b, ps) => (t, b, ps.size, encode(ps)) }
+          .toDF("term", "bucket", "df", "bytes")
+      case Seq(k) =>
+        blocks.as[(Long, String, Long, Seq[(Long, Long, Long)])]
+          .map { case (v, t, b, ps) => (v, t, b, ps.size, encode(ps)) }
+          .toDF(k, "term", "bucket", "df", "bytes")
+      case Seq(k1, k2) =>
+        blocks.as[(Long, Long, String, Long, Seq[(Long, Long, Long)])]
+          .map { case (v1, v2, t, b, ps) =>
+            (v1, v2, t, b, ps.size, encode(ps))
+          }.toDF(k1, k2, "term", "bucket", "df", "bytes")
+    }
   }
 
   /** The front-coded term-dictionary STORE (block, n_terms, first_term,
@@ -3986,9 +4003,9 @@ object Text {
       import s.implicits._
       val qTerms = Seq("table", "scan", "key")
       val docs = Tables(s, dir, "documents")
-      val store = graft.operators.ShardedIndex.buildStore(
+      val store = postingStore(
         docs.select(pmod($"doc_id", lit(4L)).as("shard"), $"doc_id",
-          $"text"))
+          $"text"), "shard")
       val probed = store.filter($"term".isin(qTerms: _*))
       // zone-map intersection on (shard, bucket) METADATA — zero decode
       val cand = probed.groupBy($"shard", $"bucket")

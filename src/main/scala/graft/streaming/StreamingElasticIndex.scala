@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.core.Barriers._
-import graft.operators.{IndexReshard, PostingCodec, ShardedIndex}
+import graft.operators.{Bm25, IndexReshard, PostingCodec}
 
 /** Streaming ELASTIC sharded index (SURVEY.md §2.9 T37): the q283
   * scatter-gather topology maintained under a stream, with q288's
@@ -31,8 +31,8 @@ import graft.operators.{IndexReshard, PostingCodec, ShardedIndex}
   * the grow changes NO answer (scores use only global stats — the
   * q283 dfs_query_then_fetch argument, here as an invariance law);
   * after the final compaction the maintained store equals
-  * [[ShardedIndex.buildStore]] over the grown-ring assignment of all
-  * delivered docs BYTE FOR BYTE (pre-grow arrivals moved by the
+  * [[graft.queries.Text.postingStore]] over the grown-ring assignment
+  * of all delivered docs BYTE FOR BYTE (pre-grow arrivals moved by the
   * surgery, post-grow arrivals routed by the grown ring — one
   * canonical store either way); replays are no-ops (T26 discipline).
   *
@@ -96,11 +96,11 @@ object StreamingElasticIndex {
           IndexReshard.position($"doc_id"))
         val assigned = IndexReshard.assign(positioned, state.nShards, "shard")
           .select($"shard", $"doc_id", $"text")
-        ShardedIndex.buildStore(assigned).barrier() :: state.segments
+        graft.queries.Text.postingStore(assigned, "shard").barrier() ::
+          state.segments
       }
     val seenUnion = state.seenIds.unionByName(fresh.select($"doc_id"))
-    val dlUnion = state.dl.unionByName(fresh.select($"doc_id",
-      size(split($"text", " ")).cast("long").as("dl")))
+    val dlUnion = state.dl.unionByName(fresh.select($"doc_id", Bm25.dl))
     if (nBatches % CompactEvery == 0)
       EiState(
         if (segs.lengthCompare(1) > 0) List(mergeSharded(segs).barrier())

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.core.Barriers._
-import graft.operators.IndexSegmentMerge
+import graft.operators.{Bm25, IndexSegmentMerge}
 
 /** Streaming POSTINGS maintenance (SURVEY.md §2.9 T31): the inverted
   * index's streaming member — each micro-batch of NEW documents builds
@@ -78,8 +78,7 @@ object StreamingPostings {
     val seen =
       if (nBatches % CompactEvery == 0) seenUnion.distinct().barrier()
       else seenUnion
-    val dlUnion = state.dl.unionByName(fresh.select(col("doc_id"),
-      size(split(col("text"), " ")).cast("long").as("dl")))
+    val dlUnion = state.dl.unionByName(fresh.select(col("doc_id"), Bm25.dl))
     val dl =
       if (nBatches % CompactEvery == 0) dlUnion.barrier()
       else dlUnion
@@ -96,8 +95,9 @@ object StreamingPostings {
     * per-block df across ALL segments (segments hold disjoint doc ids
     * — q264's overlap law — and buckets partition docs within one, so
     * metadata alone is still exact df), dl/adl from the maintained
-    * sidecar. Raw text is never touched at probe time. Returns
-    * (doc_id, score_ppm) top-k; empty index ⇒ empty frame.
+    * sidecar, scored by [[graft.operators.Bm25]]. Raw text is never
+    * touched at probe time. Returns (doc_id, score_ppm) top-k; empty
+    * index ⇒ empty frame.
     *
     * Scale: probe cost = query-term blocks × live segments (bounded by
     * CompactEvery) + the one doc_id equi-join against the 2-column dl
@@ -107,9 +107,6 @@ object StreamingPostings {
   def serve(state: PsState, qTerms: Seq[String], k: Int): DataFrame = {
     val spark = state.seenIds.sparkSession
     import spark.implicits._
-    val stats = state.dl
-      .agg(count(lit(1)).cast("long").as("n_docs"), sum($"dl").as("l_total"))
-      .select($"n_docs", expr("l_total DIV n_docs").as("adl"))
     val blocks = state.segments
       .map(_.filter($"term".isin(qTerms: _*)))
       .reduceOption(_ unionByName _)
@@ -117,22 +114,8 @@ object StreamingPostings {
         .select($"doc_id", $"dl".as("score_ppm")))
     val dfreq = blocks.groupBy($"term")
       .agg(sum($"df").cast("long").as("df"))
-    val decoded = blocks
-      .select($"term", $"bucket", $"df", $"bytes")
-      .as[(String, Long, Int, Array[Byte])]
-      .flatMap { case (t, b, n, bytes) =>
-        graft.operators.PostingCodec.decode(bytes, n)
-          .getOrElse(throw new IllegalStateException(
-            s"streaming serve: corrupt postings block '$t'/$b"))
-          .map { case (doc, tf, _) => (t, doc, tf) }
-      }.toDF("term", "doc_id", "tf")
-    decoded.join(state.dl, "doc_id")
-      .join(broadcast(dfreq), "term")
-      .crossJoin(broadcast(stats))
-      .withColumn("contrib_ppm", expr(
-        """(22 * tf * adl * (2 * n_docs - 2 * df + 1) * 1000000)
-           DIV ((10 * tf * adl + 3 * adl + 9 * dl) * (2 * df + 1))"""))
-      .groupBy($"doc_id").agg(sum($"contrib_ppm").as("score_ppm"))
+    Bm25.score(Bm25.decode("streaming serve")(blocks), state.dl, dfreq,
+        Bm25.stats(state.dl))
       .orderBy($"score_ppm".desc, $"doc_id")
       .limit(k)
   }
@@ -223,8 +206,7 @@ object StreamingPostings {
       else grown
     val seen = state.seenIds.unionByName(ids).distinct().barrier()
     val dl = state.dl.join(ids, Seq("doc_id"), "left_anti")
-      .unionByName(up.select($"doc_id",
-        size(split($"text", " ")).cast("long").as("dl")))
+      .unionByName(up.select($"doc_id", Bm25.dl))
       .barrier()
     PsState(segs, seen, dl, state.batches, state.tombstones)
   }

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.core.Barriers._
-import graft.operators.{IndexReshard, PostingCodec, ReplicatedIndex, ShardedIndex}
+import graft.operators.{Bm25, IndexReshard, PostingCodec, ReplicatedIndex}
 
 /** Streaming REPLICATED index (SURVEY.md §2.9 T39, r16): q294's
   * two-copy topology maintained under a stream — every production
@@ -96,16 +96,16 @@ object StreamingReplicatedIndex {
         val positioned = fresh.withColumn("p",
           IndexReshard.position($"doc_id"))
         val a = ReplicatedIndex.assignPR(positioned, state.nShards)
-        val pSeg = ShardedIndex.buildStore(
-          a.select($"primary".as("shard"), $"doc_id", $"text")).barrier()
-        val rSeg = ReplicatedIndex.buildReplicaStore(
+        val pSeg = graft.queries.Text.postingStore(
+          a.select($"primary".as("shard"), $"doc_id", $"text"), "shard")
+          .barrier()
+        val rSeg = graft.queries.Text.postingStore(
           a.select($"replica".as("node"), $"primary".as("origin"),
-            $"doc_id", $"text")).barrier()
+            $"doc_id", $"text"), "node", "origin").barrier()
         (pSeg :: state.primSegs, rSeg :: state.replSegs)
       }
     val seenUnion = state.seenIds.unionByName(fresh.select($"doc_id"))
-    val dlUnion = state.dl.unionByName(fresh.select($"doc_id",
-      size(split($"text", " ")).cast("long").as("dl")))
+    val dlUnion = state.dl.unionByName(fresh.select($"doc_id", Bm25.dl))
     if (nBatches % CompactEvery == 0)
       state.copy(
         primSegs =
@@ -149,7 +149,7 @@ object StreamingReplicatedIndex {
         .select($"doc_id", $"primary", $"replica")
       val grown = ReplicatedIndex.grow(
         ReplicatedIndex.Replicated(aOld, prim, repl, state.dl,
-          ReplicatedIndex.stats(state.dl), state.nShards),
+          Bm25.stats(state.dl), state.nShards),
         state.nShards)
       state.copy(primSegs = List(grown.primaryStore.barrier()),
         replSegs = List(grown.replicaStore.barrier()),
@@ -255,12 +255,12 @@ object StreamingReplicatedIndex {
     val cutR = state.replSegs.map(surgery(_, "node", Some("origin"), idB))
     val positioned = up.withColumn("p", IndexReshard.position($"doc_id"))
     val a = ReplicatedIndex.assignPR(positioned, state.nShards)
-    val pGrown = ShardedIndex.buildStore(
-      a.select($"primary".as("shard"), $"doc_id", $"text")).barrier() ::
-      cutP
-    val rGrown = ReplicatedIndex.buildReplicaStore(
+    val pGrown = graft.queries.Text.postingStore(
+      a.select($"primary".as("shard"), $"doc_id", $"text"), "shard")
+      .barrier() :: cutP
+    val rGrown = graft.queries.Text.postingStore(
       a.select($"replica".as("node"), $"primary".as("origin"),
-        $"doc_id", $"text")).barrier() :: cutR
+        $"doc_id", $"text"), "node", "origin").barrier() :: cutR
     state.copy(
       primSegs =
         if (pGrown.lengthCompare(CompactEvery) > 0)
@@ -272,8 +272,7 @@ object StreamingReplicatedIndex {
         else rGrown,
       seenIds = state.seenIds.unionByName(ids).distinct().barrier(),
       dl = state.dl.join(ids, Seq("doc_id"), "left_anti")
-        .unionByName(up.select($"doc_id",
-          size(split($"text", " ")).cast("long").as("dl")))
+        .unionByName(up.select($"doc_id", Bm25.dl))
         .barrier())
   }
 
@@ -285,7 +284,7 @@ object StreamingReplicatedIndex {
         col("df"), col("bytes")))
       .reduce(_ unionByName _)
     ReplicatedIndex.serveBlocks(sel, state.dl,
-      ReplicatedIndex.stats(state.dl), qTerms, k)
+      Bm25.stats(state.dl), qTerms, k)
   }
 
   /** Node `failed` is down RIGHT NOW: q294's failover selection taken
@@ -305,6 +304,6 @@ object StreamingReplicatedIndex {
       .reduceOption(_ unionByName _)
     val sel = repl.map(prim.unionByName(_)).getOrElse(prim)
     ReplicatedIndex.serveBlocks(sel, state.dl,
-      ReplicatedIndex.stats(state.dl), qTerms, k)
+      Bm25.stats(state.dl), qTerms, k)
   }
 }

@@ -452,9 +452,10 @@ class PropertySpec extends SparkSpecBase {
       val maintained = r.newStore.select("shard", "term", "bucket", "df", "bytes")
         .collect().map(x => (x.getLong(0), x.getString(1), x.getLong(2)) ->
           (x.getInt(3), x.getAs[Array[Byte]](4).toSeq)).toMap
-      val rebuilt = ShardedIndex.buildStore(
+      val rebuilt = graft.queries.Text.postingStore(
         r.assignments.join(docs, "doc_id")
-          .select(col("shard_new").as("shard"), col("doc_id"), col("text")))
+          .select(col("shard_new").as("shard"), col("doc_id"), col("text")),
+        "shard")
         .collect().map(x => (x.getLong(0), x.getString(1), x.getLong(2)) ->
           (x.getInt(3), x.getAs[Array[Byte]](4).toSeq)).toMap
       assert(maintained === rebuilt, s"s0=$s0")

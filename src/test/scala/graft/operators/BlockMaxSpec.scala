@@ -114,4 +114,30 @@ class BlockMaxSpec extends SparkSpecBase {
     assert(rows.map(t => (t._1, t._2)).toSeq === exhaustive(20),
       "sharded pruned ranking != exhaustive")
   }
+
+  test("a corrupt stored block fails loud through the shared BM25 " +
+    "decode, naming the block's key and term") {
+    val docs = corpus.toDF("doc_id", "text")
+    // set the continuation bit of the hot block's last byte: the final
+    // varint runs off the end of the stream, so the strict decode fails
+    val storeSel = graft.queries.Text.postingStore(docs)
+      .filter($"term".isin(qTerms: _*))
+      .as[(String, Long, Int, Array[Byte])]
+      .map { case (t, b, n, bytes) =>
+        if (t == "alpha" && b == 0L) bytes(bytes.length - 1) =
+          (bytes(bytes.length - 1) | 0x80).toByte
+        (t, b, n, bytes)
+      }.toDF("term", "bucket", "df", "bytes")
+    val ubSel = BlockMaxWand.ubSidecar(docs).filter($"term".isin(qTerms: _*))
+    val dl = docs.select($"doc_id", Bm25.dl)
+    val e = intercept[Exception] {
+      BlockMaxWand.probeStored(storeSel, ubSel, dl, Bm25.stats(dl), k = 20)
+    }
+    val chain = Iterator.iterate(e: Throwable)(_.getCause)
+      .takeWhile(_ != null).take(8).toSeq
+    val ise = chain.collectFirst { case x: IllegalStateException => x }
+    assert(ise.isDefined, chain.map(_.toString).mkString(" | "))
+    assert(ise.get.getMessage ===
+      "stored block-max probe: corrupt postings block 'alpha'/0")
+  }
 }

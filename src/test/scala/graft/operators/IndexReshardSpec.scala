@@ -34,9 +34,9 @@ class IndexReshardSpec extends SparkSpecBase {
       val maintained = storeMap(r.newStore)
       // from scratch: assign at s0+1 straight off the reshard's own
       // assignment frame (shard_new IS the grown-ring assignment)
-      val rebuilt = storeMap(ShardedIndex.buildStore(
+      val rebuilt = storeMap(graft.queries.Text.postingStore(
         r.assignments.join(docs, "doc_id")
-          .select($"shard_new".as("shard"), $"doc_id", $"text")))
+          .select($"shard_new".as("shard"), $"doc_id", $"text"), "shard"))
       assert(maintained == rebuilt, s"reshard $s0 -> ${s0 + 1} diverged")
     }
   }
@@ -56,9 +56,9 @@ class IndexReshardSpec extends SparkSpecBase {
     for (s0 <- Seq(3, 4)) {
       val r = IndexReshard.shrinkReshard(docs, s0)
       val maintained = storeMap(r.newStore)
-      val rebuilt = storeMap(ShardedIndex.buildStore(
+      val rebuilt = storeMap(graft.queries.Text.postingStore(
         r.assignments.join(docs, "doc_id")
-          .select($"shard_new".as("shard"), $"doc_id", $"text")))
+          .select($"shard_new".as("shard"), $"doc_id", $"text"), "shard"))
       assert(maintained == rebuilt, s"shrink $s0 -> ${s0 - 1} diverged")
     }
   }

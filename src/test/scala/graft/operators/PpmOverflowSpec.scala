@@ -145,4 +145,56 @@ class PpmOverflowSpec extends SparkSpecBase {
         100000L))
     }
   }
+
+  // the BM25 contribution at 2^40 docs: the numerator passes 2^63 while
+  // the floored quotient still fits a BIGINT; small rows take the
+  // BIGINT branch and must equal the plain BIGINT form bit for bit
+  private val nDocs = 1L << 40
+  private val flatBigint = expr(
+    """(22 * tf * adl * (2 * n_docs - 2 * df + 1) * 1000000)
+       DIV ((10 * tf * adl + 3 * adl + 9 * dl) * (2 * df + 1))""")
+  private val fieldedBigint = expr(
+    """(22 * (2 * tf_t + tf_b) * awdl * (2 * n_docs - 2 * df + 1) * 1000000)
+       DIV ((10 * (2 * tf_t + tf_b) * awdl + 3 * awdl
+             + 9 * (2 * lt + lb)) * (2 * df + 1))""")
+  private def overflows(body: => Any): Unit = {
+    val msg = messageChain(intercept[Exception](body)).toLowerCase
+    assert(msg.contains("overflow") || msg.contains("arithmetic"),
+      s"expected an overflow failure, got: $msg")
+  }
+
+  test("Bm25.contrib survives 2^40-scale n_docs (the 22·tf·adl·" +
+    "(2N−2df+1)·10⁶ numerator past 2^63) and floors exactly") {
+    withAnsi {
+      val cols = Seq("tf", "dl", "df", "n_docs", "adl")
+      val row = Seq((3L, 120L, 7L, nDocs, 100L)).toDF(cols: _*)
+      val want = BigInt(22) * 3 * 100 * (BigInt(nDocs) * 2 - 2 * 7 + 1) *
+        1000000 / ((BigInt(10) * 3 * 100 + 3 * 100 + 9 * 120) * (2 * 7 + 1))
+      assert(want === BigInt("220906445761908675"))
+      assert(row.select(Bm25.contrib).head().getLong(0) === want.toLong)
+      // negative control: the BIGINT form overflows on the same row
+      overflows(row.select(flatBigint).head())
+      val small = Seq((3L, 120L, 7L, 1000L, 100L)).toDF(cols: _*)
+      assert(small.select(Bm25.contrib).head().getLong(0) ===
+        small.select(flatBigint).head().getLong(0))
+    }
+  }
+
+  test("Bm25.Fielded.contrib survives 2^40-scale n_docs and floors " +
+    "exactly") {
+    withAnsi {
+      val cols = Seq("tf_t", "tf_b", "lt", "lb", "df", "n_docs", "awdl")
+      val row = Seq((1L, 2L, 5L, 95L, 11L, nDocs, 150L)).toDF(cols: _*)
+      // wtf = 2·1 + 2 = 4, wdl = 2·5 + 95 = 105
+      val want = BigInt(22) * 4 * 150 * (BigInt(nDocs) * 2 - 2 * 11 + 1) *
+        1000000 / ((BigInt(10) * 4 * 150 + 3 * 150 + 9 * 105) * (2 * 11 + 1))
+      assert(want === BigInt("170662356898075668"))
+      assert(row.select(Bm25.Fielded.contrib).head().getLong(0) ===
+        want.toLong)
+      overflows(row.select(fieldedBigint).head())
+      val small = Seq((1L, 2L, 5L, 95L, 11L, 1000L, 150L)).toDF(cols: _*)
+      assert(small.select(Bm25.Fielded.contrib).head().getLong(0) ===
+        small.select(fieldedBigint).head().getLong(0))
+    }
+  }
 }

@@ -2648,9 +2648,9 @@ class StreamingSpec extends SparkSpecBase {
       }.toMap
     val positioned = delivered.toDF("doc_id", "text")
       .withColumn("p", IndexReshard.position($"doc_id"))
-    val expected = ShardedIndex.buildStore(
+    val expected = graft.queries.Text.postingStore(
       IndexReshard.assign(positioned, 4, "shard")
-        .select($"shard", $"doc_id", $"text"))
+        .select($"shard", $"doc_id", $"text"), "shard")
     assert(storeMap(fin.select($"shard", $"term", $"bucket", $"df",
       $"bytes")) === storeMap(expected),
       "final elastic store != from-scratch grown-ring build")
@@ -2725,9 +2725,9 @@ class StreamingSpec extends SparkSpecBase {
       }.toMap
     val positioned = delivered.toDF("doc_id", "text")
       .withColumn("p", IndexReshard.position($"doc_id"))
-    val expected = ShardedIndex.buildStore(
+    val expected = graft.queries.Text.postingStore(
       IndexReshard.assign(positioned, 3, "shard")
-        .select($"shard", $"doc_id", $"text"))
+        .select($"shard", $"doc_id", $"text"), "shard")
     assert(storeMap(fin.select($"shard", $"term", $"bucket", $"df",
       $"bytes")) === storeMap(expected),
       "final elastic store != from-scratch shrunk-ring build")
