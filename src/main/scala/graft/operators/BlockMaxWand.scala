@@ -117,7 +117,7 @@ object BlockMaxWand {
     val decode = Bm25.decode("block-max probe") _
     // ---- ingest: block-max sidecar (exact per-block max contribution)
     val sidecar = Bm25.contributions(decode(probed), dl, dfreq, stats)
-      .select($"term", expr("doc_id DIV 100").as("bucket"), $"contrib_ppm")
+      .select($"term", PostingBlocks.bucket, $"contrib_ppm")
       .groupBy($"term", $"bucket").agg(max($"contrib_ppm").as("ub_ppm"))
       .groupBy($"bucket").agg(sum($"ub_ppm").as("ub_ppm"))
     twoPhase(probed, sidecar, decode,
@@ -144,7 +144,7 @@ object BlockMaxWand {
       .join(dl, "doc_id")
       .join(dfreq, "term")
       .crossJoin(broadcast(stats))
-      .select($"term", expr("doc_id DIV 100").as("bucket"),
+      .select($"term", PostingBlocks.bucket,
         Bm25.contrib.as("contrib_ppm"))
       .groupBy($"term", $"bucket").agg(max($"contrib_ppm").as("ub_ppm"))
   }
@@ -222,7 +222,7 @@ object BlockMaxWand {
     def score(decoded: DataFrame): DataFrame =
       Bm25.score(decoded, dl, dfreq, stats, "shard")
     val sidecar = Bm25.contributions(decode(probed), dl, dfreq, stats)
-      .select($"shard", expr("doc_id DIV 100").as("bucket"), $"contrib_ppm")
+      .select($"shard", PostingBlocks.bucket, $"contrib_ppm")
       .groupBy($"shard", $"bucket").agg(max($"contrib_ppm").as("ub_ppm"))
       .barrier()
     val topJ = udaf(new graft.functions.TopKScored(seedJ))
@@ -291,7 +291,7 @@ object BlockMaxWand {
     // ---- ingest: fielded block-max sidecar AT THE DECLARED WEIGHTS
     val sidecar = Bm25.Fielded.contributions(decode(probed), flen, dfreq,
         stats)
-      .select($"term", expr("doc_id DIV 100").as("bucket"), $"contrib_ppm")
+      .select($"term", PostingBlocks.bucket, $"contrib_ppm")
       .groupBy($"term", $"bucket").agg(max($"contrib_ppm").as("ub_ppm"))
       .groupBy($"bucket").agg(sum($"ub_ppm").as("ub_ppm"))
     twoPhase(probed, sidecar, decode,

@@ -26,14 +26,12 @@ import org.apache.spark.sql.types.{LongType, StringType}
   * vnodes — wrap-around included, since a changed wrap target is
   * itself a new vnode), so the surgery is block-local:
   *
-  *   - old shards: the moved docs' buckets' blocks decode (strict),
-  *     SPLIT into kept and moved postings, re-encode the kept side
-  *     (q274's takedown surgery with the shard in the block key);
-  *     emptied blocks vanish; every other block passes through
-  *     byte-UNTOUCHED (no decode);
-  *   - new shard: the extracted mover postings regroup by (term,
-  *     bucket) and encode — bucket keys ride along unchanged
-  *     (bucket = doc_id div 100 is shard-independent).
+  *   - old shards: the movers drop from their old shard's blocks
+  *     ([[PostingBlocks.drop]] scoped by shard — q274's surgery with
+  *     the shard in the block key);
+  *   - new shard: the movers' postings decode from those same touched
+  *     blocks and regroup by (term, bucket) ([[PostingBlocks.encode]])
+  *     — bucket keys ride along unchanged (they are shard-independent).
   *
   * Gap coding has no layout freedom, so maintained ≡ a from-scratch
   * S+1-ring build BYTE FOR BYTE — q288's oracle replays exactly that
@@ -120,46 +118,14 @@ object IndexReshard {
       oldShards + 1, "shard_new")
       .select($"doc_id", $"shard_old", $"shard_new")
     val moved = a.filter($"shard_old" =!= $"shard_new")
-    val deadByBlock = moved
-      .groupBy($"shard_old".cast(LongType).as("shard"),
-        expr("doc_id DIV 100").as("bucket"))
-      .agg(sort_array(collect_list($"doc_id")).as("dead"))
-    // untouched blocks pass through byte-identical, never decoded
-    val untouched = store
-      .join(deadByBlock.select($"shard", $"bucket"),
-        Seq("shard", "bucket"), "left_anti")
-    val touched = store.join(deadByBlock, Seq("shard", "bucket"))
-      .select($"shard", $"term", $"bucket", $"df", $"bytes", $"dead")
-      .as[(Long, String, Long, Int, Array[Byte], Seq[Long])]
-    // pass 1: kept side re-encodes in place (emptied blocks vanish)
-    val kept = touched.flatMap { case (sh, t, b, n, bytes, dd) =>
-      val ps = PostingCodec.decode(bytes, n)
-        .getOrElse(throw new IllegalStateException(
-          s"index reshard: corrupt block $sh/'$t'/$b"))
-      val gone = dd.toSet
-      val k = ps.filterNot(p => gone.contains(p._1))
-      if (k.isEmpty) Iterator.empty
-      else Iterator.single((sh, t, b, k.size, PostingCodec.encode(k)))
-    }.toDF("shard", "term", "bucket", "df", "bytes")
-    // pass 2: the movers' postings extract FROM THE INDEX and regroup
-    // into the new shard's blocks (bucket keys are shard-independent)
-    val added = touched.flatMap { case (sh, t, b, n, bytes, dd) =>
-      val ps = PostingCodec.decode(bytes, n)
-        .getOrElse(throw new IllegalStateException(
-          s"index reshard: corrupt block $sh/'$t'/$b"))
-      val gone = dd.toSet
-      ps.filter(p => gone.contains(p._1)).map(p => (t, b, p._1, p._2, p._3))
-    }.toDF("term", "bucket", "doc_id", "tf", "first_pos")
-      .groupBy($"term", $"bucket")
-      .agg(sort_array(collect_list(
-        struct($"doc_id", $"tf", $"first_pos"))).as("ps"))
-      .as[(String, Long, Seq[(Long, Long, Long)])]
-      .map { case (t, b, ps) =>
-        (oldShards.toLong, t, b, ps.size, PostingCodec.encode(ps))
-      }
-      .toDF("shard", "term", "bucket", "df", "bytes")
-    (a, untouched.select($"shard", $"term", $"bucket", $"df", $"bytes")
-      .unionByName(kept).unionByName(added))
+      .select($"shard_old".as("shard"), $"doc_id")
+    // the movers' postings extract FROM THE INDEX and regroup into the
+    // new shard's blocks (bucket keys are shard-independent)
+    val added = PostingBlocks.decode(store, moved)
+      .select(lit(oldShards.toLong).as("shard"), $"term", $"bucket",
+        $"doc_id", $"tf", $"first_pos")
+    (a, PostingBlocks.drop(store, moved)
+      .unionByName(PostingBlocks.encode(added)))
   }
 
   /** q288's end-to-end shape: build the S-ring store from documents,
@@ -197,11 +163,10 @@ object IndexReshard {
     *     re-key each posting by the doc's S−1-ring owner (a join
     *     against the assignment frame, sized |drained postings| —
     *     ~1/S of the index, never the corpus);
-    *   - survivor blocks that RECEIVE movers for their (shard, term,
-    *     bucket) decode, interleave and re-encode (q264's merge —
-    *     canonical gap coding has no layout freedom);
-    *   - survivor blocks receiving nothing pass through
-    *     byte-UNTOUCHED (never decoded).
+    *   - the re-keyed movers encode and [[PostingBlocks.merge]] folds
+    *     them into the survivors: blocks that RECEIVE movers decode,
+    *     interleave and re-encode, the rest pass through byte-UNTOUCHED
+    *     (never decoded).
     *
     * Laws (IndexReshardSpec): maintained ≡ from-scratch S−1-ring build
     * BYTE FOR BYTE (q288's law mirrored; q295's oracle replays that
@@ -228,50 +193,15 @@ object IndexReshard {
     // spec pins); their targets come from the S−1-ring assignment
     val targets = a.filter($"shard_old" === drained)
       .select($"doc_id", $"shard_new")
-    // pass 1: every drained block decodes; postings re-key by target
-    val moverPostings = store.filter($"shard" === drained)
-      .select($"term", $"bucket", $"df", $"bytes")
-      .as[(String, Long, Int, Array[Byte])]
-      .flatMap { case (t, b, n, bytes) =>
-        PostingCodec.decode(bytes, n)
-          .getOrElse(throw new IllegalStateException(
-            s"index shrink: corrupt block $drained/'$t'/$b"))
-          .map(p => (t, b, p._1, p._2, p._3))
-      }.toDF("term", "bucket", "doc_id", "tf", "first_pos")
+    // every drained block decodes; postings re-key by target and
+    // merge into the survivors (receiving blocks decode, interleave and
+    // re-encode; the rest pass through byte-untouched)
+    val movers = PostingBlocks.decode(store.filter($"shard" === drained))
       .join(targets, "doc_id")
       .select($"shard_new".as("shard"), $"term", $"bucket",
         $"doc_id", $"tf", $"first_pos")
-    val moverBlocks = moverPostings
-      .groupBy($"shard", $"term", $"bucket")
-      .agg(sort_array(collect_list(
-        struct($"doc_id", $"tf", $"first_pos"))).as("ps"))
-    // pass 2: survivors split into untouched (byte-identical, never
-    // decoded) and receiving (decode + interleave + re-encode)
-    val survivors = store.filter($"shard" =!= drained)
-    val moverKeys = moverBlocks.select($"shard", $"term", $"bucket")
-    val untouched = survivors
-      .join(moverKeys, Seq("shard", "term", "bucket"), "left_anti")
-    val merged = survivors
-      .join(moverBlocks, Seq("shard", "term", "bucket"), "full_outer")
-      .filter($"ps".isNotNull) // inner+right side: blocks with movers
-      .select($"shard", $"term", $"bucket", $"df", $"bytes", $"ps")
-      .as[(Long, String, Long, Option[Int], Option[Array[Byte]],
-        Seq[(Long, Long, Long)])]
-      .map { case (sh, t, b, df, bytes, incoming) =>
-        val existing = (df, bytes) match {
-          case (Some(n), Some(bs)) =>
-            PostingCodec.decode(bs, n)
-              .getOrElse(throw new IllegalStateException(
-                s"index shrink: corrupt block $sh/'$t'/$b"))
-          case _ => Seq.empty[(Long, Long, Long)]
-        }
-        val all = (existing ++ incoming).sortBy(_._1)
-        require(all.map(_._1).distinct.size == all.size,
-          s"index shrink: overlapping doc ids in $sh/'$t'/$b")
-        (sh, t, b, all.size, PostingCodec.encode(all))
-      }.toDF("shard", "term", "bucket", "df", "bytes")
-    (a, untouched.select($"shard", $"term", $"bucket", $"df", $"bytes")
-      .unionByName(merged))
+    (a, PostingBlocks.merge(Seq(store.filter($"shard" =!= drained),
+      PostingBlocks.encode(movers))))
   }
 
   /** q295's end-to-end shape: build the S-ring store from documents,

@@ -12,10 +12,10 @@ import org.apache.spark.sql.functions._
   * layer. This composes delete+insert as ONE operation:
   *
   *   - the updated ids run q274's block-local surgery
-  *     ([[PostingsTakedown]]) — the OLD version's postings drop from
+  *     ([[PostingBlocks.drop]]) — the OLD version's postings drop from
   *     exactly the touched buckets' blocks;
   *   - the NEW text builds a delta segment (q258's encode), and
-  *     [[IndexSegmentMerge]] folds it in — after the surgery the doc
+  *     [[PostingBlocks.merge]] folds it in — after the surgery the doc
   *     ids are disjoint again, so the merge's overlap law holds by
   *     construction.
   *
@@ -44,8 +44,7 @@ object PostingsUpdate {
       .select(col(updated.columns.head).cast("long").as("doc_id"),
         col(updated.columns(1)).as("text"))
       .dropDuplicates("doc_id")
-    val cut = PostingsTakedown(store, up.select($"doc_id"))
-    val delta = graft.queries.Text.postingStore(up)
-    IndexSegmentMerge.merge(cut, delta)
+    PostingBlocks.merge(Seq(PostingBlocks.drop(store, up.select($"doc_id")),
+      graft.queries.Text.postingStore(up)))
   }
 }

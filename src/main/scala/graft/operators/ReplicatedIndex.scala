@@ -211,23 +211,10 @@ object ReplicatedIndex {
       .withColumn("p", IndexReshard.position($"doc_id"))
     val a = assignPR(ids, nShards)
       .select($"doc_id", $"primary", $"replica")
-    val replicaStore = store
-      .select($"shard", $"term", $"bucket", $"df", $"bytes")
-      .as[(Long, String, Long, Int, Array[Byte])]
-      .flatMap { case (sh, t, b, n, bytes) =>
-        PostingCodec.decode(bytes, n)
-          .getOrElse(throw new IllegalStateException(
-            s"addReplicas: corrupt primary block $sh/'$t'/$b"))
-          .map(p => (sh, t, b, p._1, p._2, p._3))
-      }.toDF("origin", "term", "bucket", "doc_id", "tf", "first_pos")
+    val replicaStore = PostingBlocks.encode(PostingBlocks.decode(store)
       .join(a.select($"doc_id", $"replica".as("node")), "doc_id")
-      .groupBy($"node", $"origin", $"term", $"bucket")
-      .agg(sort_array(collect_list(
-        struct($"doc_id", $"tf", $"first_pos"))).as("ps"))
-      .as[(Long, Long, String, Long, Seq[(Long, Long, Long)])]
-      .map { case (nd, og, t, b, ps) =>
-        (nd, og, t, b, ps.size, PostingCodec.encode(ps))
-      }.toDF("node", "origin", "term", "bucket", "df", "bytes")
+      .select($"node", $"shard".as("origin"), $"term", $"bucket", $"doc_id",
+        $"tf", $"first_pos"))
     Replicated(a, store, replicaStore, dl, Bm25.stats(dl), nShards)
   }
 
@@ -288,112 +275,32 @@ object ReplicatedIndex {
         col("df"), col("bytes")),
       r.dl, r.stats, qTerms, k)
 
-  /** (k1, k2, term, bucket)-keyed decode-merge: `incoming` blocks of
-    * raw postings (…, ps) fold into `existing` encoded blocks —
-    * receiving blocks decode, interleave and re-encode (q264's merge),
-    * non-receiving blocks pass through byte-UNTOUCHED. One helper for
-    * both stores: the primary store normalizes to k2 = −1. */
-  private def mergeBlocks(existing: DataFrame,
-      incoming: DataFrame): DataFrame = {
-    val s = existing.sparkSession
-    import s.implicits._
-    val keys = Seq("k1", "k2", "term", "bucket")
-    val untouched = existing
-      .join(incoming.select(keys.map(col): _*), keys, "left_anti")
-    val merged = existing.join(incoming, keys, "full_outer")
-      .filter($"ps".isNotNull)
-      .select($"k1", $"k2", $"term", $"bucket", $"df", $"bytes", $"ps")
-      .as[(Long, Long, String, Long, Option[Int], Option[Array[Byte]],
-        Seq[(Long, Long, Long)])]
-      .map { case (k1, k2, t, b, df, bytes, inc) =>
-        val old = (df, bytes) match {
-          case (Some(n), Some(bs)) =>
-            PostingCodec.decode(bs, n)
-              .getOrElse(throw new IllegalStateException(
-                s"replica recovery: corrupt block $k1/$k2/'$t'/$b"))
-          case _ => Seq.empty[(Long, Long, Long)]
-        }
-        val all = (old ++ inc).sortBy(_._1)
-        require(all.map(_._1).distinct.size == all.size,
-          s"replica recovery: overlapping doc ids in $k1/$k2/'$t'/$b")
-        (k1, k2, t, b, all.size, PostingCodec.encode(all))
-      }.toDF("k1", "k2", "term", "bucket", "df", "bytes")
-    untouched.select($"k1", $"k2", $"term", $"bucket", $"df", $"bytes")
-      .unionByName(merged)
-  }
-
-  /** q274's block-local takedown surgery generalized to any
-    * (k1, k2, term, bucket, df, bytes)-keyed store: blocks of buckets
-    * holding dead ids decode (strict), drop the dead postings and
-    * re-encode; blocks whose bucket holds no dead id pass through
-    * byte-UNTOUCHED (never decoded); emptied blocks vanish. `deadB` is
-    * the (keys, dead ids) grouping: by bucket alone for a takedown or an
-    * update, by a block's full placement key for [[grow]]'s movers. */
-  private[graft] def dropFromBlocks(store: DataFrame, deadB: DataFrame,
-      keys: Seq[String] = Seq("bucket")): DataFrame = {
-    val s = store.sparkSession
-    import s.implicits._
-    store.join(deadB, keys, "left")
-      .select($"k1", $"k2", $"term", $"bucket", $"df", $"bytes", $"dead")
-      .as[(Long, Long, String, Long, Int, Array[Byte], Option[Seq[Long]])]
-      .flatMap {
-        case (k1, k2, t, b, n, bytes, None) =>
-          // bucket untouched: bytes pass through, never re-coded
-          Iterator.single((k1, k2, t, b, n, bytes))
-        case (k1, k2, t, b, n, bytes, Some(dd)) =>
-          val ps = PostingCodec.decode(bytes, n)
-            .getOrElse(throw new IllegalStateException(
-              s"dropFromBlocks: corrupt block $k1/$k2/'$t'/$b"))
-          val gone = dd.toSet
-          val kept = ps.filterNot(p => gone.contains(p._1))
-          if (kept.isEmpty) Iterator.empty
-          else Iterator.single(
-            (k1, k2, t, b, kept.size, PostingCodec.encode(kept)))
-      }
-      .toDF("k1", "k2", "term", "bucket", "df", "bytes")
-  }
-
   /** TAKEDOWN on the replicated topology (X119d, q304): the
     * right-to-be-forgotten event against a TWO-COPY store — q274
     * deletes from the single-copy postings store, but a replicated
     * tier must run the same block surgery on BOTH copies or the dead
     * doc keeps serving the moment any node fails over (the
     * compliance hole: ES deletes propagate primary → replica before
-    * acking). One law, both stores: buckets holding dead ids decode,
-    * drop and re-encode; every other block passes byte-UNTOUCHED;
-    * emptied blocks vanish; the dl/assignment sidecars and global
-    * stats shrink to the survivors. Gap coding has no layout freedom
-    * ⇒ maintained ≡ a from-scratch [[build]] over the surviving
-    * corpus, BOTH stores BYTE FOR BYTE — q304's oracle replays
+    * acking). Both stores run [[PostingBlocks.drop]]; the
+    * dl/assignment sidecars and global stats shrink to the survivors.
+    * Maintained ≡ a from-scratch [[build]] over the surviving corpus,
+    * BOTH stores BYTE FOR BYTE (the drop law) — q304's oracle replays
     * exactly that build (the surgery never enters it).
     *
-    * Scale: q274's posture twice — the dead set groups to
-    * bucket-count-bounded (bucket → ids) arrays; each store pays one
-    * equi-join on the compact bucket key (no forced broadcast — AQE
-    * decides at takedown scale); re-encode cost is |touched blocks| ×
-    * block width per copy, never corpus-shaped. */
+    * Scale: q274's posture twice — [[PostingBlocks.drop]]'s, per
+    * copy, never corpus-shaped. */
   def takedown(rep: Replicated, deadIds: DataFrame): Replicated = {
     val s = rep.primaryStore.sparkSession
     import s.implicits._
     val dead = deadIds
       .select(col(deadIds.columns.head).cast("long").as("doc_id"))
       .distinct()
-    val deadB = dead
-      .groupBy(expr("doc_id DIV 100").as("bucket"))
-      .agg(sort_array(collect_list($"doc_id")).as("dead"))
-    val newPrimary = dropFromBlocks(
-      rep.primaryStore.select($"shard".as("k1"), lit(-1L).as("k2"),
-        $"term", $"bucket", $"df", $"bytes"), deadB)
-      .select($"k1".as("shard"), $"term", $"bucket", $"df", $"bytes")
-    val newReplica = dropFromBlocks(
-      rep.replicaStore.select($"node".as("k1"), $"origin".as("k2"),
-        $"term", $"bucket", $"df", $"bytes"), deadB)
-      .select($"k1".as("node"), $"k2".as("origin"), $"term", $"bucket",
-        $"df", $"bytes")
     val dl = rep.dl.join(dead, Seq("doc_id"), "left_anti")
     Replicated(
       rep.assignments.join(dead, Seq("doc_id"), "left_anti"),
-      newPrimary, newReplica, dl, Bm25.stats(dl), rep.nShards)
+      PostingBlocks.drop(rep.primaryStore, dead),
+      PostingBlocks.drop(rep.replicaStore, dead), dl, Bm25.stats(dl),
+      rep.nShards)
   }
 
   /** Document UPDATE / re-index on the REPLICATED topology (X109q,
@@ -409,14 +316,15 @@ object ReplicatedIndex {
     * outdated text rather than reaped text. One law, both stores:
     *
     *   - the updated ids run q304's two-copy block surgery
-    *     ([[dropFromBlocks]]) — old versions drop from exactly the
+    *     ([[PostingBlocks.drop]]) — old versions drop from exactly the
     *     touched buckets of BOTH stores;
-    *   - the NEW text builds per-copy delta blocks keyed by each doc's
+    *   - the NEW text builds per-copy delta stores
+    *     ([[graft.queries.Text.postingStore]]) keyed by each doc's
     *     assignment — EXISTING docs keep their placement (the ring is a
     *     pure function of doc_id, so an update never moves a document:
     *     the verb is block surgery, not a re-shard), novel ids place
     *     fresh at the store's OWN carried ring (the upsert half);
-    *   - [[mergeBlocks]] folds each delta in per store — ids are
+    *   - [[PostingBlocks.merge]] folds each delta in per store — ids are
     *     disjoint again after the surgery, so q264's overlap law holds
     *     by construction; non-receiving blocks pass byte-UNTOUCHED;
     *   - the dl sidecar swaps old rows for new, global stats recompute
@@ -444,16 +352,6 @@ object ReplicatedIndex {
         col(updated.columns(1)).as("text"))
       .dropDuplicates("doc_id")
     val ids = up.select($"doc_id")
-    // ---- surgery: both copies drop the updated ids' OLD postings
-    val deadB = ids
-      .groupBy(expr("doc_id DIV 100").as("bucket"))
-      .agg(sort_array(collect_list($"doc_id")).as("dead"))
-    val cutP = dropFromBlocks(
-      rep.primaryStore.select($"shard".as("k1"), lit(-1L).as("k2"),
-        $"term", $"bucket", $"df", $"bytes"), deadB)
-    val cutR = dropFromBlocks(
-      rep.replicaStore.select($"node".as("k1"), $"origin".as("k2"),
-        $"term", $"bucket", $"df", $"bytes"), deadB)
     // ---- placement: existing docs KEEP theirs; novel ids place fresh
     // on the store's carried ring (the upsert half)
     val novel = up.join(rep.assignments, Seq("doc_id"), "left_anti")
@@ -464,29 +362,18 @@ object ReplicatedIndex {
     val aUp = rep.assignments.join(ids, "doc_id")
       .select($"doc_id", $"primary", $"replica")
       .unionByName(novelA)
-    // ---- delta blocks for both stores from the NEW text
-    val d = up.join(aUp, "doc_id")
-      .select($"primary", $"replica", $"doc_id",
-        posexplode(split($"text", " ")))
-      .select($"primary", $"replica", $"doc_id", ($"pos" + 1).as("pos"),
-        $"col".as("term"))
-      .groupBy($"primary", $"replica", $"term", $"doc_id")
-      .agg(count(lit(1)).as("tf"), min($"pos").as("first_pos"))
-    val deltaP = d
-      .groupBy($"primary".as("k1"), lit(-1L).as("k2"), $"term",
-        floor($"doc_id" / 100).as("bucket"))
-      .agg(sort_array(collect_list(
-        struct($"doc_id", $"tf", $"first_pos"))).as("ps"))
-    val deltaR = d
-      .groupBy($"replica".as("k1"), $"primary".as("k2"), $"term",
-        floor($"doc_id" / 100).as("bucket"))
-      .agg(sort_array(collect_list(
-        struct($"doc_id", $"tf", $"first_pos"))).as("ps"))
-    val newPrimary = mergeBlocks(cutP, deltaP)
-      .select($"k1".as("shard"), $"term", $"bucket", $"df", $"bytes")
-    val newReplica = mergeBlocks(cutR, deltaR)
-      .select($"k1".as("node"), $"k2".as("origin"), $"term", $"bucket",
-        $"df", $"bytes")
+    // ---- both copies drop the updated ids' OLD postings and merge in
+    // the NEW text's delta at each doc's placement
+    val placed = up.join(aUp, "doc_id")
+    val newPrimary = PostingBlocks.merge(Seq(
+      PostingBlocks.drop(rep.primaryStore, ids),
+      graft.queries.Text.postingStore(
+        placed.select($"primary".as("shard"), $"doc_id", $"text"), "shard")))
+    val newReplica = PostingBlocks.merge(Seq(
+      PostingBlocks.drop(rep.replicaStore, ids),
+      graft.queries.Text.postingStore(
+        placed.select($"replica".as("node"), $"primary".as("origin"),
+          $"doc_id", $"text"), "node", "origin")))
     // ---- sidecars: dl swaps old for new; stats follow the swap
     val dl = rep.dl.join(ids, Seq("doc_id"), "left_anti")
       .unionByName(up.select($"doc_id", Bm25.dl))
@@ -548,59 +435,27 @@ object ReplicatedIndex {
       .filter($"node" =!= lost && $"origin" =!= lost)
     // ---- decode the two surviving sources of lost-hosted data
     // (a) the dead node's primaries live on as replica copies
-    val aPost = rep.replicaStore.filter($"origin" === lost)
-      .select($"node", $"term", $"bucket", $"df", $"bytes")
-      .as[(Long, String, Long, Int, Array[Byte])]
-      .flatMap { case (node, t, b, n, bytes) =>
-        PostingCodec.decode(bytes, n)
-          .getOrElse(throw new IllegalStateException(
-            s"replica recovery: corrupt replica block $node/'$t'/$b"))
-          .map(p => (node, t, b, p._1, p._2, p._3))
-      }.toDF("node", "term", "bucket", "doc_id", "tf", "first_pos")
+    val aPost =
+      PostingBlocks.decode(rep.replicaStore.filter($"origin" === lost))
     // (b) docs whose REPLICA died: extract from their primary buckets
     val bDocs = rep.assignments
       .filter($"replica" === lost && $"primary" =!= lost)
-      .select($"doc_id", $"primary")
-    val bKeys = bDocs
-      .select($"primary".as("shard"), expr("doc_id DIV 100").as("bucket"))
-      .distinct()
-    val bPost = sp.join(bKeys, Seq("shard", "bucket"))
-      .select($"shard", $"term", $"bucket", $"df", $"bytes")
-      .as[(Long, String, Long, Int, Array[Byte])]
-      .flatMap { case (sh, t, b, n, bytes) =>
-        PostingCodec.decode(bytes, n)
-          .getOrElse(throw new IllegalStateException(
-            s"replica recovery: corrupt primary block $sh/'$t'/$b"))
-          .map(p => (t, b, p._1, p._2, p._3))
-      }.toDF("term", "bucket", "doc_id", "tf", "first_pos")
-      .join(bDocs.select($"doc_id"), "doc_id")
+      .select($"doc_id", $"primary".as("shard"))
+    val bPost = PostingBlocks.decode(sp, bDocs)
     // ---- promotion: (node r, origin = lost) blocks become shard-r
     // primaries (every member's S−1 owner IS r — the Dynamo argument)
-    val promoted = aPost
-      .groupBy($"node".as("k1"), lit(-1L).as("k2"), $"term", $"bucket")
-      .agg(sort_array(collect_list(
-        struct($"doc_id", $"tf", $"first_pos"))).as("ps"))
-    val newPrimary = mergeBlocks(
-      sp.select($"shard".as("k1"), lit(-1L).as("k2"), $"term", $"bucket",
-        $"df", $"bytes"),
-      promoted)
-      .select($"k1".as("shard"), $"term", $"bucket", $"df", $"bytes")
+    val newPrimary = PostingBlocks.merge(Seq(sp, PostingBlocks.encode(
+      aPost.select($"node".as("shard"), $"term", $"bucket", $"doc_id",
+        $"tf", $"first_pos"))))
     // ---- re-replication: fresh S−1-ring replicas for every doc the
     // lost node hosted (either copy), placed by the NEW assignment
-    val reRepl = aPost
-      .select($"term", $"bucket", $"doc_id", $"tf", $"first_pos")
-      .unionByName(bPost)
+    val posting = Seq("term", "bucket", "doc_id", "tf", "first_pos").map(col)
+    val reRepl = aPost.select(posting: _*)
+      .unionByName(bPost.select(posting: _*))
       .join(a2, "doc_id")
-      .groupBy($"replica".as("k1"), $"primary".as("k2"), $"term",
-        $"bucket")
-      .agg(sort_array(collect_list(
-        struct($"doc_id", $"tf", $"first_pos"))).as("ps"))
-    val newReplica = mergeBlocks(
-      keepRepl.select($"node".as("k1"), $"origin".as("k2"), $"term",
-        $"bucket", $"df", $"bytes"),
-      reRepl)
-      .select($"k1".as("node"), $"k2".as("origin"), $"term", $"bucket",
-        $"df", $"bytes")
+      .select($"replica".as("node") +: $"primary".as("origin") +: posting: _*)
+    val newReplica = PostingBlocks.merge(Seq(keepRepl,
+      PostingBlocks.encode(reRepl)))
     Replicated(a2, newPrimary, newReplica, rep.dl, rep.stats,
       oldShards - 1)
   }
@@ -655,78 +510,26 @@ object ReplicatedIndex {
       .join(a2, "doc_id")
     val movers = ch.filter($"primary" =!= $"op" || $"replica" =!= $"or")
     // ---- extract every mover's postings from its old primary blocks
-    val tKeys = movers
-      .select($"op".as("shard"), expr("doc_id DIV 100").as("bucket"))
-      .distinct()
-    val mPost = rep.primaryStore.join(tKeys, Seq("shard", "bucket"))
-      .select($"shard", $"term", $"bucket", $"df", $"bytes")
-      .as[(Long, String, Long, Int, Array[Byte])]
-      .flatMap { case (sh, t, b, n, bytes) =>
-        PostingCodec.decode(bytes, n)
-          .getOrElse(throw new IllegalStateException(
-            s"replicated grow: corrupt primary block $sh/'$t'/$b"))
-          .map(p => (t, b, p._1, p._2, p._3))
-      }.toDF("term", "bucket", "doc_id", "tf", "first_pos")
+    val mPost = PostingBlocks.decode(rep.primaryStore,
+        movers.select($"op".as("shard"), $"doc_id"))
       .join(movers, "doc_id")
-    // ---- primary store: class-A docs leave their old blocks…
-    val keptP = dropFromBlocks(
-      rep.primaryStore.select($"shard".as("k1"), lit(-1L).as("k2"),
-        $"term", $"bucket", $"df", $"bytes"),
-      movers.filter($"primary" === newShard)
-        .groupBy($"op".as("k1"), expr("doc_id DIV 100").as("bucket"))
-        .agg(collect_set($"doc_id").as("dead")),
-      Seq("k1", "bucket"))
-      .select($"k1".as("shard"), $"term", $"bucket", $"df", $"bytes")
-    // …and regroup on the new shard (keys disjoint from survivors)
-    val addP = mPost.filter($"primary" === newShard)
-      .groupBy($"term", $"bucket")
-      .agg(sort_array(collect_list(
-        struct($"doc_id", $"tf", $"first_pos"))).as("ps"))
-      .as[(String, Long, Seq[(Long, Long, Long)])]
-      .map { case (t, b, ps) =>
-        (newShard, t, b, ps.size, PostingCodec.encode(ps))
-      }.toDF("shard", "term", "bucket", "df", "bytes")
-    val newPrimary = keptP.unionByName(addP)
-    // ---- replica store: every mover leaves its old replica block…
-    val keptR = dropFromBlocks(
-      rep.replicaStore.select($"node".as("k1"), $"origin".as("k2"),
-        $"term", $"bucket", $"df", $"bytes"),
-      movers.groupBy($"or".as("k1"), $"op".as("k2"),
-          expr("doc_id DIV 100").as("bucket"))
-        .agg(collect_set($"doc_id").as("dead")),
-      Seq("k1", "k2", "bucket"))
-      .select($"k1".as("node"), $"k2".as("origin"), $"term", $"bucket",
-        $"df", $"bytes")
-    // …and regroups at its new placement — class A at (old primary, S),
+    val posting = Seq("term", "bucket", "doc_id", "tf", "first_pos").map(col)
+    // ---- primary store: class-A docs leave their old blocks and
+    // regroup on the new shard (keys disjoint from survivors)
+    val newPrimary = PostingBlocks.drop(rep.primaryStore,
+        movers.filter($"primary" === newShard)
+          .select($"op".as("shard"), $"doc_id"))
+      .unionByName(PostingBlocks.encode(mPost.filter($"primary" === newShard)
+        .select(lit(newShard).as("shard") +: posting: _*)))
+    // ---- replica store: every mover leaves its old replica block and
+    // regroups at its new placement — class A at (old primary, S),
     // class B at (S, primary): both keys carry S, so no survivor merge
-    val addR = mPost
-      .groupBy($"replica".as("node"), $"primary".as("origin"), $"term",
-        $"bucket")
-      .agg(sort_array(collect_list(
-        struct($"doc_id", $"tf", $"first_pos"))).as("ps"))
-      .as[(Long, Long, String, Long, Seq[(Long, Long, Long)])]
-      .map { case (nd, og, t, b, ps) =>
-        (nd, og, t, b, ps.size, PostingCodec.encode(ps))
-      }.toDF("node", "origin", "term", "bucket", "df", "bytes")
-    val newReplica = keptR.unionByName(addR)
+    val newReplica = PostingBlocks.drop(rep.replicaStore,
+        movers.select($"or".as("node"), $"op".as("origin"), $"doc_id"))
+      .unionByName(PostingBlocks.encode(mPost.select(
+        $"replica".as("node") +: $"primary".as("origin") +: posting: _*)))
     Replicated(a2, newPrimary, newReplica, rep.dl, rep.stats,
       oldShards + 1)
-  }
-
-  /** The ROUTED block selection with node `failed` down: primaries of
-    * every node ≠ failed ∪ replica blocks with origin = failed (all on
-    * nodes ≠ failed by the placement law). PARTITIONS the corpus, so
-    * any read composed over it — ranking, facets, pagination — is
-    * answer-invariant vs the single-copy store. Returns (node, term,
-    * bucket, df, bytes). */
-  def failoverSelection(r: Replicated, failed: Long): DataFrame = {
-    val prim = r.primaryStore.filter(col("shard") =!= failed)
-      .select(col("shard").as("node"), col("term"), col("bucket"),
-        col("df"), col("bytes"))
-    val repl = r.replicaStore.filter(col("origin") === failed)
-      .select(col("node"), col("term"), col("bucket"), col("df"),
-        col("bytes"))
-    prim.unionByName(repl)
   }
 
   /** Node `failed` is down: its primaries serve from their replicas
@@ -736,5 +539,7 @@ object ReplicatedIndex {
     * node (the spec pins all S). */
   def serveFailover(r: Replicated, failed: Long, qTerms: Seq[String],
       k: Int): DataFrame =
-    serveBlocks(failoverSelection(r, failed), r.dl, r.stats, qTerms, k)
+    serveBlocks(
+      ReplicatedRows.failoverServing(r.primaryStore, r.replicaStore, failed),
+      r.dl, r.stats, qTerms, k)
 }

@@ -2170,7 +2170,7 @@ object Retrieval {
     * single-copy store while q294's topology served tf-only BM25. The
     * match set is a pure function of WHICH DOCS the selection contains
     * (never which copy serves them), and
-    * [[graft.operators.ReplicatedIndex.failoverSelection]] PARTITIONS
+    * [[graft.operators.ReplicatedRows.failoverServing]] PARTITIONS
     * the corpus — so facets over the routed selection with node 1 down
     * are hash-equal to the single-index q300 answers, which the oracle
     * (q300's from-raw replay) gates bit for bit. A third facet is the
@@ -2193,8 +2193,8 @@ object Retrieval {
       val failed = 1L
       val docs = Tables(s, dir, "documents")
       val rep = graft.operators.ReplicatedIndex.build(docs, nShards = 4)
-      val sel = graft.operators.ReplicatedIndex
-        .failoverSelection(rep, failed)
+      val sel = graft.operators.ReplicatedRows
+        .failoverServing(rep.primaryStore, rep.replicaStore, failed)
       val matches = sel.filter($"term".isin(qTerms: _*))
         .select($"node", $"term", $"bucket", $"df", $"bytes")
         .as[(Long, String, Long, Int, Array[Byte])]
@@ -2287,8 +2287,8 @@ object Retrieval {
       val failed = 1L
       val docs = Tables(s, dir, "documents")
       val rep = graft.operators.ReplicatedIndex.build(docs, nShards = 4)
-      val probed = graft.operators.ReplicatedIndex
-        .failoverSelection(rep, failed)
+      val probed = graft.operators.ReplicatedRows
+        .failoverServing(rep.primaryStore, rep.replicaStore, failed)
         .filter($"term".isin(qTerms: _*))
       // df from the routed selection's metadata — exact because the
       // selection partitions the corpus (q294's law)

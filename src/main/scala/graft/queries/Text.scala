@@ -1879,33 +1879,16 @@ object Text {
       : org.apache.spark.sql.DataFrame = {
     val s = docs.sparkSession
     import s.implicits._
-    import graft.operators.PostingCodec.encode
-    val blocks = docs
+    val postings = docs
       .select(keys.map(col) :+ col("doc_id") :+
         posexplode(split(col("text"), " ")): _*)
       .select(keys.map(col) :+ $"doc_id" :+ ($"pos" + 1).as("pos") :+
         $"col".as("term"): _*)
       .groupBy(keys.map(col) :+ $"term" :+ $"doc_id": _*)
       .agg(count(lit(1)).as("tf"), min($"pos").as("first_pos"))
-      .groupBy(keys.map(col) :+ $"term" :+
-        floor($"doc_id" / 100).as("bucket"): _*)
-      .agg(sort_array(collect_list(
-        struct($"doc_id", $"tf", $"first_pos"))).as("ps"))
-    keys match {
-      case Seq() =>
-        blocks.as[(String, Long, Seq[(Long, Long, Long)])]
-          .map { case (t, b, ps) => (t, b, ps.size, encode(ps)) }
-          .toDF("term", "bucket", "df", "bytes")
-      case Seq(k) =>
-        blocks.as[(Long, String, Long, Seq[(Long, Long, Long)])]
-          .map { case (v, t, b, ps) => (v, t, b, ps.size, encode(ps)) }
-          .toDF(k, "term", "bucket", "df", "bytes")
-      case Seq(k1, k2) =>
-        blocks.as[(Long, Long, String, Long, Seq[(Long, Long, Long)])]
-          .map { case (v1, v2, t, b, ps) =>
-            (v1, v2, t, b, ps.size, encode(ps))
-          }.toDF(k1, k2, "term", "bucket", "df", "bytes")
-    }
+    graft.operators.PostingBlocks.encode(postings.select(keys.map(col) ++
+      Seq($"term", graft.operators.PostingBlocks.bucket, $"doc_id", $"tf",
+        $"first_pos"): _*))
   }
 
   /** The front-coded term-dictionary STORE (block, n_terms, first_term,
@@ -2072,9 +2055,10 @@ object Text {
   /** q264 — index SEGMENT MERGE (X109d): the compaction step a real
     * postings store runs — new documents build a small DELTA segment
     * ([[postingStore]] over the doc_id % 5 == 4 slice), a background
-    * merge ([[graft.operators.IndexSegmentMerge]]) folds it into the
-    * BASE (the other four fifths) by decoding both sides' blocks,
-    * unioning the interleaved doc ids and RE-ENCODING. Gap coding has
+    * merge ([[graft.operators.PostingBlocks.merge]]) folds it into the
+    * BASE (the other four fifths): every (term, bucket) both sides hold
+    * decodes, unions the interleaved doc ids and RE-ENCODES; a key held
+    * by one side passes through undecoded. Gap coding has
     * no layout freedom, so merged ≡ built-from-scratch BYTE FOR BYTE
     * — the maintained ≡ rebuilt law in its strongest form, which this
     * query gates by replaying the FULL-corpus build in DuckDB (q258's
@@ -2093,7 +2077,7 @@ object Text {
       val docs = Tables(s, dir, "documents")
       val base = postingStore(docs.filter($"doc_id" % 5 =!= 4))
       val delta = postingStore(docs.filter($"doc_id" % 5 === 4))
-      graft.operators.IndexSegmentMerge.merge(base, delta)
+      graft.operators.PostingBlocks.merge(Seq(base, delta))
         .as[(String, Long, Int, Array[Byte])]
         .map { case (term, bucket, df, bytes) =>
           val ok = graft.operators.PostingCodec.decode(bytes, df).isDefined
@@ -2471,9 +2455,9 @@ object Text {
     * so the surgery touches exactly their buckets' blocks: each
     * decodes (strict), drops the dead postings, re-encodes; an
     * emptied block vanishes; every other block passes through
-    * byte-UNTOUCHED (no decode — PostingsTakedownSpec pins this at
-    * the object level). Gap coding has no layout freedom, so the
-    * maintained store equals a from-scratch build over the SURVIVING
+    * byte-UNTOUCHED (no decode — [[graft.operators.PostingBlocks.drop]];
+    * PostingsTakedownSpec pins this at the object level). Gap coding
+    * has no layout freedom, so the maintained store equals a from-scratch build over the SURVIVING
     * corpus byte for byte — and the oracle replays exactly that
     * from-scratch build (q258's 4-tier varint expansion over
     * `WHERE doc_id % 7 <> 3`; the takedown never enters the oracle).
@@ -2490,7 +2474,7 @@ object Text {
       val docs = Tables(s, dir, "documents")
       val store = postingStore(docs)
       val dead = docs.filter($"doc_id" % 7 === 3).select($"doc_id")
-      graft.operators.PostingsTakedown(store, dead)
+      graft.operators.PostingBlocks.drop(store, dead)
         .as[(String, Long, Int, Array[Byte])]
         .map { case (term, bucket, df, bytes) =>
           val ok = graft.operators.PostingCodec.decode(bytes, df).isDefined

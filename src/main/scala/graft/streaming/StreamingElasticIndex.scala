@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.core.Barriers._
-import graft.operators.{Bm25, IndexReshard, PostingCodec}
+import graft.operators.{Bm25, IndexReshard, PostingBlocks}
 
 /** Streaming ELASTIC sharded index (SURVEY.md §2.9 T37): the q283
   * scatter-gather topology maintained under a stream, with q288's
@@ -55,28 +55,6 @@ object StreamingElasticIndex {
     EiState(Nil, empty("doc_id"), empty("doc_id", "dl"), nShards)
   }
 
-  /** q264's merge with the shard in the block key. */
-  private[graft] def mergeSharded(segs: Seq[DataFrame]): DataFrame = {
-    val s = segs.head.sparkSession
-    import s.implicits._
-    segs.reduce(_ unionByName _)
-      .select($"shard", $"term", $"bucket", $"df", $"bytes")
-      .as[(Long, String, Long, Int, Array[Byte])]
-      .groupByKey(r => (r._1, r._2, r._3))
-      .mapGroups { (key: (Long, String, Long),
-                    rows: Iterator[(Long, String, Long, Int, Array[Byte])]) =>
-        val (shard, term, bucket) = key
-        val all = rows.flatMap { case (_, _, _, df, bytes) =>
-          PostingCodec.decode(bytes, df).getOrElse(sys.error(
-            s"elastic merge: corrupt block $shard/('$term', $bucket)"))
-        }.toVector.sortBy(_._1)
-        require(all.map(_._1).distinct.size == all.size,
-          s"elastic merge: overlapping doc ids in $shard/('$term', $bucket)")
-        (shard, term, bucket, all.size, PostingCodec.encode(all))
-      }
-      .toDF("shard", "term", "bucket", "df", "bytes")
-  }
-
   /** Apply one micro-batch of `(doc_id, text)` documents — assigned
     * to shards at the CURRENT ring. */
   def applyBatch(state: EiState, delta: DataFrame): EiState = {
@@ -103,8 +81,7 @@ object StreamingElasticIndex {
     val dlUnion = state.dl.unionByName(fresh.select($"doc_id", Bm25.dl))
     if (nBatches % CompactEvery == 0)
       EiState(
-        if (segs.lengthCompare(1) > 0) List(mergeSharded(segs).barrier())
-        else segs,
+        if (segs.isEmpty) segs else List(StreamingPostings.compact(segs)),
         seenUnion.distinct().barrier(), dlUnion.barrier(),
         state.nShards, nBatches)
     else EiState(segs, seenUnion, dlUnion, state.nShards, nBatches)
@@ -121,10 +98,8 @@ object StreamingElasticIndex {
       // nothing indexed yet: the ring just grows, no surgery to run
       state.copy(nShards = state.nShards + 1)
     case segs =>
-      val compacted =
-        if (segs.lengthCompare(1) > 0) mergeSharded(segs) else segs.head
-      val (_, newStore) = IndexReshard.grow(
-        compacted, state.dl.select(col("doc_id")), state.nShards)
+      val (_, newStore) = IndexReshard.grow(PostingBlocks.merge(segs),
+        state.dl.select(col("doc_id")), state.nShards)
       EiState(List(newStore.barrier()), state.seenIds, state.dl,
         state.nShards + 1, state.batches)
   }
@@ -145,10 +120,8 @@ object StreamingElasticIndex {
         // nothing indexed yet: the ring just shrinks, no surgery
         state.copy(nShards = state.nShards - 1)
       case segs =>
-        val compacted =
-          if (segs.lengthCompare(1) > 0) mergeSharded(segs) else segs.head
-        val (_, newStore) = IndexReshard.shrink(
-          compacted, state.dl.select(col("doc_id")), state.nShards)
+        val (_, newStore) = IndexReshard.shrink(PostingBlocks.merge(segs),
+          state.dl.select(col("doc_id")), state.nShards)
         EiState(List(newStore.barrier()), state.seenIds, state.dl,
           state.nShards - 1, state.batches)
     }

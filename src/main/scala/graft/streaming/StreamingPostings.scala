@@ -3,14 +3,14 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.core.Barriers._
-import graft.operators.{Bm25, IndexSegmentMerge}
+import graft.operators.{Bm25, PostingBlocks}
 
 /** Streaming POSTINGS maintenance (SURVEY.md §2.9 T31): the inverted
   * index's streaming member — each micro-batch of NEW documents builds
   * a small compressed DELTA segment ([[graft.queries.Text.postingStore]],
   * q258's layout), probes read the segment LIST, and every
   * [[CompactEvery]] batches the segments fold into one with
-  * [[IndexSegmentMerge]] — Lucene's ingest shape (per-commit segments
+  * [[PostingBlocks.merge]] — Lucene's ingest shape (per-commit segments
   * + background merges), and the posting-store member of the
   * T21/T23/T26 append-then-compact family.
   *
@@ -83,8 +83,7 @@ object StreamingPostings {
       if (nBatches % CompactEvery == 0) dlUnion.barrier()
       else dlUnion
     val compacted =
-      if (segs.lengthCompare(1) > 0 && nBatches % CompactEvery == 0)
-        List(compact(segs))
+      if (segs.nonEmpty && nBatches % CompactEvery == 0) List(compact(segs))
       else segs
     PsState(compacted, seen, dl, nBatches, state.tombstones)
   }
@@ -146,7 +145,7 @@ object StreamingPostings {
       .distinct()
       .barrier()
     val segs = state.segments
-      .map(seg => graft.operators.PostingsTakedown(seg, ids).barrier())
+      .map(PostingBlocks.drop(_, ids).barrier())
       .filter(!_.isEmpty)
     val seen = state.seenIds.unionByName(ids).distinct().barrier()
     val dl = state.dl.join(ids, Seq("doc_id"), "left_anti").barrier()
@@ -196,7 +195,7 @@ object StreamingPostings {
       .barrier()
     val ids = up.select($"doc_id")
     val cutSegs = state.segments
-      .map(seg => graft.operators.PostingsTakedown(seg, ids).barrier())
+      .map(PostingBlocks.drop(_, ids).barrier())
       .filter(!_.isEmpty)
     val grown = graft.queries.Text.postingStore(up).barrier() :: cutSegs
     // updates mint segments OFF the batch cadence — keep the T31
@@ -212,11 +211,10 @@ object StreamingPostings {
   }
 
   /** Fold the whole segment list into one (the background merge; also
-    * the spec's forced final compaction). */
+    * the spec's forced final compaction). A lone segment is returned as
+    * is, never re-barriered. */
   def compact(segments: List[DataFrame]): DataFrame = segments match {
-    case Nil => sys.error("compact: no segments")
     case one :: Nil => one
-    case head :: rest =>
-      rest.foldLeft(head)(IndexSegmentMerge.merge).barrier()
+    case _ => PostingBlocks.merge(segments).barrier()
   }
 }

@@ -3,7 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.core.Barriers._
-import graft.operators.{Bm25, IndexReshard, PostingCodec, ReplicatedIndex}
+import graft.operators.{Bm25, IndexReshard, PostingBlocks, ReplicatedIndex,
+  ReplicatedRows}
 
 /** Streaming REPLICATED index (SURVEY.md §2.9 T39, r16): q294's
   * two-copy topology maintained under a stream — every production
@@ -54,28 +55,6 @@ object StreamingReplicatedIndex {
       empty("doc_id"), nShards)
   }
 
-  /** q264's merge with the replica store's (node, origin) compound key. */
-  private[graft] def mergeReplica(segs: Seq[DataFrame]): DataFrame = {
-    val s = segs.head.sparkSession
-    import s.implicits._
-    segs.reduce(_ unionByName _)
-      .select($"node", $"origin", $"term", $"bucket", $"df", $"bytes")
-      .as[(Long, Long, String, Long, Int, Array[Byte])]
-      .groupByKey(r => (r._1, r._2, r._3, r._4))
-      .mapGroups { (key: (Long, Long, String, Long),
-                    rows: Iterator[(Long, Long, String, Long, Int, Array[Byte])]) =>
-        val (node, origin, term, bucket) = key
-        val all = rows.flatMap { case (_, _, _, _, df, bytes) =>
-          PostingCodec.decode(bytes, df).getOrElse(sys.error(
-            s"replica merge: corrupt block $node/$origin/('$term', $bucket)"))
-        }.toVector.sortBy(_._1)
-        require(all.map(_._1).distinct.size == all.size,
-          s"replica merge: overlapping doc ids in $node/$origin/('$term', $bucket)")
-        (node, origin, term, bucket, all.size, PostingCodec.encode(all))
-      }
-      .toDF("node", "origin", "term", "bucket", "df", "bytes")
-  }
-
   /** Apply one micro-batch of `(doc_id, text)` documents — BOTH copies'
     * delta segments minted per batch. Tombstoned ids (T41 takedowns,
     * arrived OR not-yet-arrived at takedown time) never index. */
@@ -109,13 +88,9 @@ object StreamingReplicatedIndex {
     if (nBatches % CompactEvery == 0)
       state.copy(
         primSegs =
-          if (pSegs.lengthCompare(1) > 0)
-            List(StreamingElasticIndex.mergeSharded(pSegs).barrier())
-          else pSegs,
+          if (pSegs.isEmpty) pSegs else List(StreamingPostings.compact(pSegs)),
         replSegs =
-          if (rSegs.lengthCompare(1) > 0)
-            List(mergeReplica(rSegs).barrier())
-          else rSegs,
+          if (rSegs.isEmpty) rSegs else List(StreamingPostings.compact(rSegs)),
         seenIds = seenUnion.distinct().barrier(),
         dl = dlUnion.barrier(), batches = nBatches)
     else state.copy(primSegs = pSegs, replSegs = rSegs,
@@ -134,13 +109,8 @@ object StreamingReplicatedIndex {
     case Nil =>
       state.copy(nShards = state.nShards + 1)
     case pSegs =>
-      val prim =
-        if (pSegs.lengthCompare(1) > 0)
-          StreamingElasticIndex.mergeSharded(pSegs)
-        else pSegs.head
-      val repl =
-        if (state.replSegs.lengthCompare(1) > 0) mergeReplica(state.replSegs)
-        else state.replSegs.head
+      val prim = PostingBlocks.merge(pSegs)
+      val repl = PostingBlocks.merge(state.replSegs)
       val s = prim.sparkSession
       import s.implicits._
       val ids = state.dl.select($"doc_id")
@@ -181,36 +151,12 @@ object StreamingReplicatedIndex {
     val dead = deadIds
       .select(col(deadIds.columns.head).cast("long").as("doc_id"))
       .distinct().barrier()
-    val deadB = dead
-      .groupBy(expr("doc_id DIV 100").as("bucket"))
-      .agg(sort_array(collect_list($"doc_id")).as("dead"))
     state.copy(
-      primSegs = state.primSegs.map(surgery(_, "shard", None, deadB)),
-      replSegs =
-        state.replSegs.map(surgery(_, "node", Some("origin"), deadB)),
+      primSegs = state.primSegs.map(PostingBlocks.drop(_, dead).barrier()),
+      replSegs = state.replSegs.map(PostingBlocks.drop(_, dead).barrier()),
       dl = state.dl.join(dead, Seq("doc_id"), "left_anti").barrier(),
       tombstones =
         state.tombstones.unionByName(dead).distinct().barrier())
-  }
-
-  /** q304's block surgery on one live segment of either store —
-    * shared by [[takedown]] and [[applyUpdate]] (both verbs start by
-    * dropping the named ids' old postings). `deadB` is the (bucket →
-    * ids) grouping. */
-  private def surgery(seg: DataFrame, k1: String, k2: Option[String],
-      deadB: DataFrame): DataFrame = {
-    val s = seg.sparkSession
-    import s.implicits._
-    val keyed = seg.select(col(k1).as("k1"),
-      k2.map(col).getOrElse(lit(-1L)).as("k2"),
-      col("term"), col("bucket"), col("df"), col("bytes"))
-    val cut = ReplicatedIndex.dropFromBlocks(keyed, deadB)
-    k2 match {
-      case Some(c2) => cut.select($"k1".as(k1), $"k2".as(c2), $"term",
-        $"bucket", $"df", $"bytes").barrier()
-      case None => cut.select($"k1".as(k1), $"term", $"bucket", $"df",
-        $"bytes").barrier()
-    }
   }
 
   /** Apply an UPDATE batch of `(doc_id, text)` documents mid-stream
@@ -248,11 +194,8 @@ object StreamingReplicatedIndex {
       .join(state.tombstones, Seq("doc_id"), "left_anti")
       .barrier()
     val ids = up.select($"doc_id")
-    val idB = ids
-      .groupBy(expr("doc_id DIV 100").as("bucket"))
-      .agg(sort_array(collect_list($"doc_id")).as("dead"))
-    val cutP = state.primSegs.map(surgery(_, "shard", None, idB))
-    val cutR = state.replSegs.map(surgery(_, "node", Some("origin"), idB))
+    val cutP = state.primSegs.map(PostingBlocks.drop(_, ids).barrier())
+    val cutR = state.replSegs.map(PostingBlocks.drop(_, ids).barrier())
     val positioned = up.withColumn("p", IndexReshard.position($"doc_id"))
     val a = ReplicatedIndex.assignPR(positioned, state.nShards)
     val pGrown = graft.queries.Text.postingStore(
@@ -264,11 +207,11 @@ object StreamingReplicatedIndex {
     state.copy(
       primSegs =
         if (pGrown.lengthCompare(CompactEvery) > 0)
-          List(StreamingElasticIndex.mergeSharded(pGrown).barrier())
+          List(StreamingPostings.compact(pGrown))
         else pGrown,
       replSegs =
         if (rGrown.lengthCompare(CompactEvery) > 0)
-          List(mergeReplica(rGrown).barrier())
+          List(StreamingPostings.compact(rGrown))
         else rGrown,
       seenIds = state.seenIds.unionByName(ids).distinct().barrier(),
       dl = state.dl.join(ids, Seq("doc_id"), "left_anti")
@@ -292,17 +235,9 @@ object StreamingReplicatedIndex {
   def serveFailover(state: RiState, failed: Long, qTerms: Seq[String],
       k: Int): DataFrame = {
     require(state.primSegs.nonEmpty, "nothing indexed yet")
-    val prim = state.primSegs
-      .map(_.filter(col("shard") =!= failed)
-        .select(col("shard").as("node"), col("term"), col("bucket"),
-          col("df"), col("bytes")))
-      .reduce(_ unionByName _)
-    val repl = state.replSegs
-      .map(_.filter(col("origin") === failed)
-        .select(col("node"), col("term"), col("bucket"), col("df"),
-          col("bytes")))
-      .reduceOption(_ unionByName _)
-    val sel = repl.map(prim.unionByName(_)).getOrElse(prim)
+    val sel = ReplicatedRows.failoverServing(
+      state.primSegs.reduce(_ unionByName _),
+      state.replSegs.reduce(_ unionByName _), failed)
     ReplicatedIndex.serveBlocks(sel, state.dl,
       Bm25.stats(state.dl), qTerms, k)
   }

@@ -27,7 +27,7 @@ class IndexSegmentMergeSpec extends SparkSpecBase {
     "interleaved doc ids across segments") {
     val base = store(corpus.filter(_._1 % 2 == 0))
     val delta = store(corpus.filter(_._1 % 2 == 1))
-    val merged = bytesByKey(IndexSegmentMerge.merge(base, delta))
+    val merged = bytesByKey(PostingBlocks.merge(Seq(base, delta)))
     val full = bytesByKey(store(corpus))
     assert(merged === full)
   }
@@ -37,7 +37,7 @@ class IndexSegmentMergeSpec extends SparkSpecBase {
     val b = store(corpus.filter(_._1 % 3 == 1))
     val c = store(corpus.filter(_._1 % 3 == 2))
     val merged = bytesByKey(
-      IndexSegmentMerge.merge(IndexSegmentMerge.merge(a, b), c))
+      PostingBlocks.merge(Seq(PostingBlocks.merge(Seq(a, b)), c)))
     assert(merged === bytesByKey(store(corpus)))
   }
 
@@ -46,10 +46,43 @@ class IndexSegmentMergeSpec extends SparkSpecBase {
     val base = store(corpus)
     val dup = store(corpus.take(5)) // same docs again
     val e = intercept[Exception] {
-      IndexSegmentMerge.merge(base, dup).collect()
+      PostingBlocks.merge(Seq(base, dup)).collect()
     }
     val chain = Iterator.iterate(e: Throwable)(_.getCause)
       .takeWhile(_ != null).take(8).map(_.toString).mkString(" | ")
     assert(chain.contains("overlapping doc ids"), chain)
+  }
+
+  test("a corrupt block in a merging (node, origin)-keyed group THROWS, " +
+    "naming its keys, term and bucket; a frame off the block layout " +
+    "fails before any job runs") {
+    def seg(ids: Long => Boolean) = graft.queries.Text.postingStore(
+      corpus.filter(d => ids(d._1)).map { case (id, t) => (2L, 1L, id, t) }
+        .toDF("node", "origin", "doc_id", "text"), "node", "origin")
+    // set the continuation bit of the odd segment's 'hot'/0 block's last
+    // byte: the final varint runs off the end of the stream
+    val bad = seg(_ % 2 == 1)
+      .as[(Long, Long, String, Long, Int, Array[Byte])]
+      .map { case (n, o, t, b, df, bytes) =>
+        if (t == "hot" && b == 0L) bytes(bytes.length - 1) =
+          (bytes(bytes.length - 1) | 0x80).toByte
+        (n, o, t, b, df, bytes)
+      }.toDF("node", "origin", "term", "bucket", "df", "bytes")
+    val e = intercept[Exception] {
+      PostingBlocks.merge(Seq(seg(_ % 2 == 0), bad)).collect()
+    }
+    val chain = Iterator.iterate(e: Throwable)(_.getCause)
+      .takeWhile(_ != null).take(8).toSeq
+    val ise = chain.collectFirst { case x: IllegalStateException => x }
+    assert(ise.isDefined, chain.map(_.toString).mkString(" | "))
+    assert(ise.get.getMessage ===
+      "corrupt block node=2 origin=1 term='hot' bucket=0")
+    // a stray String column is not a Long key: the layout require fails
+    // while merge builds its plan, with no action called
+    val stray = seg(_ % 2 == 0).withColumn("tag", lit("x"))
+    val layout = intercept[IllegalArgumentException] {
+      PostingBlocks.merge(Seq(stray, seg(_ % 2 == 1)))
+    }
+    assert(layout.getMessage.contains("expected (Long keys"), layout.getMessage)
   }
 }

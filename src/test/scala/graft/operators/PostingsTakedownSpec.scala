@@ -25,12 +25,12 @@ class PostingsTakedownSpec extends SparkSpecBase {
   test("maintained == rebuilt over survivors, byte for byte; emptied " +
     "blocks vanish") {
     val dead = corpus.map(_._1).filter(_ % 3 == 1)
-    val got = bytesByKey(PostingsTakedown(
+    val got = bytesByKey(PostingBlocks.drop(
       store(corpus), dead.toDF("doc_id")))
     val want = bytesByKey(store(corpus.filterNot(d => d._1 % 3 == 1)))
     assert(got === want)
     // kill bucket 0 entirely: every (term, bucket=0) block vanishes
-    val all0 = bytesByKey(PostingsTakedown(
+    val all0 = bytesByKey(PostingBlocks.drop(
       store(corpus), (0L until 100L).toDF("doc_id")))
     assert(all0.keys.forall(_._2 != 0L))
     assert(all0 === bytesByKey(store(corpus.filter(_._1 >= 100L))))
@@ -41,20 +41,20 @@ class PostingsTakedownSpec extends SparkSpecBase {
     val base = store(corpus)
     val baseBytes = bytesByKey(base)
     // dead ids only in bucket 1 -> bucket 0 and 2 blocks unchanged
-    val got = bytesByKey(PostingsTakedown(base, Seq(150L).toDF("doc_id")))
+    val got = bytesByKey(PostingBlocks.drop(base, Seq(150L).toDF("doc_id")))
     for ((k, v) <- baseBytes if k._2 != 1L)
       assert(got(k) === v, s"untouched block $k changed")
     // ids that never existed: the store is unchanged entirely
-    val noop = bytesByKey(PostingsTakedown(base, Seq(9999L).toDF("doc_id")))
+    val noop = bytesByKey(PostingBlocks.drop(base, Seq(9999L).toDF("doc_id")))
     assert(noop === baseBytes)
   }
 
   test("sequential takedowns compose to the union") {
     val a = corpus.map(_._1).filter(_ % 5 == 0)
     val b = corpus.map(_._1).filter(_ % 7 == 0)
-    val seq2 = bytesByKey(PostingsTakedown(
-      PostingsTakedown(store(corpus), a.toDF("doc_id")), b.toDF("doc_id")))
-    val union = bytesByKey(PostingsTakedown(
+    val seq2 = bytesByKey(PostingBlocks.drop(
+      PostingBlocks.drop(store(corpus), a.toDF("doc_id")), b.toDF("doc_id")))
+    val union = bytesByKey(PostingBlocks.drop(
       store(corpus), (a ++ b).toDF("doc_id")))
     assert(seq2 === union)
   }
@@ -64,7 +64,7 @@ class PostingsTakedownSpec extends SparkSpecBase {
       org.apache.spark.sql.functions.expr(
         "CASE WHEN bucket = 0 THEN concat(bytes, X'00') ELSE bytes END"))
     val e = intercept[Exception] {
-      PostingsTakedown(bad, Seq(5L).toDF("doc_id")).collect()
+      PostingBlocks.drop(bad, Seq(5L).toDF("doc_id")).collect()
     }
     val chain = Iterator.iterate(e: Throwable)(_.getCause)
       .takeWhile(_ != null).take(8).map(_.toString).mkString(" | ")

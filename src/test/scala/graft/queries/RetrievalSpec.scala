@@ -115,8 +115,8 @@ class RetrievalSpec extends SparkSpecBase {
         col("df"), col("bytes")))
     assert(single.nonEmpty)
     for (x <- 0L until 4L)
-      assert(matchSet(graft.operators.ReplicatedIndex
-        .failoverSelection(rep, x)) === single,
+      assert(matchSet(graft.operators.ReplicatedRows
+        .failoverServing(rep.primaryStore, rep.replicaStore, x)) === single,
         s"failover of node $x changed the match set")
     // the ADVICE-r16 guard: no hits -> two empty pages, no crash
     val empty = Seq.empty[(Long, Long)].toDF("doc_id", "score_ppm")

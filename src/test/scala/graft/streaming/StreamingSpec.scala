@@ -2639,7 +2639,7 @@ class StreamingSpec extends SparkSpecBase {
     // routed by the grown ring — one canonical store either way)
     val fin =
       if (st.segments.lengthCompare(1) > 0)
-        StreamingElasticIndex.mergeSharded(st.segments)
+        graft.operators.PostingBlocks.merge(st.segments)
       else st.segments.head
     def storeMap(df: org.apache.spark.sql.DataFrame) =
       df.collect().map { r =>
@@ -2716,7 +2716,7 @@ class StreamingSpec extends SparkSpecBase {
     // routed by the shrunk ring — one canonical store either way)
     val fin =
       if (st.segments.lengthCompare(1) > 0)
-        StreamingElasticIndex.mergeSharded(st.segments)
+        graft.operators.PostingBlocks.merge(st.segments)
       else st.segments.head
     def storeMap(df: org.apache.spark.sql.DataFrame) =
       df.collect().map { r =>
@@ -2789,11 +2789,11 @@ class StreamingSpec extends SparkSpecBase {
     // byte law: final compacted stores == the batch replicated build
     val finP =
       if (st.primSegs.lengthCompare(1) > 0)
-        StreamingElasticIndex.mergeSharded(st.primSegs)
+        graft.operators.PostingBlocks.merge(st.primSegs)
       else st.primSegs.head
     val finR =
       if (st.replSegs.lengthCompare(1) > 0)
-        StreamingReplicatedIndex.mergeReplica(st.replSegs)
+        graft.operators.PostingBlocks.merge(st.replSegs)
       else st.replSegs.head
     val want = ReplicatedIndex.build(delivered.toDF("doc_id", "text"), 4)
     def pMap(df: org.apache.spark.sql.DataFrame) =
@@ -2876,11 +2876,11 @@ class StreamingSpec extends SparkSpecBase {
     // arrivals placed by the grown ring — one canonical pair of stores)
     val finP =
       if (st.primSegs.lengthCompare(1) > 0)
-        StreamingElasticIndex.mergeSharded(st.primSegs)
+        graft.operators.PostingBlocks.merge(st.primSegs)
       else st.primSegs.head
     val finR =
       if (st.replSegs.lengthCompare(1) > 0)
-        StreamingReplicatedIndex.mergeReplica(st.replSegs)
+        graft.operators.PostingBlocks.merge(st.replSegs)
       else st.replSegs.head
     val want = ReplicatedIndex.build(delivered.toDF("doc_id", "text"), 4)
     def pMap(df: org.apache.spark.sql.DataFrame) =
@@ -3051,11 +3051,11 @@ class StreamingSpec extends SparkSpecBase {
     val survivors = delivered.filterNot(d => deadIds.contains(d._1))
     val finP =
       if (st.primSegs.lengthCompare(1) > 0)
-        StreamingElasticIndex.mergeSharded(st.primSegs)
+        graft.operators.PostingBlocks.merge(st.primSegs)
       else st.primSegs.head
     val finR =
       if (st.replSegs.lengthCompare(1) > 0)
-        StreamingReplicatedIndex.mergeReplica(st.replSegs)
+        graft.operators.PostingBlocks.merge(st.replSegs)
       else st.replSegs.head
     val want = ReplicatedIndex.build(survivors.toDF("doc_id", "text"), 4)
     def pMap(df: org.apache.spark.sql.DataFrame) =
@@ -3172,11 +3172,11 @@ class StreamingSpec extends SparkSpecBase {
     // over the latest live versions, BOTH copies
     val finP =
       if (st.primSegs.lengthCompare(1) > 0)
-        StreamingElasticIndex.mergeSharded(st.primSegs)
+        graft.operators.PostingBlocks.merge(st.primSegs)
       else st.primSegs.head
     val finR =
       if (st.replSegs.lengthCompare(1) > 0)
-        StreamingReplicatedIndex.mergeReplica(st.replSegs)
+        graft.operators.PostingBlocks.merge(st.replSegs)
       else st.replSegs.head
     val want = ReplicatedIndex.build(
       latest(delivered).toDF("doc_id", "text"), 4)
